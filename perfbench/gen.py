@@ -180,6 +180,7 @@ WRITES = ["put", "update", "delete", "joinGroup", "leaveGroup"]
 # one round: two writes, each followed by a read of what it wrote, plus
 # six more reads -- 80% reads, 20% writes, the same mix in every round
 ROUND_READS = ["fetch", "fetch", "fetchCas", "isMember", "getLeader", "membershipList"]
+ROUND_OPS = len(ROUND_READS) + 4
 CHECK_READ = {"put": "fetch", "update": "fetchCas", "delete": "fetchCas",
               "joinGroup": "isMember", "leaveGroup": "fetchCas"}
 ZIPF = 1.1

@@ -21,6 +21,7 @@ driver-side replay (model.py), queries against their DuckDB oracle.
 import argparse
 import glob
 import json
+import math
 import os
 import pickle
 import random
@@ -45,24 +46,31 @@ import stats  # noqa: E402
 ROOT = os.getcwd()
 BUILD = os.path.join(ROOT, ".bench_build")
 DATA_SEED = 7          # the star dataset is fixed; the run seed orders the ops
-STAR_SF = 0.001
+# sf0.05: the largest scale whose runs, two first-run preparations (the
+# DuckDB oracle of dedup_winnow_clusters grows with the square of the
+# document count: 56 s here, 176 s at sf0.1) and 48 runs fit the budget
+STAR_SF = 0.05
 COORD_ROWS, COORD_KEYS = 100_000, 1_500
 # untimed rounds after the warm-up block: the JIT is still compiling the
 # API's plans through the first rounds, which spread cpu_s_per_op by ~0.24
 COORD_WARM_ROUNDS = 2
-# set-up repeats per run (setup_s is their median); coord_api's are
-# session restarts of ~0.1 s, so it affords more of them
-SETUPS = {"coord_api": 7, "batch_mix": 3}
 # The timed window ends once --seconds, MIN_OPS and a whole pass (a round of
 # API calls, or the query list) are reached, so every run measures the same
 # mix. MIN_OPS is what fits the benchmark's budget of 48 runs in 3420 s; batch_mix's
 # 15 samples support no percentile above the median with stats.MIN_BEYOND
 # beyond it, so latency is the median alone.
 MIN_OPS = {"coord_api": 60, "batch_mix": 15}
-SPAN_TOLERANCE = 0.05  # max share of an op's wall time its layer spans may miss
+# lower bounds on the wall time of one pass, used only to size the op list
+# so that a longer --seconds still has ops left to run
+PASS_FLOOR_S = {"coord_api": 1.0, "batch_mix": 5.0}
+# coverage check: the most of an op's wall time its layer spans may leave
+# uncovered (the harness's own bookkeeping between the calls it times)
+SPAN_TOLERANCE = 0.05
 
 with open(os.path.join(HERE, "workloads.json")) as fh:
     QUERY_LISTS = json.load(fh)
+# stream twin -> batch twin, for stream twins without an oracle
+TWINS = QUERY_LISTS.pop("twins")
 
 JVM_OPTS = ["--add-opens=java.base/%s=ALL-UNNAMED" % p for p in (
     "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net",
@@ -107,6 +115,9 @@ WRITE_OPS = {"put", "update", "delete", "joinGroup", "leaveGroup"}
 
 def star_dir():
     d = os.path.join(BUILD, f"star-sf{STAR_SF}-seed{DATA_SEED}")
+    for old in glob.glob(os.path.join(BUILD, "star-*")):  # other scales'
+        if old != d:
+            shutil.rmtree(old, ignore_errors=True)
     if not os.path.exists(os.path.join(d, "_DONE")):
         shutil.rmtree(d, ignore_errors=True)
         gen.star(d, DATA_SEED, STAR_SF)
@@ -139,7 +150,8 @@ def prepare(classes):
     Returns the data dir, the store dir and the answers by query name.
     """
     data = star_dir()
-    store = os.path.join(BUILD, "store-" + os.path.basename(classes))
+    # artifacts depend on both the code and the data they were staged from
+    store = os.path.join(BUILD, f"store-{os.path.basename(data)}-{os.path.basename(classes)}")
     for old in glob.glob(os.path.join(BUILD, "store-*")):  # earlier builds'
         if os.path.isdir(old) and old != store:
             shutil.rmtree(old, ignore_errors=True)
@@ -184,23 +196,29 @@ def duckdb_views(data):
 
 # ---- plans -------------------------------------------------------------------
 
-def query_plan(workload, seed, n_passes=50):
+def passes(workload, seconds, pass_ops):
+    """Timed passes the window can consume, plus one of headroom."""
+    return math.ceil(max(seconds / PASS_FLOOR_S[workload], MIN_OPS[workload] / pass_ops)) + 1
+
+
+def query_plan(workload, seed, seconds=1):
     """Seeded shuffled passes over the workload's list; the first is the
     untimed warm-up, so every timed query has run once in this JVM."""
     names = QUERY_LISTS[workload]
     rng = random.Random(seed)
     rows = []
-    for p in range(n_passes + 1):
+    for p in range(passes(workload, seconds, len(names)) + 1):
         order = names[:]
         rng.shuffle(order)
         rows += [("warm" if p == 0 else "timed", str(p), n) for n in order]
     return rows
 
 
-def coord_inputs(seed, run_dir, n_rounds=400):
+def coord_inputs(seed, run_dir, seconds=1):
     cols = gen.changelog(seed, COORD_ROWS, COORD_KEYS)
     gen.write_changelog(run_dir, cols)
     end_us = int(cols["ts"].cast("int64").to_numpy()[-1])
+    n_rounds = COORD_WARM_ROUNDS + passes("coord_api", seconds, gen.ROUND_OPS)
     return cols, gen.coord_ops(seed, n_rounds, COORD_KEYS, end_us)
 
 
@@ -233,9 +251,48 @@ def check_coord(cols, ran_ops, answers):
 
 
 def check_queries(checks, answers):
-    """Names whose written output disagrees with their oracle's answer."""
-    return {n for n, path in checks.items()
-            if n in answers and not oracle_compare.same(oracle_compare.output(path), answers[n])}
+    """Names whose written output disagrees with their oracle's answer or,
+    for a stream twin without one, with its batch twin's output."""
+    bad = set()
+    for n, path in checks.items():
+        if n in answers:
+            want = answers[n]
+        elif n in TWINS:
+            want = oracle_compare.output(checks.get(TWINS[n], ""))
+        else:
+            continue
+        if want is None or not oracle_compare.same(oracle_compare.output(path), want):
+            bad.add(n)
+    return bad
+
+
+def span_tree(spans, triggers):
+    """Each op's spans as dicts with their parent and self time.
+
+    Per op: "op" is the root; the layer spans the harness timed (construct,
+    plan, execute, or one api.* call) are its children; each streaming
+    trigger is a child of the construct span that drained it. Self time is
+    a span's time minus its children's.
+    """
+    tree = {}
+    for op, name, t0, t1 in spans:
+        tree.setdefault(op, []).append(
+            {"op": op, "span": name, "parent": None if name == "op" else "op",
+             "start_ns": t0, "end_ns": t1})
+    for op, ts in triggers.items():
+        for t in ts:
+            start = t["start_ns"]
+            tree.setdefault(int(op), []).append(
+                {"op": int(op), "span": "trigger", "parent": "construct", "start_ns": start,
+                 "end_ns": start + t["durations_ms"].get("triggerExecution", 0) * 10**6})
+    for ss in tree.values():
+        child = {}
+        for x in ss:
+            if x["parent"]:
+                child[x["parent"]] = child.get(x["parent"], 0) + x["end_ns"] - x["start_ns"]
+        for x in ss:
+            x["self_ns"] = x["end_ns"] - x["start_ns"] - child.get(x["span"], 0)
+    return tree
 
 
 # ---- summary -----------------------------------------------------------------
@@ -243,7 +300,7 @@ def check_queries(checks, answers):
 def end_to_end(res, timed):
     walls = [o["wall_s"] for o in timed]
     return {
-        "setup_s": statistics.median([s["total_s"] for s in res["setups"]]),
+        "setup_s": res["setup"]["cold_s"],
         "latency_p50_s": stats.percentile(walls, 50),
         "throughput_ops_s": len(walls) / sum(walls),
         "cpu_s_per_op": sum(o["cpu_s"] for o in timed) / len(timed),
@@ -255,12 +312,15 @@ def per_layer(res, timed, workload, data):
     tr = res["trace"]
     n = len(timed)
     idx = {o["i"] for o in timed}
-    setups = res["setups"]
-    spans = {}
-    for op, name, t0, t1 in tr["spans"]:
-        if op in idx:
-            spans.setdefault(op, {}).setdefault(name, 0.0)
-            spans[op][name] += (t1 - t0) / 1e9
+    setup = res["setup"]
+    tree = {op: ss for op, ss in span_tree(tr["spans"], tr["triggers"]).items() if op in idx}
+    spans, self_s = {}, {}  # op -> span name -> total (or self) seconds
+    for op, ss in tree.items():
+        for x in ss:
+            spans.setdefault(op, {}).setdefault(x["span"], 0.0)
+            spans[op][x["span"]] += (x["end_ns"] - x["start_ns"]) / 1e9
+            self_s.setdefault(op, {}).setdefault(x["span"], 0.0)
+            self_s[op][x["span"]] += x["self_ns"] / 1e9
 
     def span_mean(name):
         return sum(s.get(name, 0.0) for s in spans.values()) / n
@@ -277,17 +337,16 @@ def per_layer(res, timed, workload, data):
         return sum(t["durations_ms"].get(key, 0) for ts in trig.values() for t in ts) / 1e3 / n_drains
 
     all_trig = [t for ts in trig.values() for t in ts]
-    outside = [spans[i].get("construct", 0.0) -
-               sum(t["durations_ms"].get("triggerExecution", 0) for t in trig[i]) / 1e3
-               for i in stream_ops]
-    # reconciliation: the op's layer spans (construct+plan+execute, or the
-    # API call) against its wall time
-    gaps = [1 - sum(v for k, v in s.items() if k != "op") / s["op"] for s in spans.values()]
+    # coverage: the share of each op's wall time that none of its layer
+    # spans covers (the op span's self time); the layer spans wrap whole
+    # calls, so this checks that no timed call was missed, not how the
+    # time divides between layers
+    gaps = [s["op"] / spans[op]["op"] for op, s in self_s.items()]
     m = {
-        "session.start_s": statistics.median([s["session_s"] for s in setups]),
-        "framecache.load_s": statistics.median([s["framecache_s"] for s in setups]),
+        "session.start_s": setup["session_s"],
+        "framecache.load_s": setup["framecache_s"],
         "framecache.build_s": tr.get("framecache_build_s", 0.0),
-        "framecache.artifacts_loaded": setups[-1]["loaded"],
+        "framecache.artifacts_loaded": setup["loaded"],
         "framecache.artifacts_built": tr.get("framecache_built", 0),
         "tables.resolve_ms": statistics.fmean(tr["tables_resolve_ms"].values()),
         "execution.jobs_per_op": sum(v[0] for v in ex.values()) / n,
@@ -309,7 +368,9 @@ def per_layer(res, timed, workload, data):
         "streaming.query_planning_s_per_op": trig_s("queryPlanning"),
         "streaming.wal_commit_s_per_op": trig_s("walCommit"),
         "streaming.commit_offsets_s_per_op": trig_s("commitOffsets"),
-        "streaming.outside_trigger_s_per_op": sum(outside) / n_drains,
+        # the drain's construct time outside its triggers: its self time
+        "streaming.outside_trigger_s_per_op":
+            sum(self_s[i].get("construct", 0.0) for i in stream_ops) / n_drains,
         "streaming.state_rows_max": max([t["state_rows"] for t in all_trig], default=0),
         "streaming.state_mem_mb_max": max([t["state_mem_bytes"] for t in all_trig],
                                           default=0) / 2**20,
@@ -366,7 +427,8 @@ def main(argv=None):
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
 
     classes = build.build()
-    star, store, answers = prepare(classes)
+    if wl != "coord_api":
+        star, store, answers = prepare(classes)
     t_ready = time.time()
     run_dir = os.path.join(BUILD, "run", wl)
     shutil.rmtree(run_dir, ignore_errors=True)
@@ -374,13 +436,13 @@ def main(argv=None):
     env = {}
     if wl == "coord_api":
         data = run_dir
-        cols, plan_ops = coord_inputs(args.seed, run_dir)
+        cols, plan_ops = coord_inputs(args.seed, run_dir, args.seconds)
         write_plan(os.path.join(run_dir, "plan.tsv"), [coord_row(o) for o in plan_ops])
         sf = None
     else:
         data = star
         env["SPARK_GRAFT_INDEX_DIR"] = store
-        write_plan(os.path.join(run_dir, "plan.tsv"), query_plan(wl, args.seed))
+        write_plan(os.path.join(run_dir, "plan.tsv"), query_plan(wl, args.seed, args.seconds))
         sf = STAR_SF
 
     load = {"max": 0.0}
@@ -398,7 +460,8 @@ def main(argv=None):
     jargs = [f"workload={wl}", f"data={data}", f"plan={run_dir}/plan.tsv",
              f"seconds={args.seconds}", f"trace={args.trace}", f"seed={args.seed}",
              f"min_ops={MIN_OPS[wl]}", f"cpus={min(os.cpu_count() or 4, 4)}",
-             f"setups={SETUPS[wl]}", f"out={out}",
+             f"out={out}",
+             "twins=" + ",".join(f"{k}:{v}" for k, v in TWINS.items()),
              f"results={run_dir}/results", f"scratch={run_dir}"]
     try:
         rc = java(classes, jargs, os.path.join(run_dir, "tmp"), env=env,
@@ -413,8 +476,8 @@ def main(argv=None):
         res = json.load(fh)
 
     # FrameCache stage mode, as graft.Bench labels it
-    built = sum(s["built"] for s in res["setups"]) + res["op_artifacts"]["built"]
-    loaded = res["setups"][-1]["loaded"] + res["op_artifacts"]["loaded"]
+    built = res["setup"]["built"] + res["op_artifacts"]["built"]
+    loaded = res["setup"]["loaded"] + res["op_artifacts"]["loaded"]
     stage_mode = "cold-build" if built else "warm-load" if loaded else "none"
     ran = res["ops"]
     timed = [o for o in ran if o["phase"] == "timed"]
@@ -425,7 +488,7 @@ def main(argv=None):
     else:
         bad = check_queries(res["checks"], answers)
         rows = {}
-        for o in timed:  # every repeat of a query must return the checked row count
+        for o in ran:  # every run of a query, warm-up too, returns the same row count
             if o["answer"] is not None and rows.setdefault(o["name"], o["answer"]) != o["answer"]:
                 failed.add(o["i"])
         failed |= {o["i"] for o in ran if o["name"] in bad}
@@ -435,9 +498,9 @@ def main(argv=None):
                    "peak_rss_mb": res["rss_peak_mb"]})
     if args.trace:
         with open(os.path.join(BUILD, f"spans-{wl}.jsonl"), "w") as fh:
-            for op, name, t0, t1 in res["trace"]["spans"]:
-                fh.write(json.dumps({"op": op, "span": name, "start_ns": t0,
-                                     "end_ns": t1}) + "\n")
+            tree = span_tree(res["trace"]["spans"], res["trace"]["triggers"])
+            for op in sorted(tree):
+                fh.writelines(json.dumps(x) + "\n" for x in tree[op])
     shutil.rmtree(run_dir, ignore_errors=True)
     print(json.dumps(record))
     print(json.dumps(line))

@@ -24,7 +24,8 @@ import org.apache.spark.sql.types.StructType
   *    op, namespace, key, value, ts_us; query rows with the query name.
   *  - `seconds`, `min_ops`: the timed window ends once both are reached
   *    and the current pass is complete
-  *  - `setups`: how many times to set up (the median is reported)
+  *  - `twins`: `stream:batch` pairs, comma-separated; each stream twin's
+  *    output is checked against its batch twin's, run after the window
   *  - `trace`: 1 adds listeners, spans and the layer probes
   *  - `seed`, `cpus`, `out`, `results` (check outputs), `scratch`
   *
@@ -63,7 +64,7 @@ object Harness {
     if (artifacts) warmArtifacts(s, data)
     val t2 = System.nanoTime()
     val (b1, l1) = FrameCache.diskStats
-    s -> Map("total_s" -> (t2 - t0) / 1e9, "session_s" -> (t1 - t0) / 1e9,
+    s -> Map("session_s" -> (t1 - t0) / 1e9,
       "framecache_s" -> (t2 - t1) / 1e9, "built" -> (b1 - b0), "loaded" -> (l1 - l0))
   }
 
@@ -88,17 +89,10 @@ object Harness {
       return
     }
 
-    // ---- set-up, several times; the last session serves the ops ---------
-    val setups = mutable.ArrayBuffer.empty[Map[String, Any]]
-    val nSetups = a.getOrElse("setups", "3").toInt
-    var spark: SparkSession = null
-    for (i <- 0 until nSetups) {
-      val (s, m) = setupOnce(cpus, data, artifacts = queryWorkload)
-      setups += m
-      spark = s
-      if (i < nSetups - 1) s.stop()
-    }
-    out("setups") = setups
+    // ---- set-up, timed from JVM start until the first op can be served ---
+    val (spark, setup) = setupOnce(cpus, data, artifacts = queryWorkload)
+    out("setup") = setup + ("cold_s" ->
+      (System.currentTimeMillis() - ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3)
     val disk0 = FrameCache.diskStats
 
     val probe = if (trace) Some(new Probe(spark)) else None
@@ -112,6 +106,8 @@ object Harness {
     val api = if (queryWorkload) null else new CoordinationApi(spark, data)
     val queries = if (queryWorkload) SparkEntry.queries else Map.empty[String, (SparkSession, String) => DataFrame]
     val oracles = SparkEntry.oracleSql
+    val twins = a.getOrElse("twins", "").split(",").filter(_.nonEmpty)
+      .map { p => val Array(st, b) = p.split(":"); st -> b }.toMap
 
     /** After the timed window: the same artifacts built into an empty store. */
     def buildIntoEmptyStore(): Map[String, Any] = if (!queryWorkload) Map.empty else {
@@ -191,8 +187,10 @@ object Harness {
       ops += Map("i" -> i, "phase" -> row.head, "name" -> name, "wall_s" -> (t1 - t0) / 1e9,
         "cpu_s" -> cpu, "gc_s" -> gc, "answer" -> answer, "error" -> err)
       // output check, outside the timed window: the first timed result of
-      // each oracled query is written for run.py to compare with its oracle
-      if (timed && rows != null && oracles.contains(name) && checked.add(name)) {
+      // each oracled query or stream twin is written for run.py to compare
+      // with its oracle or its batch twin
+      if (timed && rows != null && (oracles.contains(name) || twins.contains(name)) &&
+          checked.add(name)) {
         val path = s"${a("results")}/$name"
         spark.createDataFrame(rows.toSeq.asJava, schema)
           .coalesce(1).write.mode("overwrite").parquet(path)
@@ -206,7 +204,11 @@ object Harness {
       }
       i += 1
     }
-    // live heap after a full collection: what the run keeps in memory
+    // live heap after full collections: what the run keeps in memory. The
+    // second one follows Spark's ContextCleaner, which frees the blocks of
+    // collected broadcasts and shuffles asynchronously after the first
+    System.gc()
+    Thread.sleep(500)
     System.gc()
     out("heap_retained_mb") =
       ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
@@ -216,10 +218,15 @@ object Harness {
     // artifacts the ops built or loaded themselves, past the set-up
     out("op_artifacts") = Map("built" -> (FrameCache.diskStats._1 - disk0._1),
       "loaded" -> (FrameCache.diskStats._2 - disk0._2))
-    probe.foreach { p =>
-      out("trace") = p.finish(spans.toSeq, data, a("seed").toLong,
-        if (queryWorkload) Tables.names else Seq("events")) ++ buildIntoEmptyStore()
+    val traced = probe.map(_.finish(spans.toSeq, data, a("seed").toLong,
+      if (queryWorkload) Tables.names else Seq("events")))
+    // the batch twins of the stream twins that ran, after the window
+    for ((st, b) <- twins if checks.contains(st)) {
+      val path = s"${a("results")}/$b"
+      queries(b)(spark, data).coalesce(1).write.mode("overwrite").parquet(path)
+      checks(b) = path
     }
+    traced.foreach(t => out("trace") = t ++ buildIntoEmptyStore())
     Files.writeString(Paths.get(a("out")), Json(out))
     spark.stop()
   }

@@ -17,7 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - a SparkListener that sums each op's jobs, tasks, executor CPU,
   *    shuffle, input and spill (jobs carry the op index as a local
   *    property, which stream execution threads inherit);
-  *  - a StreamingQueryListener that keeps every trigger's progress;
+  *  - a StreamingQueryListener that keeps every trigger's progress,
+  *    filed under the op that started the stream;
   *  - each op's QueryPlanningTracker phases;
   *  - timed calls into Tables, and a single-thread HashImpl microbench.
   */
@@ -28,11 +29,13 @@ final class Probe(spark: SparkSession) {
   // op -> jobs, tasks, executor cpu ns, shuffle write bytes, input bytes
   private val exec = mutable.HashMap.empty[Int, Array[Long]]
   private var spill = 0L
-  private val triggers = mutable.ArrayBuffer.empty[(Long, Map[String, Long], Long, Long)]
+  // stream run id -> op; op -> (trigger start ns, durations, state rows, state bytes)
+  private val runOp = mutable.HashMap.empty[java.util.UUID, Int]
+  private val triggers = mutable.HashMap.empty[Int, mutable.ArrayBuffer[(Long, Map[String, Long], Long, Long)]]
   private val phases = mutable.HashMap.empty[Int, Map[String, Double]]
-  private val windows = mutable.HashMap.empty[Int, (Long, Long)]
-  private var current = -1
-  private var startMs = 0L
+  @volatile private var current = -1
+  // progress events carry wall-clock times; spans use System.nanoTime
+  private val nanoOffset = System.nanoTime() - System.currentTimeMillis() * 1000000L
 
   spark.sparkContext.addSparkListener(new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit = lock.synchronized {
@@ -57,27 +60,32 @@ final class Probe(spark: SparkSession) {
   })
 
   spark.streams.addListener(new StreamingQueryListener {
-    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+    // delivered while the op's thread waits in start(), so `current` is its op
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+      lock.synchronized { runOp(e.runId) = current }
     override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
       val p = e.progress
-      val at = java.time.Instant.parse(p.timestamp).toEpochMilli
+      val startNs = java.time.Instant.parse(p.timestamp).toEpochMilli * 1000000L + nanoOffset
       val d = p.durationMs.asScala.map { case (k, v) => k -> v.toLong }.toMap
       val rows = p.stateOperators.map(_.numRowsTotal).sum
       val mem = p.stateOperators.map(_.memoryUsedBytes).sum
-      lock.synchronized { triggers += ((at, d, rows, mem)) }
+      lock.synchronized {
+        runOp.get(p.runId).foreach { op =>
+          triggers.getOrElseUpdate(op, mutable.ArrayBuffer.empty) += ((startNs, d, rows, mem))
+        }
+      }
     }
   })
 
   def beginOp(i: Int): Unit = {
     spark.sparkContext.setLocalProperty(OpKey, i.toString)
     current = i
-    startMs = System.currentTimeMillis()
   }
 
   def endOp(): Unit = {
     spark.sparkContext.setLocalProperty(OpKey, null)
-    windows(current) = (startMs, System.currentTimeMillis())
+    current = -1
   }
 
   def planning(i: Int, t: QueryPlanningTracker): Unit =
@@ -137,9 +145,9 @@ final class Probe(spark: SparkSession) {
     val resolve = tablesResolveMs(data, tables)
     val k = kernels(seed)
     lock.synchronized {
-      val trig = windows.toSeq.map { case (op, (s, e)) =>
-        op.toString -> triggers.filter(t => t._1 >= s && t._1 <= e).map { t =>
-          Map("at_ms" -> t._1, "durations_ms" -> t._2, "state_rows" -> t._3,
+      val trig = triggers.map { case (op, ts) =>
+        op.toString -> ts.map { t =>
+          Map("start_ns" -> t._1, "durations_ms" -> t._2, "state_rows" -> t._3,
             "state_mem_bytes" -> t._4)
         }
       }.toMap
@@ -149,7 +157,6 @@ final class Probe(spark: SparkSession) {
         "spill_bytes" -> spill,
         "triggers" -> trig,
         "planning_ms" -> phases.map { case (o, p) => o.toString -> p }.toMap,
-        "op_window_ms" -> windows.map { case (o, w) => o.toString -> Seq(w._1, w._2) }.toMap,
         "tables_resolve_ms" -> resolve,
         "kernels" -> k)
     }

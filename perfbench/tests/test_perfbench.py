@@ -103,16 +103,16 @@ class Records(unittest.TestCase):
                for i in range(20)]
         spans = [[i, n, 0, d] for i in range(20)
                  for n, d in (("op", 10**8), ("construct", 5 * 10**7), ("execute", 4 * 10**7))]
-        setup = {"total_s": 2.0, "session_s": 1.0, "framecache_s": 1.0,
+        setup = {"session_s": 1.0, "framecache_s": 1.0,
                  "built": 0, "loaded": 3}
         return {
-            "setups": [setup, setup, setup],
+            "setup": dict(setup, cold_s=4.0),
             "ops": ops, "rss_peak_mb": 900.0, "heap_retained_mb": 300.0, "checks": {},
             "op_artifacts": {"built": 0, "loaded": 0},
             "plan_ops": [{"op": o["name"], "ns": "kv", "key": 1} for o in ops],
             "trace": {"spans": spans, "exec": {"3": [2, 8, 10**9, 100, 200]},
                       "spill_bytes": 0,
-                      "triggers": {"1": [{"at_ms": 0, "state_rows": 5, "state_mem_bytes": 2**20,
+                      "triggers": {"1": [{"start_ns": 0, "state_rows": 5, "state_mem_bytes": 2**20,
                                           "durations_ms": {"triggerExecution": 20,
                                                            "addBatch": 10}}]},
                       "planning_ms": {"0": {"analysis": 1.0, "optimization": 2.0,
@@ -135,6 +135,35 @@ class Records(unittest.TestCase):
                     for k, v in line["metrics"].items():
                         self.assertEqual(v["unit"], units[k])
                         self.assertTrue(math.isfinite(v["value"]), (wl, k))
+
+    def test_triggers_are_children_of_their_drain(self):
+        res = self.fake_result("batch_mix")
+        tree = run.span_tree(res["trace"]["spans"], res["trace"]["triggers"])
+        by_name = {x["span"]: x for x in tree[1]}
+        self.assertEqual(by_name["trigger"]["parent"], "construct")
+        self.assertEqual(by_name["construct"]["self_ns"], 3 * 10**7)  # 50 ms less a 20 ms trigger
+        self.assertEqual(by_name["op"]["self_ns"], 10**7)             # 100 ms less 90 ms of layers
+
+    def test_stream_twin_checked_against_batch_twin(self):
+        import pandas as pd
+        with tempfile.TemporaryDirectory() as d:
+            checks = {}
+            for name, n in (("stream_heavy_hitters", 5), ("events_heavy_hitters", 5)):
+                os.makedirs(os.path.join(d, name))
+                pd.DataFrame({"event_type": ["view"], "est_count": [n]}).to_parquet(
+                    os.path.join(d, name, "part-0.parquet"))
+                checks[name] = os.path.join(d, name)
+            self.assertEqual(run.check_queries(checks, {}), set())
+            pd.DataFrame({"event_type": ["view"], "est_count": [6]}).to_parquet(
+                os.path.join(d, "events_heavy_hitters", "part-0.parquet"))
+            self.assertEqual(run.check_queries(checks, {}), {"stream_heavy_hitters"})
+            del checks["events_heavy_hitters"]  # a twin that did not run fails too
+            self.assertEqual(run.check_queries(checks, {}), {"stream_heavy_hitters"})
+
+    def test_plan_sized_to_window(self):
+        n = len(run.QUERY_LISTS["batch_mix"])
+        self.assertEqual(len(run.query_plan("batch_mix", 1, seconds=1)), 3 * n)
+        self.assertGreater(len(run.query_plan("batch_mix", 1, seconds=60)), 3 * n)
 
     def test_wrong_answer_is_a_failed_op(self):
         res = self.fake_result("coord_api")
