@@ -169,14 +169,6 @@ private[graft] object FrameCache {
   private final case class GenManifest(partCol: String, depth: Int,
       basePath: String, touched: Seq[String])
 
-  /** Maximum delta-chain depth before [[graft.streaming.Streaming]]'s
-    * maintenance loop compacts (publishes full): every serve-time read
-    * unions one scan per chain link, so an unbounded chain would trade
-    * publish IO for read fan-out without limit.
-    */
-  private[graft] val MaxDeltaChainConf = "spark.graft.index.maxDeltaChain"
-  private[graft] val DefaultMaxDeltaChain = 8
-
   /** How long a reader/loser waits for a concurrent publisher's
     * _SUCCESS before declaring the publish torn or abandoned. One
     * window serves both waits that need it: the rename-loser's wait
@@ -190,11 +182,11 @@ private[graft] object FrameCache {
   private[graft] val PublishGraceConf = "spark.graft.index.publishGraceMs"
   private val DefaultPublishGraceMs = 120000L
 
-  /** Write-parallelism dial for hive-partitioned artifacts: each
-    * partition value's rows spread over up to this many writer tasks
-    * (and files) — the hot-list write-skew guard in [[writeArtifact]].
+  /** Write parallelism of hive-partitioned artifacts: each partition
+    * value's rows spread over up to this many writer tasks (and files)
+    * — the hot-list write-skew guard in [[writeArtifact]].
     */
-  private[graft] val FilesPerPartitionConf = "spark.graft.index.filesPerPartition"
+  private val FilesPerPartition = 4
 
   private def publishGraceMs(s: SparkSession): Long =
     s.conf.get(PublishGraceConf, DefaultPublishGraceMs.toString).toLong
@@ -316,16 +308,14 @@ private[graft] object FrameCache {
       // cannot split one key's hash bucket, so a hot list's entire
       // partition serialized through one writer (the r17 judge's
       // write-skew finding). A bounded salt (hash of the full row,
-      // mod filesPerPartition) spreads each value over up to
-      // filesPerPartition tasks; partitionBy still lands every row in
+      // mod FilesPerPartition) spreads each value over up to
+      // FilesPerPartition tasks; partitionBy still lands every row in
       // the right directory, now as several files written in parallel.
       // Within-task sort keeps row-group min/max clustering on the
       // sort columns.
       val F = org.apache.spark.sql.functions
-      val filesPer = df.sparkSession.conf
-        .get(FilesPerPartitionConf, "4").trim.toInt.max(1)
-      val salt = F.pmod(
-        F.xxhash64(df.columns.map(F.col).toIndexedSeq: _*), F.lit(filesPer))
+      val salt = F.pmod(F.xxhash64(df.columns.map(F.col).toIndexedSeq: _*),
+        F.lit(FilesPerPartition))
       // explicit partition count: an AQE-coalescible repartition would
       // merge the salted buckets right back into one task on a quiet
       // build, re-serializing the hot list the salt exists to split
@@ -995,16 +985,33 @@ private[graft] object FrameCache {
         ecs.submit(new java.util.concurrent.Callable[Unit] {
           def call(): Unit = t()
         }))
+      // on failure, interrupt the remaining thunks and wait (bounded) for
+      // them to stop, so no warm-up job is still running once the caller
+      // unwinds
+      def abort(): Unit = {
+        futures.foreach(_.cancel(true))
+        pool.shutdownNow()
+        pool.awaitTermination(WarmAbortWaitS, java.util.concurrent.TimeUnit.SECONDS)
+      }
       var done = 0
       try {
         while (done < futures.size) { ecs.take().get(); done += 1 }
       } catch {
         case e: java.util.concurrent.ExecutionException =>
-          futures.foreach(_.cancel(true))
+          abort()
           throw Option(e.getCause).getOrElse(e)
+        case e: InterruptedException =>
+          abort()
+          Thread.currentThread().interrupt()
+          throw e
       }
     } finally pool.shutdown()
   }
+
+  /** How long a failed [[warmConcurrently]] waits for its interrupted
+    * thunks to stop before returning anyway.
+    */
+  private val WarmAbortWaitS = 30L
 
   /** Drop (and unpersist) every entry owned by `s`, and detach its
     * context listener (a later getOrPersist re-registers one — never

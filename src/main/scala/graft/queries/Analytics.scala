@@ -1561,11 +1561,11 @@ object Analytics {
     // two-pass rank machinery — range exchange, checkpoint, census,
     // owned-slice pick — three times (the 1134-line r18 plan). The
     // metrics stack into (m, v, t) rows under ONE range partition;
-    // DECIMAL(38,2) holds longs (rec_us, freq) and the DECIMAL(18,2)
-    // monetary total exactly, so the widened sort order and the
-    // boundary values are bit-identical, and each boundary list is
-    // cast back to its metric's native type before the (unchanged)
-    // bucket comparisons.
+    // DECIMAL(38,2) holds longs (rec_us, freq) and the monetary total
+    // (a sum of DECIMAL(18,2), itself DECIMAL(28,2)) exactly, so the
+    // widened sort order and the boundary values are bit-identical, and
+    // each boundary list is cast back to its metric's own type before
+    // the (unchanged) bucket comparisons.
     val dec382 = "decimal(38,2)"
     val bls = rankPickCore(s,
       u.select(explode(array(
@@ -1584,7 +1584,8 @@ object Analytics {
         expr("transform(array_sort(filter(bs, x -> x.m = 'f')), " +
           "x -> cast(x.boundary as bigint))").as("fbl"),
         expr("transform(array_sort(filter(bs, x -> x.m = 'm')), " +
-          "x -> cast(x.boundary as decimal(18,2)))").as("mbl"))
+          s"x -> cast(x.boundary as ${u.schema("mon").dataType.sql}))")
+          .as("mbl"))
     u.crossJoin(broadcast(blRow))
       .select(col("user_id"), col("rec_us"), col("freq"),
         col("mon").cast("double").as("monetary"),

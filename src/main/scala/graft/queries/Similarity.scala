@@ -2115,9 +2115,10 @@ object Similarity {
     // under the SAME (cosine desc, vec_id) total order — vec_id is
     // unique per query (each vector lives in exactly one list), so
     // there are no peer rows and the identity is exact. All per-point
-    // running counts share one window frame ⇒ one WindowExec, one
-    // exchange; the hit join runs once (left, flag-only) and the six
-    // (point ∈ top-K ∧ hit) counts collapse into one aggregate.
+    // running counts share one window spec ⇒ one exchange and one sort,
+    // shared by six stacked Window operators (one per point); the hit
+    // join runs once (left, flag-only) and the six (point ∈ top-K ∧ hit)
+    // counts collapse into one aggregate.
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("vec_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -2200,8 +2201,9 @@ object Similarity {
     // running count of crk ≤ r rows under the same (cosine desc,
     // vec_id) total order (vec_id unique per query in the ADC ranking
     // ⇒ no peers). Six per-depth windows + hit joins + aggregates
-    // collapse into one WindowExec, one left hit join, one aggregate;
-    // the checkpoint goes with them (single consumer now).
+    // collapse into one exchange/sort shared by six stacked Window
+    // operators, one left hit join and one aggregate; the checkpoint
+    // goes with them (single consumer now).
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("vec_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

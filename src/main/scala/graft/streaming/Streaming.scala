@@ -1,12 +1,12 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Structured Streaming re-expression of the reference's push side
   * (SURVEY §2.A10–A13): the poll-based watchers
@@ -15,9 +15,10 @@ import org.apache.spark.sql.types.DecimalType
   * Kafka→Cassandra connector pipeline, as incremental queries.
   *
   * In this zero-egress container the stream source is the events
-  * parquet replayed through the file source and results land in a
-  * memory sink (SURVEY §6) — swap `readStream.parquet` for
-  * `format("kafka")` and the memory sink for a Cassandra writer and the
+  * parquet replayed through the file source and every query runs
+  * through one drive, [[Streaming.drain]], whose foreachBatch sink
+  * buffers results driver-side (SURVEY §6) — swap `readStream.parquet`
+  * for `format("kafka")` and the buffer for a Cassandra writer and the
   * pipelines are production-shaped. State lives in the streaming state
   * store (RocksDB-backed on a cluster), partitioned by group key — no
   * driver state, watermark-boundable; the only cross-executor movement
@@ -85,7 +86,6 @@ case class StripRow(doc_id: Long, n_tokens: Long, n_removed: Long,
 object Streaming {
 
   private val TtlMicros = 3600L * 1000000L
-  private val nameCounter = new AtomicInteger(0)
 
   /** Event-time state-retention horizon for the keyed stateful ops: a
     * key silent for this long has its state dropped (timeout handlers
@@ -190,12 +190,14 @@ object Streaming {
     Tables.withMicroTs(raw)
   }
 
-  /** Run `frame` (a streaming DataFrame) to completion into a memory
-    * sink and return the materialized result. The sink's temp view is
-    * dropped after materializing so repeated runs (bench, verify) don't
-    * pin an ever-growing set of in-memory tables; the driver-side
-    * collect is test-harness-only (SURVEY §4) — a production pipeline
-    * streams into a real sink instead.
+  /** Run `frame` (a streaming DataFrame) to completion and return what
+    * its sink saw, as a driver-local frame: append/update modes
+    * accumulate every batch's output, complete mode keeps the last full
+    * table. The driver-side collect is test-harness-only (SURVEY §4) — a
+    * production pipeline streams into a real sink instead. Under the
+    * restart harness ([[RestartRootConf]]) a resumed incarnation returns
+    * only the rows ITS sink observed, which is what the restart specs
+    * union or read off.
     *
     * `needsNoDataBatch`: whether the query's OUTPUT depends on the
     * trailing zero-data micro-batch Spark runs after the data drains.
@@ -212,71 +214,76 @@ object Streaming {
     */
   private[graft] def runToMemory(s: SparkSession, frame: DataFrame,
       mode: OutputMode, needsNoDataBatch: Boolean = true): DataFrame = {
-    restartRootOf(s) match {
-      case Some(root) => return runRestartable(s, frame, mode,
-        needsNoDataBatch, root)
-      case None => ()
+    val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
+    drain(s, frame, mode, s"memory:$mode", needsNoDataBatch) { (b, _) =>
+      val rows = b.collect()
+      buf.synchronized {
+        if (mode == OutputMode.Complete) buf.clear()
+        buf ++= rows
+      }
     }
-    val name = s"graft_stream_${nameCounter.incrementAndGet()}"
-    val dbg = sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")
-    def phase[T](label: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      if (dbg) System.err.println(
-        f"[stream] $name $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-    val ckpt = scratchDir(s"graft_ckpt_")
-    val q = phase("start")(startClamped(s, needsNoDataBatch)(
-      frame.writeStream.outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .format("memory").queryName(name).start()))
-    try phase("process")(q.processAllAvailable())
-    finally {
-      if (dbg) q.recentProgress.foreach(p => System.err.println(
-        s"[stream] $name batch=${p.batchId} rows=${p.numInputRows} " +
-          s"durationMs=${p.durationMs}"))
-      phase("stop")(q.stop())
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    }
-    val table = s.table(name)
-    val rows = phase("collect")(table.collect().toIndexedSeq)
-    s.catalog.dropTempView(name)
-    phase("rebuild")(s.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-      table.schema))
+    localFrame(s, buf.synchronized(buf.toIndexedSeq), frame.schema)
   }
 
-  /** Start a streaming query under the harness-sized stream confs,
-    * restoring the session's values once the query is running. The
-    * state-store partition count is fixed per query from the shuffle
-    * conf AT START — every partition pays checkpoint/commit IO per
-    * trigger, so size it to the harness (a cluster deployment raises
-    * SPARK_GRAFT_STREAM_PARTS with its parallelism; state is keyed, so
-    * the semantics don't change). `needsNoDataBatch`: see runToMemory.
-    * Restore-after-start is safe because the plan is resolved and the
-    * confs captured synchronously inside start(); drives whose
-    * foreachBatch bodies plan LATER jobs that must also see the clamp
-    * (runKeyedUpsert) hold their own conf for the whole drive instead.
+  /** Shuffle partitions of every harness drive, capped by the session's
+    * `spark.sql.shuffle.partitions`. The state-store partition count is
+    * fixed per query from this conf at start and every partition pays
+    * checkpoint/commit IO per trigger; the foreachBatch bodies shuffle
+    * batch-sized frames. State is keyed, so the count never changes a
+    * result.
     */
-  private def startClamped(s: SparkSession, needsNoDataBatch: Boolean)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = s.conf.get(
-      "spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    s.conf.set("spark.sql.shuffle.partitions",
-      math.min(sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4").toInt,
-        prev.toInt).toString)
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-      needsNoDataBatch.toString)
-    try start
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
+  private val StreamShufflePartitions = 4
+
+  /** The one streaming drive: run `frame` in `mode` until every
+    * available input is processed, hand each micro-batch to `onBatch`,
+    * then stop.
+    *
+    *  - Checkpoint: a scratch dir deleted afterwards or, under
+    *    [[RestartRootConf]], `$root/ckpt`, kept for the next incarnation
+    *    and guarded by [[enforceOperatorIdentity]] (`tag` names the drive).
+    *  - Confs: shuffle partitions clamped to [[StreamShufflePartitions]]
+    *    and the trailing no-data batch on or off (see [[runToMemory]]),
+    *    both held for the whole drive and restored afterwards.
+    *  - An exception from `onBatch` stops the query and is rethrown as
+    *    itself, not wrapped in the StreamingQueryException.
+    */
+  private def drain(s: SparkSession, frame: DataFrame, mode: OutputMode,
+      tag: String, needsNoDataBatch: Boolean)(
+      onBatch: (DataFrame, Long) => Unit): Unit = {
+    val root = restartRootOf(s)
+    root.foreach(enforceOperatorIdentity(_, frame, tag))
+    val ckpt = root.map(r => s"$r/ckpt").getOrElse(scratchDir("graft_ckpt_"))
+    val parts = "spark.sql.shuffle.partitions"
+    val confs = Seq(
+      parts -> math.min(StreamShufflePartitions, s.conf.get(parts).toInt).toString,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> needsNoDataBatch.toString)
+    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    try {
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      val q = frame.writeStream.outputMode(mode)
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          try onBatch(b, id)
+          catch { case t: Throwable => failure.set(t); throw t }
+        }
+        .start()
+      try q.processAllAvailable()
+      catch {
+        case _: org.apache.spark.sql.streaming.StreamingQueryException
+            if failure.get != null => throw failure.get
+      } finally q.stop()
+    } finally {
+      prev.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+      if (root.isEmpty)
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
     }
   }
+
+  /** Driver-local frame over rows a drain already collected. */
+  private def localFrame(s: SparkSession, rows: Seq[Row],
+      schema: StructType): DataFrame =
+    s.createDataFrame(new java.util.ArrayList[Row](rows.asJava), schema)
 
   /** Restart-harness conf (spec-only): a session with this set drives
     * its streaming queries from a FIXED checkpoint root instead of a
@@ -364,40 +371,6 @@ object Streaming {
             s"(recorded $theirs, this plan $fp)")
         }
     }
-  }
-
-  /** [[runToMemory]]'s restart-capable twin: same drain-and-stop drive,
-    * but the sink is a driver-side foreachBatch buffer (the memory
-    * sink refuses checkpoint recovery outside complete mode) and the
-    * checkpoint lives under the session's restart root and SURVIVES
-    * the run. Returns the rows THIS incarnation's sink observed:
-    * append/update accumulate batch output (the memory-sink contract),
-    * complete keeps the last full table — so a resumed incarnation
-    * returns only what a restarted process's sink would see, which is
-    * exactly what the restart specs union or read off.
-    */
-  private def runRestartable(s: SparkSession, frame: DataFrame,
-      mode: OutputMode, needsNoDataBatch: Boolean, root: String): DataFrame = {
-    enforceOperatorIdentity(root, frame, s"memory:$mode")
-    val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    val schema = frame.schema
-    val q = startClamped(s, needsNoDataBatch)(
-      frame.writeStream.outputMode(mode)
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          val rows = b.collect()
-          buf.synchronized {
-            if (mode == OutputMode.Complete) buf.clear()
-            buf ++= rows
-          }
-          ()
-        }
-        .start())
-    try q.processAllAvailable() finally q.stop()
-    val rows = buf.synchronized(buf.toIndexedSeq)
-    s.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
   }
 
   // --- A10: value-change feed, streaming twin of A4 -----------------------
@@ -1274,17 +1247,14 @@ object Streaming {
   }
 
   // --- A13: the connector end-to-end: stream → keyed upsert sink ----------
-  // foreachBatch MERGE: each micro-batch folds into a parquet "table"
-  // keyed by (topic, key), latest (ts, koffset) wins — the idempotent
-  // Cassandra-upsert contract; re-delivery converges to the same state.
-  // The state table is hash-bucketed on (topic, key): a batch reads and
-  // dynamically overwrites ONLY the bucket partitions its keys hash to,
-  // so per-batch IO ∝ state in touched buckets, not total state (the
-  // full-state rewrite was O(state × batches)). Raise UpsertBuckets
-  // with state size so a typical batch touches a partition subset — a
-  // real Cassandra sink replaces all of this with per-key upserts.
-  // Final table state ≡ A9's compaction → same oracle SQL.
-  private val UpsertBuckets = 16
+  // The latest (ts, koffset) record per (topic, key) as an UPDATE-mode
+  // max over a (ts, koffset, partition, value) struct — max is
+  // last-write-wins, and equals the batch pick's ORDER BY ts DESC,
+  // koffset DESC (koffset is the unique event id) — folded into the
+  // keyed MERGE sink ([[runKeyedUpsert]]): the idempotent
+  // Cassandra-upsert contract; re-delivery converges to the same state,
+  // and per-trigger sink IO ∝ keys the trigger changed. Final table
+  // state ≡ A9's compaction → same oracle SQL.
   val etlUpsert = QueryDef.oracled(
     "stream_etl_upsert",
     s"""WITH ${graft.queries.Coordination.kafkaFrameSql},
@@ -1292,79 +1262,32 @@ object Streaming {
       |               ORDER BY ts DESC, koffset DESC) AS rn FROM kafka)
       |SELECT topic, partition, key, value, ts, koffset
       |FROM r WHERE rn = 1 ORDER BY topic, key""".stripMargin) { (s, d) =>
-    runUpsert(s, graft.queries.Coordination.kafkaShape(eventStream(s, d)))
+    runEtlUpsert(s, graft.queries.Coordination.kafkaShape(eventStream(s, d)))
   }
 
-  /** The bucketed upsert sink over any Kafka-shaped stream — exposed so
-    * the spec can drive it with a MULTI-batch source (maxFilesPerTrigger
-    * splits), exercising the read-merge-overwrite branch the single-file
-    * harness replay never reaches.
+  /** The A13 pipeline over any Kafka-shaped stream — the seam the
+    * multi-batch spec drives with a MULTI-batch source (maxFilesPerTrigger
+    * splits), exercising the merge branch the single-file replay never
+    * reaches.
     */
-  private[graft] def runUpsert(s: SparkSession,
-      kafkaShaped: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val stateDir = scratchDir("graft_upsert_state")
-    val ckpt = scratchDir("graft_upsert_ckpt_")
-    val q = kafkaShaped.writeStream
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sess = batch.sparkSession
-        val statePath = s"$stateDir/state"
-        val withBucket = batch.withColumn("bucket",
-          pmod(xxhash64(col("topic"), col("key")), lit(UpsertBuckets))
-            .cast("int"))
-        // bounded partition-pruning list (≤ UpsertBuckets ints), not a
-        // data collect
-        val touched = withBucket.select(col("bucket")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        // only path-absence means "first batch" — any other read failure
-        // must propagate, or the merge would silently discard all
-        // previously upserted state. Resolve the path's OWN filesystem
-        // (FileSystem.get gives the default fs — wrong store or "Wrong
-        // FS" crash when the scratch dir lives elsewhere).
-        val fs = new org.apache.hadoop.fs.Path(statePath).getFileSystem(
-          sess.sparkContext.hadoopConfiguration)
-        val existing =
-          if (fs.exists(new org.apache.hadoop.fs.Path(statePath)))
-            // bucket is the partition column → this prunes to the
-            // touched subdirectories at the file-listing level
-            sess.read.parquet(statePath)
-              .filter(col("bucket").isin(touched: _*))
-          else sess.createDataFrame(
-            sess.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            withBucket.schema)
-        existing.unionByName(withBucket)
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("topic"), col("key"))
-              .orderBy(col("ts").desc, col("koffset").desc)))
-          .filter(col("rn") === 1).drop("rn")
-          .write.mode("overwrite")
-          // dynamic: replace only the partitions present in the written
-          // data (= the touched buckets); untouched buckets are not read
-          // or rewritten
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("bucket")
-          .parquet(statePath)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    }
-    // materialize the (small) compacted state and remove the temp dir —
-    // repeated runs otherwise accumulate full parquet copies
-    val state = s.read.parquet(s"$stateDir/state")
-      .select(col("topic"), col("partition"), col("key"), col("value"),
-        col("ts"), col("koffset"))
-    val rows = state.collect().toIndexedSeq
-    val schema = state.schema
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stateDir))
-    s.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
-  }
+  private[graft] def runEtlUpsert(s: SparkSession,
+      kafkaShaped: DataFrame): DataFrame =
+    runKeyedUpsert(s,
+      kafkaShaped.groupBy(col("topic"), col("key"))
+        .agg(max(struct(col("ts"), col("koffset"), col("partition"),
+          col("value"))).as("lw"))
+        .select(col("topic"), col("lw.partition").as("partition"),
+          col("key"), col("lw.value").as("value"), col("lw.ts").as("ts"),
+          col("lw.koffset").as("koffset")),
+      Seq("topic", "key"))
+
+  /** Hash buckets of the keyed MERGE table: a batch reads and dynamically
+    * overwrites ONLY the bucket partitions its keys hash to, so per-batch
+    * IO ∝ state in touched buckets, not total state. Raise with state
+    * size so a typical batch touches a partition subset — a real
+    * Cassandra sink replaces all of this with per-key upserts.
+    */
+  private val UpsertBuckets = 16
 
   /** Generic keyed-upsert drain (round 13 — the A13 sink generalized to
     * any key set): run `updates`, an UPDATE-mode streaming aggregation
@@ -1383,8 +1306,8 @@ object Streaming {
     * partitioned on a cluster) — it is the SINK side that is now
     * incremental, the contract a real Cassandra/MERGE table gives.
     * `onBatch(batchId, changedRows)` is spec observability.
-    */
-  /** `bootstrap`: an optional EXISTING keyed table to seed the MERGE
+    *
+    * `bootstrap`: an optional EXISTING keyed table to seed the MERGE
     * sink with before the stream starts (batch_seq −1, superseded by
     * any streamed write of the same key) — for SMALL keyed tables a
     * deployment re-materializes per session. Must carry `updates`'
@@ -1402,16 +1325,6 @@ object Streaming {
       bootstrap: Option[DataFrame] = None): DataFrame =
     runKeyedUpsertThen(s, updates, keyCols, onBatch, bootstrap)(identity)
 
-  /** Optional secondary sort for the keyed table's writes (round 17):
-    * every state write becomes `sortWithinPartitions(bucket, sortCols)`,
-    * so each bucket's parquet files are row-group-clustered on the sort
-    * columns — a reader that pushes an equality/range filter on them
-    * (an IVF probe filtering cid) skips non-matching row groups via
-    * parquet min/max stats even though the MERGE layout must stay
-    * key-hash-bucketed (bucketing by cid would strand superseded rows
-    * in their old list — the A60 Scaladoc argument).
-    */
-
   /** [[runKeyedUpsert]] with a post-drain CONSUMER over the
     * parquet-backed keyed table: `consume` plans against the state
     * parquet in place (real partitions, column stats) and only ITS
@@ -1420,12 +1333,21 @@ object Streaming {
     * collects it). A60/A61 pass their index probes; the drained-table
     * contract is `consume = identity`.
     *
-    * The consumer plans under the drive's stream-sized shuffle conf
-    * (SPARK_GRAFT_STREAM_PARTS) — deliberate: drained-state consumers
-    * are state-sized, and the harness measured the stream-sized fold
-    * faster than the 32-partition one at sf0.1 (task overhead
-    * dominates); a cluster deployment raises the env with its
-    * parallelism, which sizes drive and consumer together.
+    * `sortCols` (round 17): every state write becomes
+    * `sortWithinPartitions(bucket, sortCols)`, so each bucket's parquet
+    * files are row-group-clustered on the sort columns — a reader that
+    * pushes an equality/range filter on them (an IVF probe filtering
+    * cid) skips non-matching row groups via parquet min/max stats even
+    * though the MERGE layout must stay key-hash-bucketed (bucketing by
+    * cid would strand superseded rows in their old list — the A60
+    * Scaladoc argument).
+    *
+    * Under the restart harness the keyed table lives at `$root/kupsert`
+    * and survives the run — the deployment shape (the MERGE table
+    * persists between restarts), witnessed by the restart spec.
+    * Otherwise it is a scratch dir (/dev/shm when writable), removed
+    * on success and failure alike: a failed run must not leave its
+    * state parquet resident in shared memory until reboot.
     */
   private[graft] def runKeyedUpsertThen(s: SparkSession, updates: DataFrame,
       keyCols: Seq[String],
@@ -1433,60 +1355,94 @@ object Streaming {
       bootstrap: Option[DataFrame] = None,
       sortCols: Seq[String] = Nil)(
       consume: DataFrame => DataFrame): DataFrame = {
-    // under the restart harness the keyed table AND the checkpoint
-    // live under the session's fixed root and survive the run — the
-    // deployment shape (the MERGE table persists between restarts),
-    // witnessed by the restart spec
     val restartRoot = restartRootOf(s)
-    restartRoot.foreach(enforceOperatorIdentity(_, updates,
-      s"kupsert:${keyCols.mkString(",")}"))
     val stateDir = restartRoot.map(r => s"$r/kupsert")
       .getOrElse(scratchDir("graft_kupsert_state"))
-    // scratch dirs prefer /dev/shm (RAM): a failed run must not leave
-    // its state parquet resident in shared memory until reboot. The
-    // guard lives where stateDir is in scope (round 14 — the r13
-    // advisor's ThreadLocal relay could NPE before set / fire on a
-    // stale value from an earlier run on the same thread).
-    try runKeyedUpsertInner(s, updates, keyCols, onBatch, stateDir,
-      outCols = updates.columns.toSeq,
-      outSchema = org.apache.spark.sql.types.StructType(
-        updates.schema.fields.toSeq),
-      keepDirs = restartRoot.isDefined, bootstrap = bootstrap,
-      sortCols = sortCols, consume = consume)
-    catch { case t: Throwable =>
-      if (restartRoot.isEmpty)
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(stateDir))
-      throw t
-    }
-  }
-
-  private def runKeyedUpsertInner(s: SparkSession, updates: DataFrame,
-      keyCols: Seq[String], onBatch: (Long, Long) => Unit,
-      stateDir: String, outCols: Seq[String],
-      outSchema: org.apache.spark.sql.types.StructType,
-      keepDirs: Boolean,
-      bootstrap: Option[DataFrame],
-      sortCols: Seq[String],
-      consume: DataFrame => DataFrame): DataFrame = {
-    val ckpt =
-      if (keepDirs) s"$stateDir.ckpt" else scratchDir("graft_kupsert_ckpt_")
-    // Size the state store AND the per-batch merge windows to the
-    // stream harness (the runToMemory clamp, which this drive never
-    // got): every state partition pays checkpoint/commit IO per
-    // trigger, and the merge window shuffles changed-keys-sized
-    // batches — 32 partitions of both was pure fixed cost. Unlike
-    // runToMemory the clamp must span the WHOLE drive, not just
-    // .start(): foreachBatch bodies plan their merge jobs during
-    // processAllAvailable. (A cluster deployment raises the env; keyed
-    // semantics are partition-count-independent.)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      math.min(sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4").toInt,
-        prevParts.toInt).toString)
-    try runKeyedUpsertDrive(s, updates, keyCols, onBatch, stateDir, ckpt,
-      outCols, outSchema, keepDirs, bootstrap, sortCols, consume)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    val statePath = new org.apache.hadoop.fs.Path(s"$stateDir/state")
+    // the path's own filesystem, not the default one
+    val fs = statePath.getFileSystem(s.sparkContext.hadoopConfiguration)
+    def bucketed(frame: DataFrame): DataFrame = frame.withColumn("bucket",
+      pmod(xxhash64(keyCols.map(col): _*), lit(UpsertBuckets)).cast("int"))
+    // optional row-group clustering of every state write: bucket first —
+    // the write splits files on it — then the caller's sort columns
+    def clustered(frame: DataFrame): DataFrame =
+      if (sortCols.isEmpty) frame
+      else frame.sortWithinPartitions(("bucket" +: sortCols).map(col): _*)
+    try {
+      // seed the keyed table with the existing build BEFORE the stream
+      // starts: bucketed identically (the streamed MERGE must find an
+      // old key in the bucket its replacement hashes to), stamped
+      // batch_seq -1 so any streamed write supersedes it
+      bootstrap.foreach { table =>
+        sweepStateTmp(fs, statePath)
+        if (!fs.exists(statePath))
+          // same one-row-per-key enforcement as the batch-0 fast path:
+          // a seed assembled with an accidental key overlap would persist
+          // duplicate rows at batch_seq -1, and buckets never touched by
+          // a later trigger are never re-merged
+          publishState(fs, statePath, clustered(bucketed(
+            table.dropDuplicates(keyCols).withColumn("batch_seq", lit(-1L)))))
+      }
+      drain(s, updates, OutputMode.Update, s"kupsert:${keyCols.mkString(",")}",
+          needsNoDataBatch = false) { (batch0, batchId) =>
+        val batch = batch0.localCheckpoint() // changed-keys-sized; 3 reads
+        // the count is SPEC observability only — when no hook is
+        // attached (the registered queries), don't pay a whole extra
+        // job per trigger for a number nobody reads
+        if (onBatch != null) onBatch(batchId, batch.count())
+        val withBucket = bucketed(batch.withColumn("batch_seq", lit(batchId)))
+        if (!fs.exists(statePath)) {
+          // first batch (and the whole bootstrap-load case): no state
+          // to merge against — write the bucketed batch directly
+          // instead of paying a full-keyspace merge window against an
+          // empty frame (in the drain-and-stop harness this is ALSO
+          // the single data batch, so the window was pure overhead).
+          // The current callers are UPDATE-mode aggregations, whose
+          // output carries each key at most once per batch, but this
+          // is a generic private[graft] seam: ENFORCE that invariant
+          // rather than assume it, or a future non-aggregated caller
+          // would silently persist duplicate keys from batch 0 into
+          // buckets that may never be re-merged. dropDuplicates picks
+          // an arbitrary winner among same-batch duplicates — the same
+          // tie the merge path's batch_seq ordering leaves arbitrary —
+          // and costs one changed-keys-sized exchange on batch 0 only.
+          // Published via tmp+rename (publishState): a crash mid-write
+          // must not leave a torn directory the checkpoint-replayed
+          // batch would then try to MERGE against.
+          sweepStateTmp(fs, statePath)
+          publishState(fs, statePath,
+            clustered(withBucket.dropDuplicates(keyCols)))
+        } else {
+          // bounded partition-pruning list (≤ UpsertBuckets ints)
+          val touched = withBucket.select(col("bucket")).distinct()
+            .collect().map(_.getInt(0)).toSeq
+          val existing = batch.sparkSession.read.parquet(statePath.toString)
+            .filter(col("bucket").isin(touched: _*))
+          clustered(existing.unionByName(withBucket)
+            .withColumn("rn", row_number().over(
+              org.apache.spark.sql.expressions.Window
+                .partitionBy(keyCols.map(col): _*)
+                .orderBy(col("batch_seq").desc)))
+            .filter(col("rn") === 1).drop("rn"))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(statePath.toString)
+        }
+      }
+      // run the consumer against the parquet-backed keyed table in place
+      // (production's read shape — a probe never collects the table) and
+      // materialize only ITS result, the documented harness-only drain.
+      // A source that never produced a data batch (and no bootstrap)
+      // wrote no state — that is an empty table, not a crash.
+      val keyed =
+        if (fs.exists(statePath))
+          s.read.parquet(statePath.toString).select(updates.columns.map(col): _*)
+        else localFrame(s, Nil, updates.schema)
+      val result = consume(keyed)
+      localFrame(s, result.collect().toIndexedSeq, result.schema)
+    } finally if (restartRoot.isEmpty)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stateDir))
   }
 
   /** A zero-row `partitionBy` write leaves a poisoned state dir —
@@ -1532,128 +1488,6 @@ object Streaming {
       fs.listStatus(parent).map(_.getPath)
         .filter(_.getName.startsWith(dest.getName + ".tmp-"))
         .foreach(fs.delete(_, true))
-  }
-
-  private def runKeyedUpsertDrive(s: SparkSession, updates: DataFrame,
-      keyCols: Seq[String], onBatch: (Long, Long) => Unit,
-      stateDir: String, ckpt: String, outCols: Seq[String],
-      outSchema: org.apache.spark.sql.types.StructType,
-      keepDirs: Boolean,
-      bootstrap: Option[DataFrame],
-      sortCols: Seq[String],
-      consume: DataFrame => DataFrame): DataFrame = {
-    // optional row-group clustering of every state write (Scaladoc at
-    // runKeyedUpsert): bucket first — the write splits files on it —
-    // then the caller's sort columns within each bucket's file
-    def clustered(frame: DataFrame): DataFrame =
-      if (sortCols.isEmpty) frame
-      else frame.sortWithinPartitions(("bucket" +: sortCols).map(col): _*)
-    // seed the keyed table with the existing build BEFORE the stream
-    // starts: bucketed identically (the streamed MERGE must find an
-    // old key in the bucket its replacement hashes to), stamped
-    // batch_seq -1 so any streamed write supersedes it
-    bootstrap.foreach { table =>
-      val statePathH = new org.apache.hadoop.fs.Path(s"$stateDir/state")
-      val fs = statePathH.getFileSystem(s.sparkContext.hadoopConfiguration)
-      sweepStateTmp(fs, statePathH)
-      if (!fs.exists(statePathH)) {
-        // same one-row-per-key enforcement as the batch-0 fast path:
-        // a seed assembled with an accidental key overlap would persist
-        // duplicate rows at batch_seq -1, and buckets never touched by
-        // a later trigger are never re-merged
-        publishState(fs, statePathH, clustered(table.dropDuplicates(keyCols)
-          .withColumn("batch_seq", lit(-1L))
-          .withColumn("bucket",
-            pmod(xxhash64(keyCols.map(col): _*), lit(UpsertBuckets))
-              .cast("int"))))
-      }
-    }
-    val q = updates.writeStream
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Update)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        val sess = batch0.sparkSession
-        val statePath = s"$stateDir/state"
-        val batch = batch0.localCheckpoint() // changed-keys-sized; 3 reads
-        // the count is SPEC observability only — when no hook is
-        // attached (the registered queries), don't pay a whole extra
-        // job per trigger for a number nobody reads
-        if (onBatch != null) onBatch(batchId, batch.count())
-        val withBucket = batch
-          .withColumn("batch_seq", lit(batchId))
-          .withColumn("bucket",
-            pmod(xxhash64(keyCols.map(col): _*), lit(UpsertBuckets))
-              .cast("int"))
-        val statePathH = new org.apache.hadoop.fs.Path(statePath)
-        // the path's own filesystem, not the default one
-        val fs = statePathH.getFileSystem(
-          sess.sparkContext.hadoopConfiguration)
-        if (!fs.exists(statePathH)) {
-          // first batch (and the whole bootstrap-load case): no state
-          // to merge against — write the bucketed batch directly
-          // instead of paying a full-keyspace merge window against an
-          // empty frame (in the drain-and-stop harness this is ALSO
-          // the single data batch, so the window was pure overhead).
-          // The current callers are UPDATE-mode aggregations, whose
-          // output carries each key at most once per batch, but this
-          // is a generic private[graft] seam: ENFORCE that invariant
-          // rather than assume it, or a future non-aggregated caller
-          // would silently persist duplicate keys from batch 0 into
-          // buckets that may never be re-merged. dropDuplicates picks
-          // an arbitrary winner among same-batch duplicates — the same
-          // tie the merge path's batch_seq ordering leaves arbitrary —
-          // and costs one changed-keys-sized exchange on batch 0 only.
-          // Published via tmp+rename (publishState): a crash mid-write
-          // must not leave a torn directory the checkpoint-replayed
-          // batch would then try to MERGE against.
-          sweepStateTmp(fs, statePathH)
-          publishState(fs, statePathH,
-            clustered(withBucket.dropDuplicates(keyCols)))
-        } else {
-          // bounded partition-pruning list (≤ UpsertBuckets ints)
-          val touched = withBucket.select(col("bucket")).distinct()
-            .collect().map(_.getInt(0)).toSeq
-          val existing = sess.read.parquet(statePath)
-            .filter(col("bucket").isin(touched: _*))
-          clustered(existing.unionByName(withBucket)
-            .withColumn("rn", row_number().over(
-              org.apache.spark.sql.expressions.Window
-                .partitionBy(keyCols.map(col): _*)
-                .orderBy(col("batch_seq").desc)))
-            .filter(col("rn") === 1).drop("rn"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(statePath)
-        }
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      if (!keepDirs)
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    }
-    // run the consumer against the parquet-backed keyed table in place
-    // (production's read shape — a probe never collects the table),
-    // materialize only ITS result, then remove the temp dir (the
-    // collect is the documented harness-only drain, as in runUpsert;
-    // under the restart harness the table and checkpoint persist for
-    // the next incarnation). A source that never produced a data batch
-    // (and no bootstrap) wrote no state — that is an empty table, not
-    // a crash.
-    val keyed =
-      if (new java.io.File(s"$stateDir/state").exists())
-        s.read.parquet(s"$stateDir/state").select(outCols.map(col): _*)
-      else s.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), outSchema)
-    val result = consume(keyed)
-    val (rows, schema) = (result.collect().toIndexedSeq, result.schema)
-    if (!keepDirs)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stateDir))
-    s.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
   }
 
   // --- A52: A44's skew profile through the incremental keyed sink ----------
@@ -2728,69 +2562,54 @@ object Streaming {
     val refined = trainedCentroidsLit(s, d)
     val listsT = lists.getOrElse(Sim.ivfLists(s, d))
     val k = Sim.K // primitive copy — the closure must not capture the module
-    val out = new java.util.concurrent.ConcurrentLinkedQueue[AnnProbeRow]()
-    val ckpt = scratchDir("graft_annprobe_ckpt_")
-    val q = raw.writeStream
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // probe selection: map-side kernel against the literal codebook;
-        // cut (|arrivals| × nProbe rows) because it is consumed twice —
-        // the bounded cid collect and the candidate join
-        val probes = batch
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-          .withColumn("cid0", explode(
-            F.top_cos_ids(col("qe"), refined, nProbe)))
-          .withColumn("cid", col("cid0").cast("long")).drop("cid0")
-          .localCheckpoint()
-        val cids = probes.select(col("cid")).distinct()
-          .collect().map(_.getLong(0)).toSeq.sorted
-        if (cids.nonEmpty) {
-          // the trigger's literal partition filter: static pruning the
-          // planner cannot decline, on exactly the probed lists
-          val cand = broadcast(probes)
-            .join(listsT.filter(col("cid").isin(cids: _*)), Seq("cid"))
-            .filter(col("vec_id") =!= col("query_id"))
-            .withColumn("cosine", F.cosine_sim(col("qe"), col("ea")))
-            .filter(!isnan(col("cosine")))
-            .select(col("query_id"), col("cid"), col("vec_id"), col("cosine"))
-            .as[AnnListCand]
-          // Two-stage reassembly (the B32 lesson applied to group
-          // sizing): a single query_id-keyed pass would hold a query's
-          // ENTIRE probed candidate mass (nProbe/nLists of the corpus)
-          // in one task. The global top-K equals the top-K of the
-          // per-list top-Ks — every true neighbor lives in some probed
-          // list and survives that list's top-K — so stage 1 keys by
-          // (query, list) (no task ever holds more than ONE inverted
-          // list, the IVF scan granule) and stage 2 merges nProbe·K
-          // rows per query. Each stage selects through [[annTopK]],
-          // the O(k) bounded insertion buffer: a task heap must never
-          // hold a whole inverted list's candidates.
-          val ranked = cand.groupByKey(c => (c.query_id, c.cid))
-            .flatMapGroups((_: (Long, Long), it: Iterator[AnnListCand]) =>
-              annTopK(it, k))
-            .groupByKey(_.query_id)
-            .flatMapGroups((q: Long, it: Iterator[AnnListCand]) =>
-              // exact re-rank of the per-list winners, the topK
-              // contract: (cosine desc, vec_id asc), K rows
-              annTopK(it, k).zipWithIndex
-                .map { case (c, i) => AnnProbeRow(q, i + 1, c.vec_id, c.cosine) })
-          // the per-trigger drain is |arrivals|·K rows — the RPC-answer
-          // bound, as in runBatchPlanServing's documented harness drain
-          val rows = ranked.collect()
-          rows.foreach(out.add)
-          if (onProbeExec != null)
-            onProbeExec(batchId, ranked.queryExecution, cids.toSet)
-        }
-        ()
+    collectProbes(s, raw, "annprobe") { (queries, batchId) =>
+      // probe selection: map-side kernel against the literal codebook;
+      // cut (|arrivals| × nProbe rows) because it is consumed twice —
+      // the bounded cid collect and the candidate join
+      val probes = queries
+        .withColumn("cid0", explode(
+          F.top_cos_ids(col("qe"), refined, nProbe)))
+        .withColumn("cid", col("cid0").cast("long")).drop("cid0")
+        .localCheckpoint()
+      val cids = probes.select(col("cid")).distinct()
+        .collect().map(_.getLong(0)).toSeq.sorted
+      if (cids.isEmpty) Array.empty[AnnProbeRow]
+      else {
+        // the trigger's literal partition filter: static pruning the
+        // planner cannot decline, on exactly the probed lists
+        val cand = broadcast(probes)
+          .join(listsT.filter(col("cid").isin(cids: _*)), Seq("cid"))
+          .filter(col("vec_id") =!= col("query_id"))
+          .withColumn("cosine", F.cosine_sim(col("qe"), col("ea")))
+          .filter(!isnan(col("cosine")))
+          .select(col("query_id"), col("cid"), col("vec_id"), col("cosine"))
+          .as[AnnListCand]
+        // Two-stage reassembly (the B32 lesson applied to group
+        // sizing): a single query_id-keyed pass would hold a query's
+        // ENTIRE probed candidate mass (nProbe/nLists of the corpus)
+        // in one task. The global top-K equals the top-K of the
+        // per-list top-Ks — every true neighbor lives in some probed
+        // list and survives that list's top-K — so stage 1 keys by
+        // (query, list) (no task ever holds more than ONE inverted
+        // list, the IVF scan granule) and stage 2 merges nProbe·K
+        // rows per query. Each stage selects through [[annTopK]],
+        // the O(k) bounded insertion buffer: a task heap must never
+        // hold a whole inverted list's candidates.
+        val ranked = cand.groupByKey(c => (c.query_id, c.cid))
+          .flatMapGroups((_: (Long, Long), it: Iterator[AnnListCand]) =>
+            annTopK(it, k))
+          .groupByKey(_.query_id)
+          .flatMapGroups((q: Long, it: Iterator[AnnListCand]) =>
+            // exact re-rank of the per-list winners, the topK
+            // contract: (cosine desc, vec_id asc), K rows
+            annTopK(it, k).zipWithIndex
+              .map { case (c, i) => AnnProbeRow(q, i + 1, c.vec_id, c.cosine) })
+        val rows = ranked.collect()
+        if (onProbeExec != null)
+          onProbeExec(batchId, ranked.queryExecution, cids.toSet)
+        rows
       }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
     }
-    scala.jdk.CollectionConverters.IteratorHasAsScala(out.iterator())
-      .asScala.toSeq.toDF()
   }
 
   /** Exact top-k selection in O(k) task memory: a sorted k-slot
@@ -2857,10 +2676,9 @@ object Streaming {
   // (16 B/vector — the point of PQ), with map-side partial aggregation
   // doing the fold (no single task ever holds a query's full candidate
   // set, unlike a keyed-reassembly formulation would); rerank fetches
-  // full vectors for PqRerank candidates only. The result parquet
-  // append is |arrivals|·K rows per trigger; the final collect is the
-  // documented harness drain (production reads the result table or
-  // answers RPCs from the sink).
+  // full vectors for PqRerank candidates only. Each trigger answers
+  // |arrivals|·K rows, collected driver-side (collectProbes) — the
+  // harness stand-in for answering RPCs from the sink.
   val annAdc = QueryDef.rowsOnly("stream_ann_adc") { (s, d) =>
     val path = s"$d/embeddings.parquet"
     runAnnAdc(s,
@@ -3082,6 +2900,13 @@ object Streaming {
     * state, and the publish is the one index-sized write — which is the
     * point of the write (it becomes the next servable artifact).
     */
+  /** Maximum delta-chain depth before [[maintainPublishProbe]] compacts
+    * (publishes full): every serve-time read unions one scan per chain
+    * link, so an unbounded chain would trade publish IO for read fan-out
+    * without limit.
+    */
+  private val MaxDeltaChain = 8
+
   /** Post-publish retention depth for [[maintainPublishProbe]] stores
     * (see the knob's comment at the publish site). */
   private[graft] val GenerationsKeepConf = "spark.graft.index.generations.keep"
@@ -3127,7 +2952,7 @@ object Streaming {
         // (key, list) projection, the standard price of MERGE without a
         // key→partition index, not an index rewrite. Falls back to a
         // FULL (compacting) publish when the chain would exceed
-        // maxDeltaChain or the delta touches most partitions anyway.
+        // MaxDeltaChain or the delta touches most partitions anyway.
         // computed only when a delta publish is even possible (base is
         // a published generation) — without a basePath the key-locate
         // pass below would scan the base's (key, part) columns for a
@@ -3141,10 +2966,8 @@ object Streaming {
           (newT ++ oldT).distinct.toSeq
         }
         val deltaMode = basePath.exists { bp =>
-          val maxChain = s.conf.get(graft.FrameCache.MaxDeltaChainConf,
-            graft.FrameCache.DefaultMaxDeltaChain.toString).toInt
           val total = graft.FrameCache.generationPartitionValues(s, bp).size
-          graft.FrameCache.generationDepth(s, bp) + 1 <= maxChain &&
+          graft.FrameCache.generationDepth(s, bp) + 1 <= MaxDeltaChain &&
             touchedVals.size * 2 <= total
         }
         val path =
@@ -3175,65 +2998,35 @@ object Streaming {
   }
 
   /** Shared A58/A59 serving harness: run each arrival micro-batch of
-    * (vec_id, embedding) rows through a full BATCH probe plan via
-    * foreachBatch, appending (query_id, rank, neighbor_id, cosine)
-    * rows to a result table — the scoring-service shape, index
-    * immutable for the server's life. The final read-back is the
-    * documented harness drain (production reads the result table or
-    * answers RPCs from the sink).
-    *
-    * Delivery contract, honestly: foreachBatch + a plain parquet
-    * append is AT-LEAST-ONCE across a crash — a batch that wrote its
-    * files but died before the checkpoint commit replays and appends
-    * again. For a scoring service that answers RPCs this is the normal
-    * serving contract (the caller retried anyway); a deployment that
-    * needs exactly-once RESULTS writes batch-id-stamped rows and
-    * dedupes read-side, or routes through runKeyedUpsert keyed on
-    * (query_id, rank) — whose merge IS idempotent under replay.
+    * (vec_id, embedding) rows through a full BATCH probe plan — the
+    * scoring-service shape, index immutable for the server's life.
     */
   private def runBatchPlanServing(s: SparkSession, raw: DataFrame,
       tag: String)(probe: DataFrame => DataFrame): DataFrame = {
-    val outDir = scratchDir(s"graft_${tag}_out")
-    try {
-      val ckpt = scratchDir(s"graft_${tag}_ckpt_")
-      val q = raw.writeStream
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val queries = batch
-            .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-            .localCheckpoint() // consumed twice (LUT + rerank join)
-          probe(queries)
-            .write.mode("append").parquet(s"$outDir/res")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally {
-        q.stop()
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-      }
-      // harness drain, as in runKeyedUpsert; a source that never
-      // produced a data batch wrote no results — empty table, not a
-      // crash
-      val (rows, schema) =
-        if (new java.io.File(s"$outDir/res").exists()) {
-          val res = s.read.parquet(s"$outDir/res")
-          (res.collect().toIndexedSeq, res.schema)
-        } else (IndexedSeq.empty[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("query_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("rank",
-              org.apache.spark.sql.types.IntegerType),
-            org.apache.spark.sql.types.StructField("neighbor_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("cosine",
-              org.apache.spark.sql.types.DoubleType))))
-      s.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(outDir))
+    import s.implicits._
+    collectProbes(s, raw, tag) { (queries, _) =>
+      // consumed twice (LUT + rerank join)
+      probe(queries.localCheckpoint()).as[AnnProbeRow].collect()
+    }
+  }
+
+  /** The A57-A59 serving drain: each arrival micro-batch, projected to
+    * (query_id, qe), goes through `probe`, and the answered rows
+    * collect driver-side — |arrivals|·K rows per trigger, the
+    * RPC-answer bound; production answers RPCs from the sink instead.
+    * A source that never produced a batch answers nothing: zero rows
+    * with the same four columns.
+    */
+  private def collectProbes(s: SparkSession, raw: DataFrame, tag: String)(
+      probe: (DataFrame, Long) => Array[AnnProbeRow]): DataFrame = {
+    import s.implicits._
+    val out = new java.util.concurrent.ConcurrentLinkedQueue[AnnProbeRow]()
+    drain(s, raw, OutputMode.Append, tag, needsNoDataBatch = false) {
+      (batch, batchId) =>
+        probe(batch.select(col("vec_id").as("query_id"),
+          col("embedding").as("qe")), batchId).foreach(out.add)
+    }
+    out.asScala.toSeq.toDF()
   }
 
   def all: Seq[QueryDef] = Seq(

@@ -974,4 +974,30 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("test frame") &&
       e.getMessage.contains("99"))
   }
+
+  test("events_rfm: a monetary total of 10^16 or more still gets its bucket") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // five users, one purchase-bearing event each except users 4 and 5,
+    // whose totals (two 9e15 purchases, three) exceed DECIMAL(18,2):
+    // quintile boundaries sit at ranks 1..4, so user 4's total is the
+    // top boundary and user 5 must land above all four
+    val t0 = 1700000000000000L
+    val rows = Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)) ++
+      Seq.fill(2)((4L, 9e15)) ++ Seq.fill(3)((5L, 9e15))
+    val dir = java.nio.file.Files.createTempDirectory("graft_rfm").toString
+    try {
+      rows.zipWithIndex.map { case ((u, v), i) => (i.toLong, t0 + i, u, v) }
+        .toDF("event_id", "us", "user_id", "value")
+        .withColumn("ts", timestamp_micros(col("us"))).drop("us")
+        .withColumn("event_type", lit("purchase"))
+        .withColumn("props", lit("{}"))
+        .coalesce(1).write.parquet(s"$dir/events.parquet")
+      val m = SparkEntry.queries("events_rfm")(spark, dir).collect()
+        .map(r => r.getAs[Long]("user_id") -> r.getAs[Long]("m_bucket")).toMap
+      assert(m == Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L, 5L -> 5L),
+        s"m_bucket by user: $m")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(dir))
+  }
 }

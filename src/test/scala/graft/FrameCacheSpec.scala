@@ -710,4 +710,64 @@ class FrameCacheSpec extends AnyFunSuite {
     } finally
       org.apache.commons.io.FileUtils.deleteDirectory(parent.toFile)
   }
+
+  test("warmConcurrently: a failing thunk interrupts the blocked one, " +
+      "surfaces its own exception, and returns with every thunk stopped") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val started = new CountDownLatch(1)
+    val interrupted = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val stopped = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val boom = new IllegalStateException("warm thunk failed")
+    def blocker(): Unit = {
+      started.countDown()
+      try new CountDownLatch(1).await()
+      catch {
+        case _: InterruptedException =>
+          interrupted.set(true)
+          // a thunk that takes a while to unwind (a Spark job noticing
+          // its cancellation): the caller must wait for it
+          val until = System.nanoTime() + TimeUnit.MILLISECONDS.toNanos(300)
+          while (System.nanoTime() < until) ()
+      } finally stopped.set(true)
+    }
+    def failer(): Unit = {
+      assert(started.await(30, TimeUnit.SECONDS))
+      throw boom
+    }
+    val e = intercept[IllegalStateException](
+      FrameCache.warmConcurrently(Seq(() => blocker(), () => failer()), par = 2))
+    assert(e eq boom, s"expected the thunk's own exception, got $e")
+    assert(interrupted.get, "the blocked thunk was never interrupted")
+    assert(stopped.get, "warmConcurrently returned while a thunk still ran")
+    assert(!Thread.currentThread().isInterrupted)
+  }
+
+  test("warmConcurrently: an interrupted caller cancels its thunks and " +
+      "keeps its interrupt flag") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val started = new CountDownLatch(1)
+    val stopped = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val outcome = new java.util.concurrent.atomic.AtomicReference[Any]()
+    val caller = new Thread(() => {
+      try FrameCache.warmConcurrently(Seq(() => {
+        started.countDown()
+        try new CountDownLatch(1).await() finally stopped.set(true)
+      }), par = 2)
+      catch {
+        case e: InterruptedException =>
+          outcome.set((e, Thread.currentThread().isInterrupted))
+      }
+    })
+    caller.start()
+    assert(started.await(30, TimeUnit.SECONDS))
+    caller.interrupt()
+    caller.join(30000)
+    assert(!caller.isAlive)
+    outcome.get match {
+      case (_: InterruptedException, flag: Boolean) =>
+        assert(flag, "interrupt flag not restored")
+      case other => fail(s"expected InterruptedException, got $other")
+    }
+    assert(stopped.get, "the blocked thunk was not cancelled")
+  }
 }

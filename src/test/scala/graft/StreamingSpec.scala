@@ -155,7 +155,7 @@ class StreamingSpec extends AnyFunSuite {
     val shaped = graft.queries.Coordination.kafkaShape(
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(srcDir))
-    val got = graft.streaming.Streaming.runUpsert(spark, shaped)
+    val got = graft.streaming.Streaming.runEtlUpsert(spark, shaped)
       .collect().map(r => (r.getAs[String]("topic"), r.getAs[String]("key"),
         r.getAs[Long]("koffset"))).toSet
     val batch = SparkEntry.queries("etl_upsert_compact")(spark, sf)
@@ -490,6 +490,58 @@ class StreamingSpec extends AnyFunSuite {
         spark.readStream.schema(qdf.schema)
           .option("maxFilesPerTrigger", 1).parquet(srcDir), sf).collect())
       assert(multi == batch, "multi-batch IVFADC feed diverges from batch")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(
+      new java.io.File(srcDir))
+  }
+
+  test("stream_ann_adc / stream_ann_ivfpq over an empty source answer zero " +
+      "rows with the probe columns") {
+    val qdf = spark.read.parquet(s"$sf/embeddings.parquet")
+    val srcDir = java.nio.file.Files
+      .createTempDirectory("graft_empty_src").toString
+    try Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+        "stream_ann_adc" -> (graft.streaming.Streaming.runAnnAdc(spark, _, sf)),
+        "stream_ann_ivfpq" -> (graft.streaming.Streaming.runAnnIvfPq(spark, _, sf))
+      ).foreach { case (name, run) =>
+        val got = run(spark.readStream.schema(qdf.schema).parquet(srcDir))
+        assert(got.columns.toSeq ==
+          Seq("query_id", "rank", "neighbor_id", "cosine"), name)
+        assert(got.count() == 0, name)
+      }
+    finally org.apache.commons.io.FileUtils.deleteQuietly(
+      new java.io.File(srcDir))
+  }
+
+  test("a per-batch function that throws stops the query, surfaces its own " +
+      "exception, and leaves no scratch checkpoint or conf behind") {
+    import spark.implicits._
+    val s = spark.newSession() // own query manager: only this drive is active
+    val b0 = (1L to 5L).map(k => (k, 1.0)).toDF("user_id", "v")
+    val srcDir = plantedSource(Seq(b0))
+    val parts = s.conf.get("spark.sql.shuffle.partitions")
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val noDataBefore = s.conf.getOption(noData)
+    val boom = new IllegalStateException("per-batch failure")
+    var seen: Option[(org.apache.spark.sql.streaming.StreamingQuery, String)] = None
+    try {
+      val counts = s.readStream.schema(b0.schema).parquet(srcDir)
+        .groupBy(col("user_id")).agg(count(lit(1)).as("cnt"))
+      val e = intercept[IllegalStateException](
+        graft.streaming.Streaming.runKeyedUpsert(s, counts, Seq("user_id"),
+          (_, _) => {
+            val q = s.streams.active.head
+            seen = Some((q, q.asInstanceOf[
+              org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+              .streamingQuery.resolvedCheckpointRoot))
+            throw boom
+          }))
+      assert(e eq boom, s"expected the per-batch exception itself, got $e")
+      val (q, ckpt) = seen.getOrElse(fail("the per-batch function never ran"))
+      assert(!q.isActive && s.streams.active.isEmpty, "query left running")
+      assert(!new java.io.File(new org.apache.hadoop.fs.Path(ckpt).toUri.getPath)
+        .exists(), s"scratch checkpoint left behind: $ckpt")
+      assert(s.conf.get("spark.sql.shuffle.partitions") == parts)
+      assert(s.conf.getOption(noData) == noDataBefore)
     } finally org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(srcDir))
   }
