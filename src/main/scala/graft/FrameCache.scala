@@ -228,7 +228,8 @@ private[graft] object FrameCache {
     * serving the OLD corpus's artifacts — "never rebuilt" turning into
     * "silently wrong". Files contribute (name, length, mtime); table
     * DIRECTORIES contribute their children one level down (a parquet
-    * table dir's part files). A changed corpus therefore changes the
+    * table dir's part files; the walk is [[Tables.fileStatuses]], shared
+    * with table resolution). A changed corpus therefore changes the
     * artifact path; superseded artifacts are orphaned, not overwritten
     * (GC of the index dir is the deployment's retention job).
     */
@@ -236,16 +237,12 @@ private[graft] object FrameCache {
     val conf = s.sparkContext.hadoopConfiguration
     val dirs = key.split(':').filter(_.startsWith("/")).sorted
     if (dirs.isEmpty) return ""
-    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
-    dirs.foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(conf)
-      def stat(st: org.apache.hadoop.fs.FileStatus, depth: Int): Unit =
-        if (st.isDirectory && depth < 2)
-          fs.listStatus(st.getPath).sortBy(_.getPath.getName)
-            .foreach(stat(_, depth + 1))
-        else lines += s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}"
-      if (fs.exists(p)) stat(fs.getFileStatus(p), 0) else lines += s"$d:absent"
+    val lines = dirs.toSeq.flatMap { d =>
+      Tables.fileStatuses(conf, d) match {
+        case Some(sts) => sts.map(st =>
+          s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
+        case None => Seq(s"$d:absent")
+      }
     }
     java.security.MessageDigest.getInstance("MD5")
       .digest(lines.mkString("\n").getBytes("UTF-8"))
@@ -954,6 +951,22 @@ private[graft] object FrameCache {
   private val memBuildLocks =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Object]()
 
+  /** Default [[warmConcurrently]] pool size for `cores` executor cores:
+    * the warm calls NEST (Bench parallelizes 4 families, each family's
+    * warmStages parallelizes its loads), so a fixed 4 meant up to 16
+    * concurrent stage jobs regardless of SPARK_GRAFT_CPUS. Clamped to
+    * [2, 4] by cores/8: 32 cores keeps the measured-good 4, an 8-core
+    * run drops to 2 (≤4 nested threads). `cores` defaults to the active
+    * session's configured cores (the N of `local[N]`), else the box's.
+    */
+  private[graft] def warmPoolSize(cores: Int = sessionCores): Int =
+    math.max(2, math.min(4, cores / 8))
+
+  private def sessionCores: Int =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext.defaultParallelism)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
   /** Run independent warm-up thunks concurrently on a bounded pool and
     * propagate the first failure (r18 — the bench's `_stage` warm-up
     * loaded ~25 staged artifacts strictly sequentially; the loads are
@@ -965,14 +978,7 @@ private[graft] object FrameCache {
     */
   private[graft] def warmConcurrently(thunks: Seq[() => Unit],
       par: Int = -1): Unit = {
-    // default pool size derived from the box (r19 advice): the warm
-    // calls NEST (Bench parallelizes 4 families, each family's
-    // warmStages parallelizes its loads), so a fixed 4 meant up to 16
-    // concurrent stage jobs regardless of SPARK_GRAFT_CPUS. clamp to
-    // [2, 4] by cores/8: 32 cores keeps today's measured-good 4,
-    // an 8-core driver run drops to 2 (≤4 nested threads).
-    val n = if (par > 0) par
-      else math.max(2, math.min(4, Runtime.getRuntime.availableProcessors / 8))
+    val n = if (par > 0) par else warmPoolSize()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
     try {
       // completion-service drain (r19 advice): invokeAll waited for ALL

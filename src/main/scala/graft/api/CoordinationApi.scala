@@ -43,6 +43,13 @@ final class CoordinationApi(spark: SparkSession, sfDir: String,
 
   // ---- Write path (changelog append) -------------------------------------
 
+  /** The changelog's physical ts type, from the session's kept table
+    * schema ([[graft.Tables.schemaOf]]): appends write the same type and
+    * do not invalidate it, so a mutation reads no footer.
+    */
+  private def physicalTsType: org.apache.spark.sql.types.DataType =
+    Tables.schemaOf(spark, s"$sfDir/events.parquet")("ts").dataType
+
   /** The write-side seam: `Storage.put/update/delete`, `join`, `leave`
     * and CAS claims in the reference are WRITES; here the changelog IS
     * the write path, so a mutation is one well-formed appended row and
@@ -67,14 +74,6 @@ final class CoordinationApi(spark: SparkSession, sfDir: String,
     * −9..−1 digit class, which replays as PUT — so `update` requires
     * value ≥ 0.
     */
-  /** The changelog's physical ts type, footer-read ONCE per instance —
-    * it is invariant for the instance's lifetime (appends write the
-    * same type), and re-reading the footer per append would be the
-    * per-mutation-I/O pattern the event-id counter seeding removed.
-    */
-  private lazy val physicalTsType: org.apache.spark.sql.types.DataType =
-    spark.read.parquet(s"$sfDir/events.parquet").schema("ts").dataType
-
   def append(namespace: String, key: Long, op: String, value: Double,
       ts: java.sql.Timestamp): Long = {
     val digit = op match {

@@ -2029,13 +2029,18 @@ object Analytics {
     * B53's body after its one corpus-scale groupBy, shared with the A44
     * streaming twin (whose counts come from the complete-mode sink).
     */
-  private[graft] def keySkewRows(counts: DataFrame): DataFrame =
-    counts.groupBy(length(bin(col("cnt"))).as("bucket"))
+  private[graft] def keySkewRows(counts: DataFrame): DataFrame = {
+    val hist = counts.groupBy(length(bin(col("cnt"))).as("bucket"))
       .agg(count(lit(1)).as("n_keys"), sum(col("cnt")).as("n_rows"),
         min(col("cnt")).as("min_cnt"), max(col("cnt")).as("max_cnt"))
-      .withColumn("share", col("n_rows").cast("double")
-        / sum(col("n_rows")).over(Window.partitionBy()))
+    // the grand total as a one-row scalar broadcast back onto the
+    // ≤ 64 buckets, not a single-partition window
+    val total = hist.agg(sum(col("n_rows")).as("total_rows"))
+    hist.crossJoin(broadcast(total))
+      .withColumn("share", col("n_rows").cast("double") / col("total_rows"))
+      .drop("total_rows")
       .orderBy(col("bucket"))
+  }
 
   val eventsKeySkew = QueryDef.oracled(
     "events_key_skew", keySkewOracle) { (s, d) =>

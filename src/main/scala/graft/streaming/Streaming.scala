@@ -170,22 +170,14 @@ object Streaming {
     p.toString
   }
 
-  // footer-read schema per source path, cached — the streaming source
-  // needs an explicit schema and re-reading the footer on every query
-  // construction is repeated driver IO for a constant
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
-
-  private def parquetSchema(s: SparkSession, path: String) =
-    schemaCache.computeIfAbsent(path, p => s.read.parquet(p).schema)
-
   /** File-source stream of the events changelog (ts nanos → micros,
-    * matching Tables.events).
+    * matching Tables.events). A file source needs an explicit schema;
+    * every stream source here takes it from [[Tables.schemaOf]], the
+    * batch loaders' per-session cache.
     */
   private def eventStream(s: SparkSession, d: String): DataFrame = {
     val path = s"$d/events.parquet"
-    val raw = s.readStream.schema(parquetSchema(s, path))
+    val raw = s.readStream.schema(Tables.schemaOf(s, path))
       .parquet(symlinkedDir(path, "events.parquet"))
     Tables.withMicroTs(raw)
   }
@@ -704,7 +696,7 @@ object Streaming {
       |GROUP BY 1 ORDER BY keeper_doc_id""".stripMargin) { (s, d) =>
     import s.implicits._
     val path = s"$d/documents.parquet"
-    val docs = s.readStream.schema(parquetSchema(s, path))
+    val docs = s.readStream.schema(Tables.schemaOf(s, path))
       .parquet(symlinkedDir(path, "documents.parquet"))
       // ingest-spread (see stream_dedup_minhash): normalize+md5 of the
       // full text runs wide instead of on the one scan partition
@@ -1196,7 +1188,7 @@ object Streaming {
     "stream_dedup_minhash", graft.queries.Dedup.jaccard08OracleSql) { (s, d) =>
     import s.implicits._
     val path = s"$d/documents.parquet"
-    val banded = s.readStream.schema(parquetSchema(s, path))
+    val banded = s.readStream.schema(Tables.schemaOf(s, path))
       .parquet(symlinkedDir(path, "documents.parquet"))
       // the local single-row-group file arrives as one scan partition;
       // fan the micro-batch out BEFORE the tokenize/shingle/minhash
@@ -1604,7 +1596,7 @@ object Streaming {
     import s.implicits._
     val chrome = graft.queries.TextAnalysis.chromeGrams(s, d)
     val path = s"$d/documents.parquet"
-    val toks = s.readStream.schema(parquetSchema(s, path))
+    val toks = s.readStream.schema(Tables.schemaOf(s, path))
       .parquet(symlinkedDir(path, "documents.parquet"))
       // ingest-spread: the tokenize kernel is ∝ corpus bytes
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
@@ -1718,7 +1710,7 @@ object Streaming {
       |FROM base b LEFT JOIN k USING (doc_id)
       |ORDER BY b.doc_id""".stripMargin) { (s, d) =>
     val path = s"$d/documents.parquet"
-    runCorpusIngest(s, s.readStream.schema(parquetSchema(s, path))
+    runCorpusIngest(s, s.readStream.schema(Tables.schemaOf(s, path))
       .parquet(symlinkedDir(path, "documents.parquet")),
       qualityMin, trainPct, valPct)
   }
@@ -1837,7 +1829,7 @@ object Streaming {
       |ORDER BY d.doc_id""".stripMargin) { (s, d) =>
     val path = s"$d/documents.parquet"
     runOovFeed(s,
-      s.readStream.schema(parquetSchema(s, path))
+      s.readStream.schema(Tables.schemaOf(s, path))
         .parquet(symlinkedDir(path, "documents.parquet")),
       graft.queries.TextAnalysis.topVocabRow(s, d))
   }
@@ -2337,7 +2329,7 @@ object Streaming {
     def norm(c: org.apache.spark.sql.Column) =
       md5(trim(regexp_replace(lower(c), "[ \\t\\n\\f\\r]+", " ")))
     val path = s"$d/documents.parquet"
-    val docs = s.readStream.schema(parquetSchema(s, path))
+    val docs = s.readStream.schema(Tables.schemaOf(s, path))
       .parquet(symlinkedDir(path, "documents.parquet"))
       // ingest-spread: normalize+md5 runs wide (the A14 note)
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
@@ -2431,7 +2423,7 @@ object Streaming {
     "stream_corpus_pack", graft.queries.TextAnalysis.corpusPackOracle) { (s, d) =>
     import s.implicits._
     val path = s"$d/documents.parquet"
-    val docs = s.readStream.schema(parquetSchema(s, path))
+    val docs = s.readStream.schema(Tables.schemaOf(s, path))
       .parquet(symlinkedDir(path, "documents.parquet"))
       // ingest-spread: tokenize + fingerprint run wide (A14's note)
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
@@ -2535,7 +2527,7 @@ object Streaming {
     val path = s"$d/embeddings.parquet"
     val Sim = graft.queries.Similarity
     runAnnProbe(s,
-      s.readStream.schema(parquetSchema(s, path))
+      s.readStream.schema(Tables.schemaOf(s, path))
         .parquet(symlinkedDir(path, "embeddings.parquet"))
         .filter(col("vec_id") < Sim.NQueries), d)
   }
@@ -2682,7 +2674,7 @@ object Streaming {
   val annAdc = QueryDef.rowsOnly("stream_ann_adc") { (s, d) =>
     val path = s"$d/embeddings.parquet"
     runAnnAdc(s,
-      s.readStream.schema(parquetSchema(s, path))
+      s.readStream.schema(Tables.schemaOf(s, path))
         .parquet(symlinkedDir(path, "embeddings.parquet"))
         .filter(col("vec_id") < graft.queries.Similarity.NQueries), d)
   }
@@ -2717,7 +2709,7 @@ object Streaming {
   val annIvfPq = QueryDef.rowsOnly("stream_ann_ivfpq") { (s, d) =>
     val path = s"$d/embeddings.parquet"
     runAnnIvfPq(s,
-      s.readStream.schema(parquetSchema(s, path))
+      s.readStream.schema(Tables.schemaOf(s, path))
         .parquet(symlinkedDir(path, "embeddings.parquet"))
         .filter(col("vec_id") < graft.queries.Similarity.NQueries), d)
   }
@@ -2780,7 +2772,7 @@ object Streaming {
   val annIndexUpsert = QueryDef.rowsOnly("stream_ann_index_upsert") { (s, d) =>
     val path = s"$d/embeddings.parquet"
     runAnnIndexUpsert(s,
-      s.readStream.schema(parquetSchema(s, path))
+      s.readStream.schema(Tables.schemaOf(s, path))
         .parquet(symlinkedDir(path, "embeddings.parquet"))
         .filter(pmod(col("vec_id"), lit(5)) === 0), d)
   }
@@ -2852,7 +2844,7 @@ object Streaming {
   val annCodesUpsert = QueryDef.rowsOnly("stream_ann_codes_upsert") { (s, d) =>
     val path = s"$d/embeddings.parquet"
     runAnnCodesUpsert(s,
-      s.readStream.schema(parquetSchema(s, path))
+      s.readStream.schema(Tables.schemaOf(s, path))
         .parquet(symlinkedDir(path, "embeddings.parquet"))
         .filter(pmod(col("vec_id"), lit(5)) === 0), d)
   }

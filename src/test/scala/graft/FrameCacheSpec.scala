@@ -770,4 +770,21 @@ class FrameCacheSpec extends AnyFunSuite {
     }
     assert(stopped.get, "the blocked thunk was not cancelled")
   }
+
+  test("warmConcurrently: the default pool is sized from the session's " +
+      "configured cores") {
+    // clamp to [2, 4] by cores/8
+    assert(Seq(1, 4, 8, 16, 24, 32, 64).map(FrameCache.warmPoolSize(_)) ==
+      Seq(2, 2, 2, 2, 3, 4, 4))
+    // the default reads local[N] of the live session, not the box
+    val n = FrameCache.warmPoolSize(spark.sparkContext.defaultParallelism)
+    assert(FrameCache.warmPoolSize() == n)
+    // a fixed pool starts one thread per submission up to its size, so
+    // 4n thunks run on exactly n distinct threads
+    val threads = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    FrameCache.warmConcurrently(Seq.fill(4 * n)(() => {
+      threads.add(Thread.currentThread().getName); ()
+    }))
+    assert(threads.size == n)
+  }
 }

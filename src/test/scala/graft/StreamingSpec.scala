@@ -1636,4 +1636,31 @@ class StreamingSpec extends AnyFunSuite {
     assert(single.nonEmpty)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(srcDir))
   }
+
+  test("a changelog rewritten in place is re-resolved by the stream twins") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val dir = Files.createTempDirectory("graft_rewritten_log").toString
+    val path = s"$dir/events.parquet"
+    def rows(name: String) =
+      SparkEntry.queries(name)(spark, dir).collect().map(_.toSeq).toSet
+    try {
+      // first vintage: ts as INT64 nanos, what a TIMESTAMP(NANOS) log
+      // reads as under nanosAsLong
+      Tables.events(spark, sf).withColumn("ts", unix_micros(col("ts")) * 1000L)
+        .coalesce(1).write.parquet(s"$dir/v1")
+      val part = Files.list(Paths.get(s"$dir/v1")).toArray.map(_.toString)
+        .filter(p => p.endsWith(".parquet") && !p.contains("/.")).head
+      Files.move(Paths.get(part), Paths.get(path))
+      val batch = rows("events_hourly")
+      assert(batch.nonEmpty && rows("stream_hourly_rollup") == batch)
+      // rewritten at the same path as the generator's TIMESTAMP_NTZ
+      // micros: same answers, so the stream must not keep the old ts type
+      Files.copy(Paths.get(s"$sf/events.parquet"), Paths.get(path),
+        StandardCopyOption.REPLACE_EXISTING)
+      assert(rows("events_hourly") == batch)
+      assert(rows("stream_hourly_rollup") == batch,
+        "stream twin read the rewritten log with its old schema")
+    } finally
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
 }
