@@ -45,23 +45,6 @@ private[graft] object FrameCache {
   // — and different VERSIONS of one regenerated corpus — never collide.
   private[graft] val IndexDirConf = "spark.graft.index.dir"
 
-  /** The user-scoped default store Bench falls back to and gate.sh
-    * exports — `<tmpdir>/graft_index_<user>`, NOT a fixed world-
-    * writable path another local user could pre-create (r16 advice).
-    * TMPDIR is consulted BEFORE java.io.tmpdir (r17 advice: gate.sh
-    * expands `${TMPDIR:-/tmp}` while the JVM property ignores the env
-    * var — on a box with TMPDIR set the two paths diverged and the
-    * env-less bench silently cold-built). The sidecar validation on
-    * load is format defense only; the real squatting defense is
-    * [[verifyStore]]'s ownership check (a sidecar is forgeable — it
-    * is just the public version constant plus a schema json).
-    */
-  private[graft] def defaultIndexDir: String =
-    sys.env.get("TMPDIR").map(_.trim).filter(_.nonEmpty)
-      .getOrElse(sys.props.getOrElse("java.io.tmpdir", "/tmp"))
-      .stripSuffix("/") +
-      "/graft_index_" + sys.props.getOrElse("user.name", "unknown")
-
   /** Store-directory trust gate, run once per (store path) per JVM
     * before any artifact is read from or written under it: create a
     * missing store 0700 (owner-only — nobody else can pre-plant or
@@ -69,9 +52,9 @@ private[graft] object FrameCache {
     * owned by a different user (r17 advice: the _GRAFT_META sidecar
     * validates format, not provenance — another local user could
     * pre-create `/tmp/graft_index_<victim>` holding marker-blessed,
-    * valid-sidecar artifacts and the env-less bench would serve
-    * attacker-controlled data; ownership, not sidecar format, is the
-    * squatting defense). Filesystems that do not report owners
+    * valid-sidecar artifacts and any session pointed at that store
+    * would serve attacker-controlled data; ownership, not sidecar
+    * format, is the squatting defense). Filesystems that do not report owners
     * (getOwner empty — some object-store connectors) skip the check:
     * there the store is an access-controlled bucket, and provenance
     * is the bucket policy's job.
@@ -952,12 +935,13 @@ private[graft] object FrameCache {
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Object]()
 
   /** Default [[warmConcurrently]] pool size for `cores` executor cores:
-    * the warm calls NEST (Bench parallelizes 4 families, each family's
-    * warmStages parallelizes its loads), so a fixed 4 meant up to 16
-    * concurrent stage jobs regardless of SPARK_GRAFT_CPUS. Clamped to
-    * [2, 4] by cores/8: 32 cores keeps the measured-good 4, an 8-core
-    * run drops to 2 (≤4 nested threads). `cores` defaults to the active
-    * session's configured cores (the N of `local[N]`), else the box's.
+    * the warm calls NEST (a caller warms several families at once,
+    * each family's warmStages parallelizes its loads), so a fixed 4
+    * meant up to 16 concurrent stage jobs regardless of
+    * SPARK_GRAFT_CPUS. Clamped to [2, 4] by cores/8: 32 cores keeps the
+    * measured-good 4, an 8-core run drops to 2 (≤4 nested threads).
+    * `cores` defaults to the active session's configured cores (the N
+    * of `local[N]`), else the box's.
     */
   private[graft] def warmPoolSize(cores: Int = sessionCores): Int =
     math.max(2, math.min(4, cores / 8))

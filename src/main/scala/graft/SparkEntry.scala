@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
-  private def registry: Seq[QueryDef] =
+  private[graft] def registry: Seq[QueryDef] =
     graft.queries.Analytics.all ++ graft.queries.Coordination.all ++
       graft.queries.TextAnalysis.all ++ graft.queries.Dedup.all ++
       graft.queries.Similarity.all ++ graft.streaming.Streaming.all ++

@@ -29,7 +29,6 @@ object Coordination {
     * instance the driver gate runs. Default = 1h (SURVEY §3).
     */
   val DefaultTtlMicros = 3600L * 1000000L
-  val TtlMicros = DefaultTtlMicros              // compat alias
   /** Default keyset-watcher poll period (`plugin.cassandra.lr.pull
     * .period.ms` analog): one day of event time.
     */

@@ -1266,11 +1266,9 @@ object Dedup {
 
   /** Materialize every shared FrameCache stage the dedup family reads
     * (shingle frame, DF-capped inverted index, converged cluster map) —
-    * the staging-table warm-up a warehouse pays once. Bench calls this
-    * BEFORE the timed loop and reports it as its own line item, so the
-    * first-touch cost stops wandering into whichever alphabetically-
-    * early query happens to trigger it (round-5 verdict: the r4↔r5
-    * per-query swings came from exactly this attribution drift).
+    * the staging-table warm-up a warehouse pays once. A timing harness
+    * calls this BEFORE its timed loop, so the first-touch cost does not
+    * land in whichever query happens to trigger it first.
     */
   private[graft] def warmStages(s: SparkSession, d: String): Unit =
     // concurrent loads (r18): see FrameCache.warmConcurrently — cold

@@ -293,13 +293,6 @@ object Multimodal {
       .orderBy(col("doc_id"))
   }
 
-  /** Materialize F5's staged cluster map (the bench warms it off the
-    * measured path, under `_stage`, like the dedup family's maps).
-    */
-  private[graft] def warmStages(s: org.apache.spark.sql.SparkSession,
-      d: String): Unit =
-    phashClusterLabels(s, d).queryExecution.toRdd.count()
-
   // --- F6: image-text pairing table -----------------------------------------
   // The LAION-style multimodal training-pair builder: each media asset
   // joined to its caption's text stats, with the pair-admission

@@ -1320,25 +1320,6 @@ object Similarity {
         Seq("vec_id")))
   }
 
-  /** Materialize the staged PQ + IVFADC indexes (bench warms these off
-    * the measured path, under `_stage`).
-    */
-  private[graft] def warmStages(s: SparkSession, d: String): Unit =
-    // concurrent loads (r18): see FrameCache.warmConcurrently — cold
-    // chains (codes → codebook, ivf artifacts → trainedCentroids'
-    // blocking memo) build once; warm mode is 9 independent loads
-    graft.FrameCache.warmConcurrently(Seq(
-      () => pqCodebook(s, d).queryExecution.toRdd.count(): Unit,
-      () => pqCodes(s, d).queryExecution.toRdd.count(): Unit,
-      () => ivfPqBook(s, d).queryExecution.toRdd.count(): Unit,
-      () => ivfPqCodes(s, d).queryExecution.toRdd.count(): Unit,
-      () => ivfLists(s, d).queryExecution.toRdd.count(): Unit,
-      () => graphPairs(s, d).queryExecution.toRdd.count(): Unit,
-      () => exactAnchor(s, d).queryExecution.toRdd.count(): Unit,
-      () => exactMipAnchor(s, d).queryExecution.toRdd.count(): Unit,
-      () => demoGenerationStore(s, d): Unit)) // E27 demo store (setup)
-    // the lexical index is warmed by TextAnalysis.warmStages (its owner)
-
   /** The E10 ADC probe pipeline over an ARBITRARY (query_id, qe) frame,
     * with the staged artifacts passed in — shared verbatim by batch
     * knn_pq and the A58 streaming twin (whose foreachBatch feeds each

@@ -601,9 +601,8 @@ object TextAnalysis {
     }
 
   /** Materialize C13's staged count tables, C16's distinct doc-bigram
-    * frame, and the C15/E18 lexical index (the bench warms these off
-    * the measured path and reports them under `_stage`, like the dedup
-    * family's shingle stages).
+    * frame, and the C15/E18 lexical index (a timing harness warms these
+    * off the measured path, like the dedup family's shingle stages).
     */
   private[graft] def warmStages(s: SparkSession, d: String): Unit =
     // concurrent loads (r18): each artifact is its own parquet scan in

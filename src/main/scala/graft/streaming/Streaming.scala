@@ -3,6 +3,7 @@ package graft.streaming
 import scala.jdk.CollectionConverters._
 
 import graft.{QueryDef, Tables}
+import graft.queries.Coordination.DefaultTtlMicros
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -85,8 +86,6 @@ case class StripRow(doc_id: Long, n_tokens: Long, n_removed: Long,
 
 object Streaming {
 
-  private val TtlMicros = 3600L * 1000000L
-
   /** Event-time state-retention horizon for the keyed stateful ops: a
     * key silent for this long has its state dropped (timeout handlers
     * emit nothing, so a bounded replay — where no key is ever silent
@@ -113,7 +112,7 @@ object Streaming {
     */
   private[graft] def leaderFold(resource: String, sorted: Seq[KeyedEvent],
       st0: Option[LeaderState],
-      ttlUs: Long = TtlMicros): (Seq[LeaderChange], Option[LeaderState]) = {
+      ttlUs: Long = DefaultTtlMicros): (Seq[LeaderChange], Option[LeaderState]) = {
     val out = scala.collection.mutable.ArrayBuffer.empty[LeaderChange]
     var st = st0
     sorted.foreach { e =>
@@ -906,7 +905,7 @@ object Streaming {
   private[graft] def runGroupFeed(s: SparkSession,
       typed: Dataset[KeyedEvent]): DataFrame = {
     import s.implicits._
-    val ttl = graft.queries.Coordination.TtlMicros
+    val ttl = DefaultTtlMicros
     val feed = typed
       .withWatermark("ts", "0 seconds")
       .groupByKey(e => (e.namespace, e.key))

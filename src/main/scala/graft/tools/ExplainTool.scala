@@ -1,27 +1,26 @@
 package graft.tools
 import graft._
-/** Dev tool: print the formatted physical plan (and optionally time) of
-  * selected SparkEntry queries at a given SF dir.
+/** Dev tool: for each named SparkEntry query at an SF dir, print the
+  * formatted physical plan, time one `collect()`, then print the final
+  * adaptive plan (which exchanges AQE actually materialized vs reused —
+  * the static plan repeats shared subtrees).
+  *
+  * Usage: runMain graft.tools.ExplainTool <sfDir> <query names...>
+  * A plan file is `ExplainTool <sfDir> <q> > plans/<dir>/<q>_<tag>.txt`.
   */
 object ExplainTool {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val sfDir = args(0)
     val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-    args.foreach { name =>
+    try args.drop(1).foreach { name =>
       println(s"===== $name =====")
       val df = SparkEntry.queries(name)(spark, sfDir)
       df.explain("formatted")
       val t0 = System.nanoTime()
-      val n = df.count()
-      println(f"[time] $name ${(System.nanoTime()-t0)/1e9}%.2f s, $n rows")
-      // post-execution adaptive plan: shows which exchanges AQE actually
-      // materialized vs reused (the static plan repeats shared subtrees)
-      if (sys.env.contains("SPARK_GRAFT_EXPLAIN_FINAL")) {
-        df.collect()
-        println(s"===== $name (final adaptive plan) =====")
-        println(df.queryExecution.executedPlan.toString)
-      }
-    }
-    spark.stop()
+      val n = df.collect().length
+      println(f"[time] $name ${(System.nanoTime() - t0) / 1e9}%.2f s, $n rows")
+      println(s"===== $name (final adaptive plan) =====")
+      println(df.queryExecution.executedPlan.toString)
+    } finally spark.stop()
   }
 }

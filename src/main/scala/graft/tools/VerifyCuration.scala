@@ -1,8 +1,6 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
-import graft.GraftSession
+import graft.Verify
 
 /** Parameterized-knob correctness dump for the streaming curation
   * cascade: stream_corpus_ingest at a NON-default quality gate and
@@ -19,36 +17,12 @@ import graft.GraftSession
   */
 object VerifyCuration {
   def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val outDir = args(1)
     val qualityMin = if (args.length > 2) args(2).toDouble else 0.75
     val trainPct = if (args.length > 3) args(3).toInt else 90
     val valPct = if (args.length > 4) args(4).toInt else 5
-    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-    new java.io.File(outDir).mkdirs()
-    val defs = Seq(
-      graft.streaming.Streaming.corpusIngestWith(qualityMin, trainPct, valPct))
-    defs.foreach { qd =>
-      try qd.fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/${qd.name}")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify-curation] ${qd.name} failed: ${e.getMessage}")
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(s"$outDir/${qd.name}"))
-      }
-    }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = defs.flatMap(qd => qd.oracle.map(sql => s"${q(qd.name)}: ${q(sql)}"))
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    val spark = Verify.session()
+    try Verify.dump(spark, args(0), args(1), Seq(
+      graft.streaming.Streaming.corpusIngestWith(qualityMin, trainPct, valPct)))
+    finally spark.stop()
   }
 }

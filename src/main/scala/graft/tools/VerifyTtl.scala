@@ -1,8 +1,6 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
-import graft.GraftSession
+import graft.Verify
 
 /** Parameterized-config correctness dump: the TTL-sensitive A-family
   * queries and the poll-period keyset feed at a NON-default TTL / pull
@@ -18,35 +16,12 @@ import graft.GraftSession
   */
 object VerifyTtl {
   def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val outDir = args(1)
     val ttlUs = (if (args.length > 2) args(2).toLong else 1800000L) * 1000L
     val pullUs = (if (args.length > 3) args(3).toLong else 43200000L) * 1000L
-    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-    new java.io.File(outDir).mkdirs()
-    val defs = graft.queries.Coordination.allTtl(ttlUs) :+
-      graft.queries.Coordination.keysetChangeFeedPeriod(pullUs)
-    defs.foreach { qd =>
-      try qd.fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/${qd.name}")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify-ttl] ${qd.name} failed: ${e.getMessage}")
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(s"$outDir/${qd.name}"))
-      }
-    }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = defs.flatMap(qd => qd.oracle.map(sql => s"${q(qd.name)}: ${q(sql)}"))
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    val spark = Verify.session()
+    try Verify.dump(spark, args(0), args(1),
+      graft.queries.Coordination.allTtl(ttlUs) :+
+        graft.queries.Coordination.keysetChangeFeedPeriod(pullUs))
+    finally spark.stop()
   }
 }

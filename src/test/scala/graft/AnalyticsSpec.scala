@@ -1,11 +1,37 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.IntegerType
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
   lazy val spark: SparkSession = GraftSession.get("4")
   val sf: String = "/root/testdata/sf0.001"
+
+  /** `df` split into `n` consecutive chunks of its `order`, with the
+    * membership `ntile(n).over(Window.orderBy(order))` gives — the
+    * first N mod n chunks hold one extra row — but numbered by a
+    * global sort plus `zipWithIndex`, not an unpartitioned window, so
+    * a single-partition window in operator code stands out in the log.
+    */
+  def ntileChunks(df: DataFrame, n: Int, order: Seq[Column]): Seq[DataFrame] = {
+    val sorted = df.orderBy(order: _*)
+    val total = sorted.count()
+    val (base, extra) = (total / n, total % n)
+    val big = extra * (base + 1) // rows in the first `extra` chunks
+    def chunk(i: Long): Int =
+      (if (i < big) i / (base + 1) else extra + (i - big) / base).toInt + 1
+    val numbered = df.sparkSession.createDataFrame(
+      sorted.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ chunk(i)) },
+      sorted.schema.add("q", IntegerType, nullable = false))
+    val sizes = numbered.groupBy("q").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val want = (1 to n).map(q => q -> (base + (if (q <= extra) 1 else 0)))
+      .filter(_._2 > 0).toMap
+    assert(sizes == want, s"chunk sizes $sizes differ from ntile's $want")
+    (1 to n).map(q => numbered.filter(col("q") === q).drop("q"))
+  }
 }
 
 class AnalyticsSpec extends AnyFunSuite {

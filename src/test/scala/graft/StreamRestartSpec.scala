@@ -75,10 +75,7 @@ class StreamRestartSpec extends AnyFunSuite {
     val all = Tables.events(spark, sf)
       .select(col("event_type").as("namespace"), col("user_id").as("key"),
         col("ts"), col("event_id"), col("value"))
-      .withColumn("q", ntile(4).over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("ts"), col("event_id"))))
-    val chunks = (1 to 4).map(i => all.filter(col("q") === i).drop("q"))
+    val chunks = ntileChunks(all, 4, Seq(col("ts"), col("event_id")))
     val (srcDir, holdDir) = stagedChunks(chunks)
     val root = java.nio.file.Files
       .createTempDirectory("graft_restart_ckpt").toString
@@ -171,10 +168,7 @@ class StreamRestartSpec extends AnyFunSuite {
     // windows STRADDLE the restart boundary — their counts are only
     // right if the window state (and the watermark) restore.
     val all = Tables.events(spark, sf)
-      .withColumn("q", ntile(4).over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("ts"), col("event_id"))))
-    val chunks = (1 to 4).map(i => all.filter(col("q") === i).drop("q"))
+    val chunks = ntileChunks(all, 4, Seq(col("ts"), col("event_id")))
     val (srcDir, holdDir) = stagedChunks(chunks)
     val root = java.nio.file.Files
       .createTempDirectory("graft_restart_ckpt").toString
@@ -236,9 +230,7 @@ class StreamRestartSpec extends AnyFunSuite {
     val Sim = graft.queries.Similarity
     val arriving = spark.read.parquet(s"$sf/embeddings.parquet")
       .filter(pmod(col("vec_id"), lit(5)) === 0)
-      .withColumn("q", ntile(4).over(
-        org.apache.spark.sql.expressions.Window.orderBy(col("vec_id"))))
-    val chunks = (1 to 4).map(i => arriving.filter(col("q") === i).drop("q"))
+    val chunks = ntileChunks(arriving, 4, Seq(col("vec_id")))
     val (srcDir, holdDir) = stagedChunks(chunks)
     val root = java.nio.file.Files
       .createTempDirectory("graft_restart_ckpt").toString

@@ -15,11 +15,8 @@ class StreamingSpec extends AnyFunSuite {
       nChunks: Int, order: Seq[org.apache.spark.sql.Column]): String = {
     val srcDir = java.nio.file.Files
       .createTempDirectory("graft_multibatch").toString
-    val chunked = df.withColumn("q", ntile(nChunks).over(
-      org.apache.spark.sql.expressions.Window.orderBy(order: _*)))
-    (1 to nChunks).foreach { i =>
-      chunked.filter(col("q") === i).drop("q").coalesce(1)
-        .write.mode("overwrite").parquet(s"$srcDir/f$i")
+    ntileChunks(df, nChunks, order).zip(1 to nChunks).foreach { case (chunk, i) =>
+      chunk.coalesce(1).write.mode("overwrite").parquet(s"$srcDir/f$i")
       java.nio.file.Files.list(java.nio.file.Paths.get(s"$srcDir/f$i"))
         .filter(_.toString.endsWith(".parquet")).forEach { f =>
           java.nio.file.Files.move(f,

@@ -1,16 +1,17 @@
 #!/usr/bin/env bash
-# CI-shaped round gate: the four checks a round must pass before it
-# closes. Mirrors the driver's per-round pipeline:
+# CI-shaped gate: the four checks a change must pass.
 #   1. sbt test                 (ScalaTest suite green)
-#   2. Verify + DuckDB compare  (every oracle-backed query bit-exact at sf0.01)
-#   3. Bench                    (record prints, parses as JSON, < 1920 chars)
-#   4. No stowaways             (every registered query has a SURVEY §2 row
-#                                and a committed BENCH_local.json entry)
-# Usage: tools/gate.sh   (from the repo root; ~10 min)
+#   2. Verify + DuckDB compare  (every query runs; every oracle-backed one
+#                                is bit-exact at sf0.01)
+#   3. perfbench unit tests     (the benchmark's own tests)
+#   4. No stowaways             (every query Verify wrote has a SURVEY §2 row)
+# The benchmark itself is `python3 perfbench/run.py` (see BENCHMARK.json).
+# Usage: tools/gate.sh   (from the repo root)
 set -uo pipefail
 cd "$(dirname "$0")/.."
 
 fail=0
+out=/tmp/gate_verify_out
 
 echo "=== gate 1/4: sbt test ==="
 if ! sbt -batch test 2>&1 | tail -4; then
@@ -18,103 +19,41 @@ if ! sbt -batch test 2>&1 | tail -4; then
 fi
 
 echo "=== gate 2/4: verify vs DuckDB oracles (sf0.01) ==="
-rm -rf /tmp/gate_verify_out
-if ! sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/gate_verify_out" \
-    2>&1 | grep -vE 'INFO|WARN' | tail -2; then
+rm -rf "$out"
+if ! sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $out" \
+    > /tmp/gate_verify.log 2>&1; then
   echo "GATE FAIL: Verify run"; fail=1
 fi
-if ! python3 tools/check_oracles.py /root/testdata/sf0.01 /tmp/gate_verify_out; then
+# a rows-only query has no oracle to fail, so a query that throws is
+# caught here: Verify reports it and removes its output directory
+if grep -E '^(\[error\] )?\[verify\] .* failed' /tmp/gate_verify.log; then
+  echo "GATE FAIL: queries failed in Verify"; fail=1
+fi
+if ! python3 tools/check_oracles.py /root/testdata/sf0.01 "$out"; then
   echo "GATE FAIL: oracle mismatch"; fail=1
 fi
 
-echo "=== gate 3/4: bench pair (sf0.1, two interleaved runs) ==="
-# Two full interleaved runs minutes apart; the committed BENCH_local.json
-# is refreshed ONLY via bench_refresh.py (per-query pair min), which
-# refuses contended/degraded boxes — round 7 shipped a 139 s noisy
-# artifact because a single ad-hoc run could overwrite it in place.
-#
-# Persistent staged artifacts (round 13): the gate benches with the
-# FrameCache index-dir enabled, cleared ONCE at gate start — run 1
-# pays the honest build-and-write, runs 2-3 LOAD the artifacts
-# (the production build-once model), and the per-run-min refresh rule
-# records the loaded `_stage` — the steady-state cost a deployment
-# actually pays per session.
-# user-scoped store — must match FrameCache.defaultIndexDir so the
-# driver's env-less per-round bench warm-loads the gate's artifacts
-export SPARK_GRAFT_INDEX_DIR="${TMPDIR:-/tmp}/graft_index_$(id -un)"
-rm -rf "$SPARK_GRAFT_INDEX_DIR"
-for i in 1 2; do
-  line=$(SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
-    SPARK_GRAFT_BENCH_OUT=/tmp/gate_bench_$i.json \
-    sbt -batch "runMain graft.Bench" 2>&1 | grep -F '{"metric"' | tail -1)
-  echo "$line"
-  if [ -z "$line" ]; then
-    echo "GATE FAIL: no bench record on stdout (run $i)"; fail=1
-  elif ! python3 -c "
-import json, sys
-rec = json.loads(sys.argv[1])
-assert rec['unit'] == 'sec' and rec['queries'], 'missing fields'
-bad = [k for k, v in rec['queries'].items() if v < 0]
-assert not bad, f'errored queries: {bad}'
-assert len(sys.argv[1]) <= 1930, f'record too long: {len(sys.argv[1])} chars'  # Bench.MaxLineChars
-print(f\"bench ok: total={rec['value']}s, {len(rec['queries'])} entries, {len(sys.argv[1])} chars\")
-" "$line"; then
-    echo "GATE FAIL: bench record invalid (run $i)"; fail=1
-  fi
-done
-refresh_ok=0
-if python3 tools/bench_refresh.py /tmp/gate_bench_1.json /tmp/gate_bench_2.json; then
-  refresh_ok=1
-else
-  # One automatic escalation: a contended pair (or genuinely grown
-  # staged work, which needs >= 3 stage-stable runs) gets a third
-  # interleaved run before the gate gives up — this was the manual
-  # recovery every refused pair ended in anyway, made self-sufficient.
-  echo "bench pair refused — running a third interleaved bench for confirmation"
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
-    SPARK_GRAFT_BENCH_OUT=/tmp/gate_bench_3.json \
-    sbt -batch "runMain graft.Bench" > /dev/null 2>&1
-  if python3 tools/bench_refresh.py /tmp/gate_bench_1.json \
-      /tmp/gate_bench_2.json /tmp/gate_bench_3.json; then
-    refresh_ok=1
-  else
-    echo "GATE FAIL: bench runs refused (variance or degraded box) — BENCH_local.json NOT refreshed"
-    fail=1
-  fi
+echo "=== gate 3/4: perfbench unit tests ==="
+if ! python3 -m unittest discover -s perfbench/tests; then
+  echo "GATE FAIL: perfbench tests"; fail=1
 fi
 
-echo "=== gate 4/4: no stowaway queries (round-10 D17 episode) ==="
-# A query registered in SparkEntry.queries after the bench refresh (or
-# without a SURVEY §2 row) ships un-audited — round 10's
-# dedup_winnow_pairs landed 4 minutes after the gated refresh at 27.8 s
-# unreviewed. The fresh bench run's full-precision artifact lists every
-# registered key; each must appear in SURVEY.md (backtick-quoted, the
-# §2 convention) and in the GIT-COMMITTED BENCH_local.json — comparing
-# against the working-tree copy would be self-defeating, since gate 3
-# just rewrote it to include every registered query. A key present in
-# the fresh refresh but absent at HEAD is reported as pending-commit
-# (pass) when this run's refresh succeeded, and as a stowaway (fail)
-# when it did not.
-git show HEAD:BENCH_local.json > /tmp/gate_bench_head.json 2>/dev/null \
-  || echo '{"queries":{}}' > /tmp/gate_bench_head.json
-if ! REFRESH_OK="$refresh_ok" python3 - <<'EOF'
-import json, os, sys
-keys = [k for k in json.load(open('/tmp/gate_bench_1.json'))['queries']
-        if not k.startswith('_')]
+echo "=== gate 4/4: no stowaway queries ==="
+# Every registered query Verify wrote an output directory for must have
+# a SURVEY.md row (backtick-quoted, the §2 convention) — a query
+# registered without one ships un-audited.
+if ! python3 - "$out" <<'EOF'
+import os, sys
+out = sys.argv[1]
+keys = sorted(d for d in os.listdir(out) if os.path.isdir(os.path.join(out, d)))
+if not keys:
+    print('no Verify output directories to check'); sys.exit(1)
 survey = open('SURVEY.md').read()
-head = set(json.load(open('/tmp/gate_bench_head.json'))['queries'])
-refresh_ok = os.environ.get('REFRESH_OK') == '1'
-missing_doc = [k for k in keys if f'`{k}`' not in survey]
-missing_head = [k for k in keys if k not in head]
-if missing_doc:
-    print('stowaway (no SURVEY row):', ', '.join(missing_doc))
-if missing_head and refresh_ok:
-    print('pending-commit (in this refresh, not yet at HEAD — commit '
-          'BENCH_local.json):', ', '.join(missing_head))
-elif missing_head:
-    print('stowaway (not in HEAD BENCH_local.json and no accepted refresh):',
-          ', '.join(missing_head))
-sys.exit(1 if (missing_doc or (missing_head and not refresh_ok)) else 0)
+missing = [k for k in keys if f'`{k}`' not in survey]
+if missing:
+    print('stowaway (no SURVEY row):', ', '.join(missing))
+print(f'{len(keys) - len(missing)}/{len(keys)} queries have a SURVEY row')
+sys.exit(1 if missing else 0)
 EOF
 then
   echo "GATE FAIL: stowaway queries"; fail=1
