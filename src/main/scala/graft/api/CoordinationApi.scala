@@ -1,7 +1,8 @@
 package graft.api
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.expressions.bound_long
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,8 +15,18 @@ import org.apache.spark.sql.functions._
   * lookups) instead of blocking on a live Cassandra session — same
   * information, warehouse-scale execution.
   *
-  * All methods are driver-light: point lookups push key predicates into
-  * the parquet scan; listing calls return unexecuted frames.
+  * All methods are driver-light: point reads return O(1) rows to the
+  * driver; listing calls return unexecuted frames.
+  *
+  * The key-parameterised reads (`fetch`, `firstWrite`, `fetchCas`,
+  * `isMember`) bind the key with [[graft.functions.expressions.BoundLong]]
+  * rather than a literal, so each read kind compiles its generated code
+  * once and every later key reuses it — the reference's prepared
+  * `SELECT … WHERE key=?` (CassandraListenerRegistry.scala:28-66). The
+  * trade-off: the key predicate is evaluated after the scan instead of
+  * being pushed into the parquet reader (the namespace predicate still
+  * is), so a point read skips only the row groups whose namespace
+  * statistics exclude it.
   */
 final class CoordinationApi(spark: SparkSession, sfDir: String,
     ttlMicros: Long = graft.queries.Coordination.DefaultTtlMicros,
@@ -151,8 +162,13 @@ final class CoordinationApi(spark: SparkSession, sfDir: String,
 
   // ---- Storage (KV) ------------------------------------------------------
 
+  /** One key's events; the key is bound, not inlined (class doc). */
+  private def keyEvents(namespace: String, key: Long): DataFrame =
+    events.filter(col("event_type") === namespace &&
+      col("user_id") === bound_long(key))
+
   private def pointLookup(namespace: String, key: Long, latest: Boolean): Option[Double] =
-    events.filter(col("event_type") === namespace && col("user_id") === key)
+    keyEvents(namespace, key)
       .orderBy(
         if (latest) col("ts").desc else col("ts").asc,
         if (latest) col("event_id").desc else col("event_id").asc)
@@ -160,9 +176,10 @@ final class CoordinationApi(spark: SparkSession, sfDir: String,
       .flatMap(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
 
   /** Storage.fetch: latest value for (namespace, key); None if absent
-    * (or if the winning write carried a null payload). The
-    * namespace+key predicates reach the parquet reader — a point lookup
-    * scans only matching row groups, not the table.
+    * (or if the winning write carried a null payload). Every key shares
+    * one compiled plan: the namespace predicate reaches the parquet
+    * reader, the bound key is filtered after the scan (see the class
+    * doc for the trade-off).
     */
   def fetch(namespace: String, key: Long): Option[Double] =
     pointLookup(namespace, key, latest = true)
@@ -176,53 +193,44 @@ final class CoordinationApi(spark: SparkSession, sfDir: String,
     latestPerKey(events.filter(col("event_type") === namespace))
       .select(col("user_id").as("key"), col("value"), col("ts"))
 
+  /** The A16 op digit of `value` ([[graft.queries.Coordination]]'s
+    * op-type convention): HALF_UP `round(value·100) % 10`, exactly
+    * Spark's/DuckDB's `round()`. Non-finite payloads take non-ANSI
+    * CAST's values (NaN → 0 = delete, ±Inf saturate to Long.Max/Min),
+    * decided before the cast so an ANSI cast never sees them.
+    */
+  private def opDigit: Column = {
+    val cents = col("value") * 100
+    when(isnan(col("value")), 0L)
+      .when(cents >= Long.MaxValue.toDouble, Long.MaxValue % 10)
+      .when(cents <= Long.MinValue.toDouble, Long.MinValue % 10)
+      .otherwise(round(cents).cast("long") % 10)
+  }
+
   /** Storage.fetch under the full put/update/delete CAS replay (A16 —
     * the op-type convention documented at
     * [[graft.queries.Coordination.kvStorageReplay]]): None if the key
     * was never PUT, or its last put/delete boundary is a DELETE
-    * (update-if-present writes cannot re-create a deleted key). The
-    * namespace+key predicates reach the parquet scan; the driver folds
-    * only that key's own events, in log order — the sequential
-    * readable twin of the distributed A16 query (spec-checked equal).
+    * (update-if-present writes cannot re-create a deleted key).
+    *
+    * One global aggregate over the key's non-null events (null payloads
+    * carry no op digit and fall out of the distributed replay too): the
+    * last put-or-delete (op ≤ 3, negatives included) is the boundary,
+    * and the key is present iff it exists and is not a delete. Its value
+    * is then the last event's: every event after the boundary is an
+    * update, and updates apply while the key is present. Two jobs and
+    * O(1) driver memory whatever the key's history length; spec-checked
+    * equal to the sequential fold and to the distributed replay.
     */
   def fetchCas(namespace: String, key: Long): Option[Double] = {
-    // stream the key's events to the driver in log order (FeedIter:
-    // bounded ranges, a fixed handful of jobs) — the fold needs them
-    // ordered, not resident at once, so a pathological single key's
-    // history stays off the driver heap
-    val rows = FeedIter.rows(events
-      .filter(col("event_type") === namespace && col("user_id") === key)
-      .select(unix_micros(col("ts")).as("us"), col("event_id"), col("value")),
-      col("us"), col("event_id"))
-    var present = false
-    var value = 0.0
-    rows.foreach { r =>
-      // null payloads carry no op digit — the distributed replay's
-      // round(NULL)%10 is NULL and falls out of every filter; skip
-      // identically here
-      if (!r.isNullAt(2)) {
-        val v = r.getDouble(2)
-        // HALF_UP on the double, exactly Spark's/DuckDB's round():
-        // math.round (floor(x+0.5)) would diverge on negative .5 cents.
-        // Non-finite payloads take non-ANSI CAST's values (NaN → 0 =
-        // delete, ±Inf saturate to Long.Min/Max) — BigDecimal would
-        // throw where the distributed twin has defined behavior
-        val op =
-          if (v.isNaN) 0L
-          else if (v * 100 >= Long.MaxValue.toDouble) Long.MaxValue % 10
-          else if (v * 100 <= Long.MinValue.toDouble) Long.MinValue % 10
-          else BigDecimal(v * 100)
-            .setScale(0, scala.math.BigDecimal.RoundingMode.HALF_UP)
-            .toLong % 10
-        op match {
-          case 0                   => present = false          // delete
-          case o if o <= 3         => present = true; value = v // put
-          case _ if present        => value = v                 // update applies
-          case _                   => ()                        // update ignored
-        }
-      }
-    }
-    if (present) Some(value) else None
+    val e = struct(unix_micros(col("ts")).as("us"), col("event_id"),
+      opDigit.as("op"), col("value"))
+    val r = keyEvents(namespace, key).filter(col("value").isNotNull)
+      .select(e.as("e"))
+      .agg(max(when(col("e.op") <= 3, col("e"))), max(col("e")))
+      .collect()(0)
+    if (r.isNullAt(0) || r.getStruct(0).getLong(2) == 0L) None
+    else Some(r.getStruct(1).getDouble(3))
   }
 
   /** Delete-aware compacted KV table for a namespace (A16 filtered). */
@@ -294,7 +302,8 @@ final class CoordinationApi(spark: SparkSession, sfDir: String,
   def isMember(group: String, member: Long): Boolean = {
     val row = events.agg(
       max(unix_micros(col("ts"))).as("log_end"),
-      max(when(col("event_type") === group && col("user_id") === member,
+      max(when(col("event_type") === group &&
+          col("user_id") === bound_long(member),
         unix_micros(col("ts")))).as("member_hb")).collect()(0)
     !row.isNullAt(0) && !row.isNullAt(1) &&
       row.getLong(1) >= row.getLong(0) - ttlMicros

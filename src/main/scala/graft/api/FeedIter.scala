@@ -2,8 +2,8 @@ package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 
-/** Bounded-memory feed iteration for the driver-side callback layer
-  * (ListenerRegistry replays, CoordinationApi.fetchCas): stream a
+/** Bounded-memory feed iteration for the driver-side callback layer —
+  * its only user is [[ListenerRegistry]]'s replays: stream a
   * feed's rows to the driver in order WITHOUT collecting it whole,
   * and without a job per shuffle partition either (`toLocalIterator`
   * runs one Spark job per partition; over a plain `orderBy` that is

@@ -53,7 +53,7 @@ trait StorageMutationListener {
   * delivery the poller would produce, including the compare-to-cached
   * dedup of KeySetWatcher.run. Delivery is necessarily driver-side
   * (callbacks are local closures) and bounded by the watched keys'
-  * feed rows — the point-API cost model of fetch/fetchCas.
+  * feed rows.
   */
 final class ListenerRegistry(api: CoordinationApi) {
 

@@ -1057,9 +1057,9 @@ object Similarity {
 
   /** A staged codebook frame collected to the literal-array form the
     * map-side argmin encode consumes: Seq indexed [m][cid] → centroid.
-    * Bounded collect (PqM × PqK = 256 rows) of an already-broadcast
-    * staged frame — the FAISS "load the index header" step, run once
-    * per encode-stage build.
+    * Bounded collect (PqM × PqK = 256 rows) of a staged frame — the
+    * FAISS "load the index header" step, run once per encode-stage
+    * build.
     */
   private def bookAsArrays(book: DataFrame): Seq[Seq[Seq[Float]]] = {
     val rows = book.select(col("m"), col("cid"), col("ce")).collect()
@@ -1110,7 +1110,7 @@ object Similarity {
           .map { case (sv, cid) => (m, cid, sv) }
       }
       import s.implicits._
-      broadcast(book.toDF("m", "cid", "ce"))
+      book.toDF("m", "cid", "ce")
     }
 
   /** Encoded corpus (vec_id, m, cid) — 16 bytes per vector at scale —
@@ -1183,7 +1183,7 @@ object Similarity {
       }
       val coarseRows = coarse.zipWithIndex.map { case (ce, l) => (-1, l, ce) }
       import s.implicits._
-      broadcast((coarseRows ++ book).toDF("m", "cid", "ce"))
+      (coarseRows ++ book).toDF("m", "cid", "ce")
     }
 
   /** Encoded corpus: (vec_id, list, m, cid) — the inverted lists with
@@ -1298,7 +1298,7 @@ object Similarity {
            |  m -> struct(m AS m, slice(qn, m * $PqSub + 1, $PqSub) AS qsv))"""
           .stripMargin)).as("p"))
       .select(col("query_id"), col("p.m").as("m"), col("p.qsv").as("qsv"))
-      .join(book.filter(col("m") >= 0), Seq("m"))
+      .join(broadcast(book.filter(col("m") >= 0)), Seq("m"))
       .select(col("query_id"), col("m"), col("cid"),
         F.dot_product(col("qsv"), col("ce")).as("part")))
     // probed-list codes only: the join on list IS the IVF pruning, and
@@ -1356,7 +1356,7 @@ object Similarity {
            |  m -> struct(m AS m, slice(qe, m * $PqSub + 1, $PqSub) AS qsv))"""
           .stripMargin)).as("p"))
       .select(col("query_id"), col("p.m").as("m"), col("p.qsv").as("qsv"))
-      .join(codebook, Seq("m"))
+      .join(broadcast(codebook), Seq("m"))
       .select(col("query_id"), col("m"), col("cid"),
         F.dot_product(col("qsv"), col("ce")).as("part")))
     codes.join(lut, Seq("m", "cid"))
@@ -1998,8 +1998,8 @@ object Similarity {
     }
 
   val recallReport = QueryDef.rowsOnly("knn_recall_report") { (s, d) =>
-    val exact = broadcast(exactAnchor(s, d))
-    val exactMip = broadcast(exactMipAnchor(s, d))
+    val exact = exactAnchor(s, d)
+    val exactMip = exactMipAnchor(s, d)
     // ONE union job (r19 — reverts r18's 4-thread driver pool, the
     // suite's worst r18 regression: driver bench 3.8 → 13.0 s under
     // load; 4 concurrent multi-stage foreground jobs amplified
@@ -2022,7 +2022,7 @@ object Similarity {
     def row(name: String, approx: DataFrame, anchor: DataFrame,
         anchorDenom: DataFrame): DataFrame = {
       val hits = approx.select(col("query_id"), col("neighbor_id"))
-        .join(anchor, Seq("query_id", "neighbor_id"))
+        .join(broadcast(anchor), Seq("query_id", "neighbor_id"))
       anchorDenom.crossJoin(hits.agg(count(lit(1)).as("n_hits")))
         .select(lit(name).as("method"), col("n_queries"), lit(K).as("k"),
           col("n_exact"), col("n_hits"),
@@ -2061,7 +2061,7 @@ object Similarity {
     (Seq(1, 2, 4, 8) :+ NProbe :+ NCentroids).distinct.sorted.filter(_ <= NCentroids)
   val probeSweep = QueryDef.rowsOnly("knn_probe_sweep") { (s, d) =>
     import s.implicits._
-    val exact = broadcast(exactAnchor(s, d))
+    val exact = exactAnchor(s, d)
     val denom = exact
       .agg(countDistinct(col("query_id")).as("n_queries"),
         count(lit(1)).as("n_exact"))
@@ -2104,8 +2104,8 @@ object Similarity {
       .orderBy(col("cosine").desc, col("vec_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val flagged = scored
-      .join(exact.select(col("query_id"),
-        col("neighbor_id").as("vec_id"), lit(true).as("is_hit")),
+      .join(broadcast(exact.select(col("query_id"),
+        col("neighbor_id").as("vec_id"), lit(true).as("is_hit"))),
         Seq("query_id", "vec_id"), "left")
     val withCnt = SweepProbes.foldLeft(flagged) { (df, p) =>
       df.withColumn(s"c$p", sum(when(col("lrk") <= p, 1L)).over(w)) }
@@ -2149,7 +2149,7 @@ object Similarity {
   private val SweepReranks =
     (Seq(8, 16, 32, 64) :+ PqRerank :+ 2 * PqRerank).distinct.sorted
   val rerankSweep = QueryDef.rowsOnly("knn_rerank_sweep") { (s, d) =>
-    val exact = broadcast(exactAnchor(s, d))
+    val exact = exactAnchor(s, d)
     val denom = exact
       .agg(countDistinct(col("query_id")).as("n_queries"),
         count(lit(1)).as("n_exact"))
@@ -2189,8 +2189,8 @@ object Similarity {
       .orderBy(col("cosine").desc, col("vec_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val flagged = scoredAll
-      .join(exact.select(col("query_id"),
-        col("neighbor_id").as("vec_id"), lit(true).as("is_hit")),
+      .join(broadcast(exact.select(col("query_id"),
+        col("neighbor_id").as("vec_id"), lit(true).as("is_hit"))),
         Seq("query_id", "vec_id"), "left")
     val withCnt = SweepReranks.foldLeft(flagged) { (df, r) =>
       df.withColumn(s"c$r", sum(when(col("crk") <= r, 1L)).over(w)) }

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.functions.{expressions => F}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1652,6 +1652,15 @@ object TextAnalysis {
       steps.reduce(_ unionByName _)
     }
 
+  /** The learned merges (sym_a, sym_b) in step order, read to the driver
+    * by C30/C31 to build their literal replace cascades: one row per
+    * step, so at most `BpeSteps` rows, and a learner that produced more
+    * fails loudly instead of growing the cascade.
+    */
+  private def learnedMerges(s: SparkSession, d: String): Array[Row] =
+    Analytics.boundedDriverCollect(bpeMergesFrame(s, d).orderBy(col("step"))
+      .select(col("sym_a"), col("sym_b")), BpeSteps, "BPE merge table (one row per step)")
+
   val bpeMerges = QueryDef.oracled(
     "text_bpe_merges", {
       val union = (1 to BpeSteps).map { i =>
@@ -1715,8 +1724,7 @@ object TextAnalysis {
     // bounded driver read of the staged 8-row merge table (the
     // Similarity codebook-collect class) — compiles the cascade into
     // one literal expression chain, no per-row join against the merges
-    val merges = bpeMergesFrame(s, d).orderBy(col("step"))
-      .select(col("sym_a"), col("sym_b")).collect()
+    val merges = learnedMerges(s, d)
     val enc = merges.foldLeft(
       "concat(' ', concat_ws(' ', regexp_extract_all(tok, '.', 0)), ' ')") {
       (e, r) =>
@@ -1767,8 +1775,7 @@ object TextAnalysis {
       |SELECT token, count(*) AS n_positions,
       |  CAST(sum(freq) AS BIGINT) AS n_occurrences
       |FROM u GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-    val merges = bpeMergesFrame(s, d).orderBy(col("step"))
-      .select(col("sym_a"), col("sym_b")).collect()
+    val merges = learnedMerges(s, d)
     val enc = merges.foldLeft("concat(' ', w, ' ')") { (e, r) =>
       val (a, b) = (r.getString(0), r.getString(1))
       s"replace(replace($e, ' $a $b ', ' $a$b '), ' $a $b ', ' $a$b ')"

@@ -1,6 +1,8 @@
 package graft
 
 import graft.api.CoordinationApi
+import org.apache.spark.JobCounter
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -47,7 +49,7 @@ class CoordinationApiSpec extends AnyFunSuite {
     assert(!api.isMember("click", 999999L))
   }
 
-  test("fetchCas sequential fold equals the distributed kv_storage_replay") {
+  test("fetchCas equals the distributed kv_storage_replay") {
     val replay = SparkEntry.queries("kv_storage_replay")(spark, sf)
       .filter(col("namespace") === "click").collect()
       .map(r => r.getAs[Long]("key") -> r.getAs[Double]("value")).toMap
@@ -55,12 +57,140 @@ class CoordinationApiSpec extends AnyFunSuite {
       .filter(col("event_type") === "click")
       .select(col("user_id")).distinct().collect().map(_.getLong(0))
     // every key: present in the replay iff fetchCas returns it, same value
-    allKeys.take(25).foreach { k =>
+    allKeys.foreach { k =>
       assert(api.fetchCas("click", k) == replay.get(k), s"key $k")
     }
     // deleted/never-put keys exist (replay has fewer keys than the raw set)
     assert(replay.size < allKeys.length)
     assert(api.snapshotCas("click").count() == replay.size)
+  }
+
+  test("point reads compile once per read kind; fetchCas is at most 2 jobs") {
+    // a written key warms each read kind; then fresh keys, some written
+    // and one never written
+    val written = Tables.events(spark, sf).filter(col("event_type") === "click")
+      .select(col("user_id")).distinct().orderBy(col("user_id").desc)
+      .limit(6).collect().map(_.getLong(0)).toSeq
+    val keys = written.tail :+ 880001L
+    val reads: Seq[(String, Long => Any)] = Seq(
+      "fetch" -> (k => api.fetch("click", k)),
+      "firstWrite" -> (k => api.firstWrite("click", k)),
+      "fetchCas" -> (k => api.fetchCas("click", k)),
+      "isMember" -> (k => api.isMember("signup", k)))
+    reads.foreach { case (name, read) =>
+      read(written.head) // warm: the one compile this read kind needs
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      keys.foreach(read)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      assert(compiled == 0, s"$name compiled $compiled classes over ${keys.size} new keys")
+    }
+    keys.foreach { k =>
+      val (_, jobs) = JobCounter.during(spark.sparkContext)(api.fetchCas("click", k))
+      assert(jobs <= 2, s"fetchCas($k) launched $jobs jobs")
+    }
+  }
+
+  /** The sequential reference for `fetchCas`: the key's events in
+    * (ts, event_id) order, null payloads skipped, each event's op digit
+    * applied in turn on the driver.
+    */
+  private def foldCas(dir: String, ns: String, key: Long): Option[Double] = {
+    val rows = Tables.events(spark, dir)
+      .filter(col("event_type") === ns && col("user_id") === key)
+      .select(unix_micros(col("ts")), col("event_id"), col("value")).collect()
+      .sortBy(r => (r.getLong(0), r.getLong(1)))
+    var present = false
+    var value = 0.0
+    rows.foreach { r =>
+      if (!r.isNullAt(2)) {
+        val v = r.getDouble(2)
+        val op =
+          if (v.isNaN) 0L
+          else if (v * 100 >= Long.MaxValue.toDouble) Long.MaxValue % 10
+          else if (v * 100 <= Long.MinValue.toDouble) Long.MinValue % 10
+          else BigDecimal(v * 100)
+            .setScale(0, scala.math.BigDecimal.RoundingMode.HALF_UP)
+            .toLong % 10
+        op match {
+          case 0           => present = false          // delete
+          case o if o <= 3 => present = true; value = v // put
+          case _ if present => value = v                // update applies
+          case _           => ()                        // update ignored
+        }
+      }
+    }
+    if (present) Some(value) else None
+  }
+
+  test("fetchCas equals the sequential fold on edge-case histories") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val dir = Files.createTempDirectory("graft_cas").toString
+    Files.createDirectory(Paths.get(s"$dir/events.parquet"))
+    Files.copy(Paths.get(s"$sf/events.parquet"),
+      Paths.get(s"$dir/events.parquet/base.parquet"))
+    val ns = "click"
+    val nan = Double.NaN
+    val (inf, ninf) = (Double.PositiveInfinity, Double.NegativeInfinity)
+    // one fresh key per history; payloads in log order (None = null);
+    // the A16 digit of each payload is in the comment
+    val histories: Seq[(String, Seq[Option[Double]])] = Seq(
+      "NaN deletes" -> Seq(Some(5.01), Some(6.04), Some(nan)),     // 1 4 NaN→0
+      "put after NaN" -> Seq(Some(nan), Some(2.02)),               // 0 2
+      "+Inf is an update" -> Seq(Some(1.01), Some(inf)),           // 1 7
+      "+Inf alone is ignored" -> Seq(Some(inf)),                   // 7
+      "-Inf is a put" -> Seq(Some(ninf)),                          // -8
+      "update over -Inf" -> Seq(Some(ninf), Some(3.05)),           // -8 5
+      "negative half-cent" -> Seq(Some(4.01), Some(-0.005)),       // 1 -1
+      "negative half-cents" -> Seq(Some(-0.015), Some(-0.125)),    // -2 -3
+      "x.xx5 rounds up to update" -> Seq(Some(1.01), Some(0.035)), // 1 4
+      "x.xx5 rounds up to delete" -> Seq(Some(1.01), Some(0.095)), // 1 0
+      "x.xx5 rounds up to put" -> Seq(Some(0.025)),                // 3
+      "x.xx5 below the cent" -> Seq(Some(2.01), Some(1.005)),      // 1 0
+      "null payload skipped" -> Seq(Some(3.01), None),             // 1 null
+      "null payload only" -> Seq(None),
+      "update before any put" -> Seq(Some(5.04)),                  // 4
+      "update then put" -> Seq(Some(5.04), Some(6.01)),            // 4 1
+      "delete then update" -> Seq(Some(1.01), Some(0.0), Some(2.04)),
+      "put after delete" -> Seq(Some(1.01), Some(0.0), Some(7.02), Some(7.05)))
+    val base = 990100L
+    val tsType = Tables.schemaOf(spark, s"$dir/events.parquet")("ts").dataType
+    val logEnd = Tables.events(spark, dir).agg(max(unix_micros(col("ts"))),
+      max(col("event_id"))).collect()(0)
+    val rows = histories.zipWithIndex.flatMap { case ((_, vs), i) =>
+      vs.zipWithIndex.map { case (v, j) =>
+        // two events of a key share a timestamp: event_id breaks the tie
+        val us = logEnd.getLong(0) + 1000000L * (j / 2 + 1)
+        Row(logEnd.getLong(1) + 100 * i + j + 1, us, base + i, ns, v.orNull)
+      }
+    }
+    val schema = new StructType().add("event_id", LongType).add("us", LongType)
+      .add("user_id", LongType).add("event_type", StringType)
+      .add("value", DoubleType)
+    val ts = tsType match {
+      case LongType => col("us") * 1000L // legacy INT64 nanos changelog
+      case t => timestamp_micros(col("us")).cast(t)
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .select(col("event_id"), ts.as("ts"), col("user_id"), col("event_type"),
+        col("value"), lit(null).cast(StringType).as("props"))
+      .coalesce(1).write.mode("append").parquet(s"$dir/events.parquet")
+    val wapi = new CoordinationApi(spark, dir)
+    val keys = histories.indices.map(i => histories(i)._1 -> (base + i)) :+
+      ("never written" -> (base + histories.size))
+    val got = keys.map { case (name, k) =>
+      val want = foldCas(dir, ns, k)
+      val have = wapi.fetchCas(ns, k)
+      // NaN is never a returned value (it deletes), so == is exact here
+      assert(have == want, s"$name (key $k): fetchCas $have, fold $want")
+      name -> have
+    }.toMap
+    // the histories exercise both outcomes and the non-finite values
+    assert(got("-Inf is a put").contains(ninf) && got("+Inf is an update").contains(inf))
+    assert(got("negative half-cent").contains(-0.005))
+    assert(got("NaN deletes").isEmpty && got("put after delete").contains(7.05))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   test("resign-aware leader and leave-aware membership honor tombstones") {

@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
 # CI-shaped gate: the four checks a change must pass.
-#   1. sbt test                 (ScalaTest suite green)
+#   1. sbt test                 (ScalaTest suite green, and no
+#                                HintErrorLogger warning in its log)
 #   2. Verify + DuckDB compare  (every query runs; every oracle-backed one
 #                                is bit-exact at sf0.01)
 #   3. perfbench unit tests     (the benchmark's own tests)
@@ -14,8 +15,15 @@ fail=0
 out=/tmp/gate_verify_out
 
 echo "=== gate 1/4: sbt test ==="
-if ! sbt -batch test 2>&1 | tail -4; then
+if ! sbt -batch test > /tmp/gate_test.log 2>&1; then
   echo "GATE FAIL: sbt test"; fail=1
+fi
+tail -4 /tmp/gate_test.log
+# a join hint on a frame that is not a join side does nothing, and Spark
+# only logs it: the suite must not log one
+hints=$(grep -c 'HintErrorLogger' /tmp/gate_test.log)
+if [ "$hints" -ne 0 ]; then
+  echo "GATE FAIL: $hints HintErrorLogger warnings in the sbt test log"; fail=1
 fi
 
 echo "=== gate 2/4: verify vs DuckDB oracles (sf0.01) ==="
