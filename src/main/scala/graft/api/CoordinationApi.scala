@@ -193,20 +193,6 @@ final class CoordinationApi(spark: SparkSession, sfDir: String,
     latestPerKey(events.filter(col("event_type") === namespace))
       .select(col("user_id").as("key"), col("value"), col("ts"))
 
-  /** The A16 op digit of `value` ([[graft.queries.Coordination]]'s
-    * op-type convention): HALF_UP `round(value·100) % 10`, exactly
-    * Spark's/DuckDB's `round()`. Non-finite payloads take non-ANSI
-    * CAST's values (NaN → 0 = delete, ±Inf saturate to Long.Max/Min),
-    * decided before the cast so an ANSI cast never sees them.
-    */
-  private def opDigit: Column = {
-    val cents = col("value") * 100
-    when(isnan(col("value")), 0L)
-      .when(cents >= Long.MaxValue.toDouble, Long.MaxValue % 10)
-      .when(cents <= Long.MinValue.toDouble, Long.MinValue % 10)
-      .otherwise(round(cents).cast("long") % 10)
-  }
-
   /** Storage.fetch under the full put/update/delete CAS replay (A16 —
     * the op-type convention documented at
     * [[graft.queries.Coordination.kvStorageReplay]]): None if the key
@@ -224,7 +210,7 @@ final class CoordinationApi(spark: SparkSession, sfDir: String,
     */
   def fetchCas(namespace: String, key: Long): Option[Double] = {
     val e = struct(unix_micros(col("ts")).as("us"), col("event_id"),
-      opDigit.as("op"), col("value"))
+      graft.queries.Coordination.opDigit(col("value")).as("op"), col("value"))
     val r = keyEvents(namespace, key).filter(col("value").isNotNull)
       .select(e.as("e"))
       .agg(max(when(col("e.op") <= 3, col("e"))), max(col("e")))

@@ -62,151 +62,118 @@ final class ListenerRegistry(api: CoordinationApi) {
   private def feedRows(df: org.apache.spark.sql.DataFrame,
       order: org.apache.spark.sql.Column*): Iterator[org.apache.spark.sql.Row] =
     FeedIter.rows(df, order: _*)
-  private val valueListeners =
-    mutable.HashMap.empty[(String, Long), mutable.ListBuffer[ValueChangeListener]]
-  private val keySetListeners =
-    mutable.HashMap.empty[String, mutable.ListBuffer[KeySetChangeListener]]
-  private val leaderListeners =
-    mutable.HashMap.empty[String, mutable.ListBuffer[LeaderChangeListener]]
-  private val groupListeners =
-    mutable.HashMap.empty[String, mutable.ListBuffer[GroupMembershipListener]]
-  private val mutationListeners =
-    mutable.HashMap.empty[(String, Long), mutable.ListBuffer[StorageMutationListener]]
-  // presence here == a live ScheduledFuture in the reference
-  private val valueWatchers = mutable.HashSet.empty[(String, Long)]
-  private val keySetWatchers = mutable.HashSet.empty[String]
-  private val leaderWatchers = mutable.HashSet.empty[String]
-  private val groupWatchers = mutable.HashSet.empty[String]
-  private val mutationWatchers = mutable.HashSet.empty[(String, Long)]
+
+  /** One listener kind's per-key lists under the registry lock. A key
+    * is watched (a live ScheduledFuture in the reference) iff its list
+    * is non-empty: the first add attaches, the last remove detaches.
+    */
+  private final class Watchers[K, L] {
+    private val byKey = mutable.HashMap.empty[K, mutable.ListBuffer[L]]
+    def add(k: K, l: L): Unit = lock.synchronized {
+      byKey.getOrElseUpdate(k, mutable.ListBuffer.empty) += l
+    }
+    def remove(k: K, l: L): Unit = lock.synchronized {
+      byKey.get(k).foreach { ls => ls -= l; if (ls.isEmpty) byKey.remove(k) }
+    }
+    def has(k: K): Boolean = lock.synchronized(byKey.contains(k))
+    def keys: Set[K] = lock.synchronized(byKey.keySet.toSet)
+    /** A snapshot: a callback may add or remove listeners. */
+    def of(k: K): List[L] = lock.synchronized(byKey.get(k).map(_.toList).getOrElse(Nil))
+  }
+
+  private val values = new Watchers[(String, Long), ValueChangeListener]
+  private val keySets = new Watchers[String, KeySetChangeListener]
+  private val leaders = new Watchers[String, LeaderChangeListener]
+  private val groups = new Watchers[String, GroupMembershipListener]
+  private val mutations = new Watchers[(String, Long), StorageMutationListener]
 
   def addValueChangeListener(namespace: String, key: Long,
-      listener: ValueChangeListener): Unit = lock.synchronized {
-    val ls = valueListeners.getOrElseUpdate((namespace, key),
-      mutable.ListBuffer.empty)
-    ls += listener
-    if (ls.size == 1) valueWatchers += ((namespace, key))
-  }
-
+      listener: ValueChangeListener): Unit = values.add((namespace, key), listener)
   def removeValueChangeListener(namespace: String, key: Long,
-      listener: ValueChangeListener): Unit = lock.synchronized {
-    valueListeners.get((namespace, key)).foreach { ls =>
-      ls -= listener
-      if (ls.isEmpty) {
-        valueListeners.remove((namespace, key))
-        valueWatchers -= ((namespace, key))
-      }
-    }
-  }
-
+      listener: ValueChangeListener): Unit = values.remove((namespace, key), listener)
   def addKeySetChangeListener(namespace: String,
-      listener: KeySetChangeListener): Unit = lock.synchronized {
-    val ls = keySetListeners.getOrElseUpdate(namespace, mutable.ListBuffer.empty)
-    ls += listener
-    if (ls.size == 1) keySetWatchers += namespace
-  }
-
+      listener: KeySetChangeListener): Unit = keySets.add(namespace, listener)
   def removeKeySetChangeListener(namespace: String,
-      listener: KeySetChangeListener): Unit = lock.synchronized {
-    keySetListeners.get(namespace).foreach { ls =>
-      ls -= listener
-      if (ls.isEmpty) {
-        keySetListeners.remove(namespace)
-        keySetWatchers -= namespace
-      }
-    }
-  }
+      listener: KeySetChangeListener): Unit = keySets.remove(namespace, listener)
 
   /** addListener(LeaderChangeListener) of the reference
     * (CassandraLeaderElection.scala:149-153), per resource; the first
     * add attaches the watcher, extras piggyback.
     */
   def addLeaderChangeListener(resource: String,
-      listener: LeaderChangeListener): Unit = lock.synchronized {
-    val ls = leaderListeners.getOrElseUpdate(resource, mutable.ListBuffer.empty)
-    ls += listener
-    if (ls.size == 1) leaderWatchers += resource
-  }
+      listener: LeaderChangeListener): Unit = leaders.add(resource, listener)
 
   /** removeListener (CassandraLeaderElection.scala:155-159); the last
     * remove detaches the watcher.
     */
   def removeLeaderChangeListener(resource: String,
-      listener: LeaderChangeListener): Unit = lock.synchronized {
-    leaderListeners.get(resource).foreach { ls =>
-      ls -= listener
-      if (ls.isEmpty) {
-        leaderListeners.remove(resource)
-        leaderWatchers -= resource
-      }
-    }
-  }
+      listener: LeaderChangeListener): Unit = leaders.remove(resource, listener)
 
   def addGroupMembershipListener(group: String,
-      listener: GroupMembershipListener): Unit = lock.synchronized {
-    val ls = groupListeners.getOrElseUpdate(group, mutable.ListBuffer.empty)
-    ls += listener
-    if (ls.size == 1) groupWatchers += group
-  }
-
+      listener: GroupMembershipListener): Unit = groups.add(group, listener)
   def removeGroupMembershipListener(group: String,
-      listener: GroupMembershipListener): Unit = lock.synchronized {
-    groupListeners.get(group).foreach { ls =>
-      ls -= listener
-      if (ls.isEmpty) {
-        groupListeners.remove(group)
-        groupWatchers -= group
-      }
-    }
-  }
-
+      listener: GroupMembershipListener): Unit = groups.remove(group, listener)
   def addStorageMutationListener(namespace: String, key: Long,
-      listener: StorageMutationListener): Unit = lock.synchronized {
-    val ls = mutationListeners.getOrElseUpdate((namespace, key),
-      mutable.ListBuffer.empty)
-    ls += listener
-    if (ls.size == 1) mutationWatchers += ((namespace, key))
-  }
-
+      listener: StorageMutationListener): Unit = mutations.add((namespace, key), listener)
   def removeStorageMutationListener(namespace: String, key: Long,
-      listener: StorageMutationListener): Unit = lock.synchronized {
-    mutationListeners.get((namespace, key)).foreach { ls =>
-      ls -= listener
-      if (ls.isEmpty) {
-        mutationListeners.remove((namespace, key))
-        mutationWatchers -= ((namespace, key))
-      }
-    }
-  }
+      listener: StorageMutationListener): Unit =
+    mutations.remove((namespace, key), listener)
 
   def hasValueWatcher(namespace: String, key: Long): Boolean =
-    lock.synchronized(valueWatchers.contains((namespace, key)))
-  def hasKeySetWatcher(namespace: String): Boolean =
-    lock.synchronized(keySetWatchers.contains(namespace))
-  def hasLeaderWatcher(resource: String): Boolean =
-    lock.synchronized(leaderWatchers.contains(resource))
-  def hasGroupWatcher(group: String): Boolean =
-    lock.synchronized(groupWatchers.contains(group))
+    values.has((namespace, key))
+  def hasKeySetWatcher(namespace: String): Boolean = keySets.has(namespace)
+  def hasLeaderWatcher(resource: String): Boolean = leaders.has(resource)
+  def hasGroupWatcher(group: String): Boolean = groups.has(group)
   def hasMutationWatcher(namespace: String, key: Long): Boolean =
-    lock.synchronized(mutationWatchers.contains((namespace, key)))
+    mutations.has((namespace, key))
+
+  /** The keys of `namespace` that have `table` listeners. */
+  private def watchedKeys(table: Watchers[(String, Long), _],
+      namespace: String): Seq[Long] =
+    table.keys.collect { case (ns, k) if ns == namespace => k }.toSeq
+
+  /** KeySetWatcher.run's compare-and-fire body, replayed over `name`'s
+    * per-tick key sets: `fire` runs only when a tick's set, decoded by
+    * `decode`, differs from the cached one. Returns the number of
+    * firings.
+    */
+  private def replayTicks[A, L](table: Watchers[String, L], name: String)(
+      decode: Seq[String] => A)(fire: (L, A) => Unit): Long = {
+    if (!table.has(name)) return 0L
+    // the per-tick set assembles CLUSTER-side (one tick's key set is
+    // the unit a listener consumes anyway); the driver streams one
+    // tick row at a time instead of holding the whole feed
+    val ticks = feedRows(api.keySetsByTick(name)
+      .groupBy(col("tick")).agg(collect_set(col("k")).as("ks")),
+      col("tick"))
+    var cached = Option.empty[A]
+    var fired = 0L
+    ticks.foreach { r =>
+      val a = decode(r.getAs[scala.collection.Seq[String]]("ks").toSeq)
+      if (!cached.contains(a)) {
+        cached = Some(a)
+        table.of(name).foreach(fire(_, a))
+        fired += 1
+      }
+    }
+    fired
+  }
 
   /** Play the namespace's value-change feed (A4 semantics, first
     * sighting included) through the attached per-key listeners in feed
     * order. Returns delivered rows.
     */
   def replayValueChanges(namespace: String): Long = {
-    val watched = lock.synchronized(
-      valueWatchers.collect { case (ns, k) if ns == namespace => k }.toSet)
+    val watched = watchedKeys(values, namespace)
     if (watched.isEmpty) return 0L
     var delivered = 0L
     feedRows(api.valueChanges(namespace)
-        .filter(col("key").isin(watched.toSeq: _*)),
+        .filter(col("key").isin(watched: _*)),
         col("ts"), col("event_id")).foreach { r =>
       val key = r.getAs[Long]("key")
       val v = if (r.isNullAt(r.fieldIndex("value"))) None
               else Some(r.getAs[Double]("value"))
-      val ls = lock.synchronized(
-        valueListeners.get((namespace, key)).map(_.toList).getOrElse(Nil))
-      ls.foreach(_.valueChanged(v))
+      values.of((namespace, key)).foreach(_.valueChanged(v))
       delivered += 1
     }
     delivered
@@ -218,28 +185,8 @@ final class ListenerRegistry(api: CoordinationApi) {
     * number of change firings (== the A5 feed's row count for the
     * namespace).
     */
-  def replayKeySetChanges(namespace: String): Long = {
-    if (!hasKeySetWatcher(namespace)) return 0L
-    // the per-tick set assembles CLUSTER-side (one tick's key set is
-    // the unit a listener consumes anyway); the driver streams one
-    // tick row at a time instead of holding the whole feed
-    val ticks = feedRows(api.keySetsByTick(namespace)
-      .groupBy(col("tick")).agg(collect_set(col("k")).as("ks")),
-      col("tick"))
-    var watchable = Option.empty[Set[String]]
-    var fired = 0L
-    ticks.foreach { r =>
-      val ks = r.getAs[scala.collection.Seq[String]]("ks").toSet
-      if (!watchable.contains(ks)) {
-        watchable = Some(ks)
-        val ls = lock.synchronized(
-          keySetListeners.get(namespace).map(_.toList).getOrElse(Nil))
-        ls.foreach(_.keySetChanged(ks))
-        fired += 1
-      }
-    }
-    fired
-  }
+  def replayKeySetChanges(namespace: String): Long =
+    replayTicks(keySets, namespace)(_.toSet)(_.keySetChanged(_))
 
   /** Play the resource's leader-change feed (A23, the onLeaderChange
     * firing loop of CassandraLeaderElection.scala:129-135) through the
@@ -251,9 +198,7 @@ final class ListenerRegistry(api: CoordinationApi) {
     var fired = 0L
     feedRows(api.leaderChanges(resource),
         col("ts"), col("event_id")).foreach { r =>
-      val ls = lock.synchronized(
-        leaderListeners.get(resource).map(_.toList).getOrElse(Nil))
-      ls.foreach(_.onLeaderChange(Some(r.getAs[Long]("new_leader"))))
+      leaders.of(resource).foreach(_.onLeaderChange(Some(r.getAs[Long]("new_leader"))))
       fired += 1
     }
     fired
@@ -264,19 +209,16 @@ final class ListenerRegistry(api: CoordinationApi) {
     * rows.
     */
   def replayStorageMutations(namespace: String): Long = {
-    val watched = lock.synchronized(
-      mutationWatchers.collect { case (ns, k) if ns == namespace => k }.toSet)
+    val watched = watchedKeys(mutations, namespace)
     if (watched.isEmpty) return 0L
     var delivered = 0L
     feedRows(api.storageMutations(namespace)
-        .filter(col("key").isin(watched.toSeq: _*)),
+        .filter(col("key").isin(watched: _*)),
         col("ts"), col("event_id")).foreach { r =>
       val key = r.getAs[Long]("key")
       val v = if (r.isNullAt(r.fieldIndex("new_value"))) None
               else Some(r.getAs[Double]("new_value"))
-      val ls = lock.synchronized(
-        mutationListeners.get((namespace, key)).map(_.toList).getOrElse(Nil))
-      ls.foreach(_.onMutation(r.getAs[String]("op"), v))
+      mutations.of((namespace, key)).foreach(_.onMutation(r.getAs[String]("op"), v))
       delivered += 1
     }
     delivered
@@ -288,27 +230,8 @@ final class ListenerRegistry(api: CoordinationApi) {
     * same compare-and-fire dedup as the key-set watcher, typed to
     * member ids). Returns the number of firings.
     */
-  def replayGroupChanges(group: String): Long = {
-    if (!hasGroupWatcher(group)) return 0L
-    // same cluster-side per-tick assembly as replayKeySetChanges
-    val ticks = feedRows(api.keySetsByTick(group)
-      .groupBy(col("tick")).agg(collect_set(col("k")).as("ks")),
-      col("tick"))
-    var cached = Option.empty[Set[Long]]
-    var fired = 0L
-    ticks.foreach { r =>
-      val members = r.getAs[scala.collection.Seq[String]]("ks")
-        .map(_.toLong).toSet
-      if (!cached.contains(members)) {
-        cached = Some(members)
-        val ls = lock.synchronized(
-          groupListeners.get(group).map(_.toList).getOrElse(Nil))
-        ls.foreach(_.onGroupChange(members))
-        fired += 1
-      }
-    }
-    fired
-  }
+  def replayGroupChanges(group: String): Long =
+    replayTicks(groups, group)(_.map(_.toLong).toSet)(_.onGroupChange(_))
 
   /** Play the group's join/leave/expire feed (A27) through the attached
     * listeners: fold the transitions into the evolving member set and
@@ -333,9 +256,7 @@ final class ListenerRegistry(api: CoordinationApi) {
         case "join" => members + m
         case _      => members - m           // leave | expire
       }
-      val ls = lock.synchronized(
-        groupListeners.get(group).map(_.toList).getOrElse(Nil))
-      ls.foreach(_.onGroupChange(members))
+      groups.of(group).foreach(_.onGroupChange(members))
       fired += 1
     }
     fired

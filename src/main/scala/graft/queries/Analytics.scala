@@ -498,9 +498,8 @@ object Analytics {
     val act = Tables.events(s, d)
       .select(col("user_id"), date_trunc("week", col("ts")).as("wk"))
       .distinct()
-    val a = act.select(col("user_id"), col("wk"))
     val b = act.select(col("user_id"), col("wk").as("wk_next"))
-    a.join(b, a("user_id") === b("user_id")
+    act.as("a").join(b.as("b"), col("a.user_id") === col("b.user_id")
         && col("wk_next") === col("wk") + expr("INTERVAL 7 DAYS"), "left")
       .groupBy(col("wk").as("week"))
       .agg(count(lit(1)).as("active"),

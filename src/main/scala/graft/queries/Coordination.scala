@@ -605,7 +605,21 @@ object Coordination {
   // Identical float64 arithmetic on both engines → bit-identical op
   // assignment; all three delete-aware replays below are fully oracled.
   private val opSql = "CAST(round(value*100) AS BIGINT) % 10"
-  private def op10: Column = (round(col("value") * 100).cast("long") % 10)
+
+  /** The op digit of a payload column, for every replay here, the
+    * stream twins' scalar fold ([[graft.streaming.Streaming.opDigit]])
+    * and `CoordinationApi.fetchCas`. It agrees with `opSql` on every
+    * finite payload. Non-finite payloads take non-ANSI CAST's values
+    * (NaN → 0 = delete, ±Inf saturate to Long.Max/Min % 10), decided
+    * before the cast so an ANSI cast never sees them.
+    */
+  private[graft] def opDigit(value: Column): Column = {
+    val cents = value * 100
+    when(isnan(value), 0L)
+      .when(cents >= Long.MaxValue.toDouble, Long.MaxValue % 10)
+      .when(cents <= Long.MinValue.toDouble, Long.MinValue % 10)
+      .otherwise(round(cents).cast("long") % 10)
+  }
 
   // --- A16: Storage replay under put/update/delete CAS semantics ----------
   // Per key, the last PUT-or-DELETE is the "boundary": a final DELETE
@@ -640,7 +654,7 @@ object Coordination {
     val e = ev(s, d)
       .select(col("event_type").as("namespace"), col("user_id").as("key"),
         col("ts"), col("event_id"), col("value"))
-      .withColumn("op10", op10)
+      .withColumn("op10", opDigit(col("value")))
     val lastBoundary = e.filter(col("op10") <= 3)
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("namespace"), col("key"))
@@ -706,7 +720,7 @@ object Coordination {
     ev(s, d)
       .select(col("event_type").as("namespace"), col("user_id").as("key"),
         col("ts"), col("event_id"), col("value"))
-      .withColumn("op10", op10)
+      .withColumn("op10", opDigit(col("value")))
       .withColumn("bop", last(when(col("op10") <= 3, col("op10")), ignoreNulls = true)
         .over(byKeyAsc.rowsBetween(Window.unboundedPreceding, -1)))
       .filter((col("op10") =!= 0 && col("op10") <= 3) ||
@@ -738,7 +752,7 @@ object Coordination {
     ev(s, d)
       .withColumn("rn", row_number().over(byKeyDesc))
       .filter(col("rn") === 1)
-      .filter(op10 =!= 0)
+      .filter(opDigit(col("value")) =!= 0)
       .crossJoin(broadcast(logEnd))
       .filter(unix_micros(col("ts")) >= col("e") - ttlUs)
       .select(col("event_type").as("grp"), col("user_id").as("member"),
@@ -809,7 +823,7 @@ object Coordination {
     ev(s, d)
       .select(col("event_type").as("grp"), col("user_id").as("member"),
         col("ts"), col("event_id"), unix_micros(col("ts")).as("us"),
-        when(op10 === 0, 1).otherwise(0).as("del"))
+        when(opDigit(col("value")) === 0, 1).otherwise(0).as("del"))
       .withColumn("prev_us", lag(col("us"), 1).over(byMemberAsc))
       .withColumn("prev_del", lag(col("del"), 1).over(byMemberAsc))
       .withColumn("next_us", lead(col("us"), 1).over(byMemberAsc))
@@ -887,7 +901,7 @@ object Coordination {
     val sess = ev(s, d)
       .select(col("event_type").as("resource"), col("user_id").as("candidate"),
         col("ts"), col("event_id"), col("value"), unix_micros(col("ts")).as("us"),
-        when(op10 === 0, 1).otherwise(0).as("del"))
+        when(opDigit(col("value")) === 0, 1).otherwise(0).as("del"))
       .withColumn("prev_us", lag(col("us"), 1).over(byCandidate))
       .withColumn("prev_del", lag(col("del"), 1).over(byCandidate))
       .withColumn("next_us", lead(col("us"), 1).over(byCandidate))

@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.{QueryDef, Tables}
 import graft.queries.Coordination.DefaultTtlMicros
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{DecimalType, StructType}
@@ -31,6 +31,10 @@ import org.apache.spark.sql.types.{DecimalType, StructType}
 case class KeyedEvent(
     namespace: String, key: Long, ts: java.sql.Timestamp,
     event_id: Long, value: Double)
+/** A [[KeyedEvent]] whose payload may be null. */
+case class KvEvent(
+    namespace: String, key: Long, ts: java.sql.Timestamp,
+    event_id: Long, value: Option[Double])
 case class LeaderState(leader: Long, sessionStartUs: Long, lastHbUs: Long)
 case class Scd2State(fromTs: java.sql.Timestamp, fromId: Long,
     value: Double, lastUs: Long)
@@ -51,7 +55,6 @@ case class IngestDoc(doc_id: Long, content_hash: String, split: String,
 case class IngestDecision(doc_id: Long, disposition: String)
 case class CandidatePair(doc_a: Long, doc_b: Long)
 case class FunnelState(tSignupUs: Long, tClickUs: Long, tPurchaseUs: Long)
-case class FunnelStage(user_id: Long, stage: String)
 case class FunnelLatency(user_id: Long, stage: String, lat_us: Long)
 case class IncArrival(doc_id: Long, h: String, v1_keeper: Option[Long])
 case class IncArrivalIngest(doc_id: Long, h: String, v1_keeper: Option[Long],
@@ -169,17 +172,24 @@ object Streaming {
     p.toString
   }
 
-  /** File-source stream of the events changelog (ts nanos → micros,
-    * matching Tables.events). A file source needs an explicit schema;
-    * every stream source here takes it from [[Tables.schemaOf]], the
-    * batch loaders' per-session cache.
+  /** File-source stream of table `name` (`$d/$name.parquet`): a
+    * parquet directory (the writable layout) is the source directory
+    * itself, a single file is exposed through [[symlinkedDir]]. A file
+    * source needs an explicit schema; every stream source here takes it
+    * from [[Tables.schemaOf]], the batch loaders' per-session cache.
     */
-  private def eventStream(s: SparkSession, d: String): DataFrame = {
-    val path = s"$d/events.parquet"
-    val raw = s.readStream.schema(Tables.schemaOf(s, path))
-      .parquet(symlinkedDir(path, "events.parquet"))
-    Tables.withMicroTs(raw)
+  private def tableStream(s: SparkSession, d: String, name: String): DataFrame = {
+    val path = s"$d/$name.parquet"
+    s.readStream.schema(Tables.schemaOf(s, path)).parquet(
+      if (new java.io.File(path).isDirectory) path
+      else symlinkedDir(path, s"$name.parquet"))
   }
+
+  /** The events changelog stream (ts nanos → micros, matching
+    * Tables.events).
+    */
+  private def eventStream(s: SparkSession, d: String): DataFrame =
+    Tables.withMicroTs(tableStream(s, d, "events"))
 
   /** Run `frame` (a streaming DataFrame) to completion and return what
     * its sink saw, as a driver-local frame: append/update modes
@@ -271,10 +281,77 @@ object Streaming {
     }
   }
 
-  /** Driver-local frame over rows a drain already collected. */
+  /** Driver-local frame over rows a drain already collected (analyzes
+    * to a `LocalRelation`, which copies the rows).
+    */
   private def localFrame(s: SparkSession, rows: Seq[Row],
       schema: StructType): DataFrame =
-    s.createDataFrame(new java.util.ArrayList[Row](rows.asJava), schema)
+    s.createDataFrame(rows.asJava, schema)
+
+  /** A keyed fold's clock: the watermarked timestamp column and its
+    * delay, and the in-group order (clock micros, then a unique id).
+    */
+  private final case class FoldClock[V](column: String, delay: String,
+      at: V => java.sql.Timestamp, tiebreak: V => Long)
+
+  /** Event time: the changelog's `ts`, 1 h late tolerance, `event_id`. */
+  private def eventTime[V](at: V => java.sql.Timestamp,
+      tiebreak: V => Long): FoldClock[V] =
+    FoldClock("ts", "1 hour", at, tiebreak)
+
+  /** Ingest time for the document streams, which carry no event time:
+    * `ingest_ts` = `current_timestamp()`, constant within a micro-batch,
+    * so the in-group order is `doc_id` order.
+    */
+  private def ingestTime[V](at: V => java.sql.Timestamp,
+      tiebreak: V => Long): FoldClock[V] =
+    FoldClock("ingest_ts", "1 second", at, tiebreak)
+
+  /** The one keyed fold of the stateful stream twins: watermark the
+    * clock, group by `key`, and per group and trigger hand the carried
+    * state and the group's arrivals, sorted by the clock, to `step`. It
+    * returns the next state (None drops it) and the rows to emit. A
+    * group's state times out [[StateHorizonMs]] after its last arrival
+    * and the timeout emits nothing, so the drain skips the trailing
+    * no-data batch (see [[runToMemory]]). `alongside`: stateless
+    * streams of the output's shape, drained in the same query.
+    */
+  private def keyedFold[V, K: Encoder, S: Encoder, U: Encoder](
+      s: SparkSession, in: Dataset[V], clock: FoldClock[V],
+      alongside: Seq[DataFrame] = Nil)(key: V => K)(
+      step: (K, Option[S], Seq[V]) => (Option[S], IterableOnce[U])): DataFrame = {
+    val folded = in.withWatermark(clock.column, clock.delay)
+      .groupByKey(key)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+        (k: K, it: Iterator[V], state: GroupState[S]) =>
+          if (state.hasTimedOut) { state.remove(); Iterator.empty }
+          else {
+            val sorted =
+              it.toSeq.sortBy(v => (tsMicros(clock.at(v)), clock.tiebreak(v)))
+            val (next, out) = step(k, state.getOption, sorted)
+            next.fold(state.remove())(state.update)
+            state.setTimeoutTimestamp(
+              tsMicros(clock.at(sorted.last)) / 1000L + StateHorizonMs)
+            out.iterator
+          })
+    runToMemory(s, alongside.foldLeft(folded.toDF())(_.union(_)),
+      OutputMode.Append, needsNoDataBatch = false)
+  }
+
+  /** md5 of the whitespace-normalized lowercased text: D1's exact-dup
+    * content key.
+    */
+  private def contentHash(text: Column): Column =
+    md5(trim(regexp_replace(lower(text), "[ \\t\\n\\f\\r]+", " ")))
+
+  /** The changelog as keyed events: `event_type` is the namespace (or
+    * resource, or group) and `user_id` the key.
+    */
+  private[graft] def keyedEvents(events: DataFrame): Dataset[KeyedEvent] = {
+    import events.sparkSession.implicits._
+    events.select(col("event_type").as("namespace"), col("user_id").as("key"),
+      col("ts"), col("event_id"), col("value")).as[KeyedEvent]
+  }
 
   /** Restart-harness conf (spec-only): a session with this set drives
     * its streaming queries from a FIXED checkpoint root instead of a
@@ -381,38 +458,28 @@ object Streaming {
       |SELECT namespace, key, ts, event_id, value
       |FROM w WHERE prev IS NULL OR value <> prev
       |ORDER BY namespace, key, ts, event_id""".stripMargin) { (s, d) =>
-    import s.implicits._
-    val typed: Dataset[KeyedEvent] = eventStream(s, d)
-      .select(col("event_type").as("namespace"), col("user_id").as("key"),
-        col("ts"), col("event_id"), col("value"))
-      .as[KeyedEvent]
-    val changed = typed
-      .withWatermark("ts", "1 hour")
-      .groupByKey(e => (e.namespace, e.key))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (_: (String, Long), it: Iterator[KeyedEvent],
-         state: GroupState[Double]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = it.toSeq.sortBy(e => (tsMicros(e.ts), e.event_id))
-            val out = scala.collection.mutable.ArrayBuffer.empty[KeyedEvent]
-            var last: Option[Double] = state.getOption
-            // SQL equality semantics (NaN = NaN is true in Spark/DuckDB),
-            // not Scala's IEEE NaN != NaN — keeps parity with batch A4
-            def same(a: Double, b: Double) = a == b || (a.isNaN && b.isNaN)
-            sorted.foreach { e =>
-              if (!last.exists(same(_, e.value))) { out += e; last = Some(e.value) }
-            }
-            last.foreach(state.update)
-            if (sorted.nonEmpty)
-              state.setTimeoutTimestamp(
-                tsMicros(sorted.last.ts) / 1000L + StateHorizonMs)
-            out.iterator
-          }
-        })
     // no presentation sort: the gate canonicalizes row order, and the
     // batch twins ship O(N) outputs unsorted (SURVEY §8)
-    runToMemory(s, changed.toDF(), OutputMode.Append, needsNoDataBatch = false)
+    runChangeFeed(s, keyedEvents(eventStream(s, d)))
+  }
+
+  /** The A10 fold over any keyed event stream. */
+  private[graft] def runChangeFeed(s: SparkSession,
+      typed: Dataset[KeyedEvent]): DataFrame = {
+    import s.implicits._
+    keyedFold(s, typed, eventTime[KeyedEvent](_.ts, _.event_id))(
+        e => (e.namespace, e.key)) { (_, prev: Option[Double], sorted) =>
+      // SQL equality semantics (NaN = NaN is true in Spark/DuckDB),
+      // not Scala's IEEE NaN != NaN — keeps parity with batch A4
+      def same(a: Double, b: Double) = a == b || (a.isNaN && b.isNaN)
+      var last = prev
+      val out = sorted.filter { e =>
+        val changed = !last.exists(same(_, e.value))
+        if (changed) last = Some(e.value)
+        changed
+      }
+      (last, out)
+    }
   }
 
   // --- A39: live SCD Type-2 interval feed, streaming twin of A38 ----------
@@ -445,54 +512,33 @@ object Streaming {
       |SELECT namespace, key, value, valid_from, valid_from_id, valid_to
       |FROM iv WHERE valid_to IS NOT NULL
       |ORDER BY namespace, key, valid_from, valid_from_id""".stripMargin) { (s, d) =>
-    import s.implicits._
-    val typed: Dataset[KeyedEvent] = eventStream(s, d)
-      .select(col("event_type").as("namespace"), col("user_id").as("key"),
-        col("ts"), col("event_id"), col("value"))
-      .as[KeyedEvent]
-    runScd2Feed(s, typed)
+    runScd2Feed(s, keyedEvents(eventStream(s, d)))
   }
 
-  /** The A39 pipeline over an arbitrary typed stream — seam for the
-    * multi-batch state-carry spec.
-    */
+  /** The A39 fold over any keyed event stream. */
   private[graft] def runScd2Feed(s: SparkSession,
       typed: Dataset[KeyedEvent]): DataFrame = {
     import s.implicits._
-    val closed = typed
-      .withWatermark("ts", "1 hour")
-      .groupByKey(e => (e.namespace, e.key))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (_: (String, Long), it: Iterator[KeyedEvent],
-         state: GroupState[Scd2State]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = it.toSeq.sortBy(e => (tsMicros(e.ts), e.event_id))
-            val out = scala.collection.mutable.ArrayBuffer.empty[Scd2Row]
-            var run: Option[Scd2State] = state.getOption
-            // SQL equality semantics, as in A10
-            def same(a: Double, b: Double) = a == b || (a.isNaN && b.isNaN)
-            sorted.foreach { e =>
-              val us = tsMicros(e.ts)
-              if (!run.exists(_.lastUs > us)) run match {
-                case Some(r) if same(r.value, e.value) =>
-                  run = Some(r.copy(lastUs = us))
-                case Some(r) =>
-                  out += Scd2Row(e.namespace, e.key, r.value,
-                    r.fromTs, r.fromId, e.ts)
-                  run = Some(Scd2State(e.ts, e.event_id, e.value, us))
-                case None =>
-                  run = Some(Scd2State(e.ts, e.event_id, e.value, us))
-              }
-            }
-            run.foreach(state.update)
-            if (sorted.nonEmpty)
-              state.setTimeoutTimestamp(
-                tsMicros(sorted.last.ts) / 1000L + StateHorizonMs)
-            out.iterator
-          }
-        })
-    runToMemory(s, closed.toDF(), OutputMode.Append, needsNoDataBatch = false)
+    keyedFold(s, typed, eventTime[KeyedEvent](_.ts, _.event_id))(
+        e => (e.namespace, e.key)) { (_, prev: Option[Scd2State], sorted) =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[Scd2Row]
+      var run = prev
+      // SQL equality semantics, as in A10
+      def same(a: Double, b: Double) = a == b || (a.isNaN && b.isNaN)
+      sorted.foreach { e =>
+        val us = tsMicros(e.ts)
+        if (!run.exists(_.lastUs > us)) run match {
+          case Some(r) if same(r.value, e.value) =>
+            run = Some(r.copy(lastUs = us))
+          case Some(r) =>
+            out += Scd2Row(e.namespace, e.key, r.value, r.fromTs, r.fromId, e.ts)
+            run = Some(Scd2State(e.ts, e.event_id, e.value, us))
+          case None =>
+            run = Some(Scd2State(e.ts, e.event_id, e.value, us))
+        }
+      }
+      (run, out)
+    }
   }
 
   // --- A31: streaming think-time (dwell) feed, online half of B35 ---------
@@ -514,42 +560,27 @@ object Streaming {
       |FROM o WHERE gap_us IS NOT NULL
       |ORDER BY user_id, ts, event_id""".stripMargin) { (s, d) =>
     import s.implicits._
-    val typed: Dataset[DwellEvent] = eventStream(s, d)
+    runDwellFeed(s, eventStream(s, d)
       .select(col("event_type"), col("user_id"), col("ts"), col("event_id"))
-      .as[DwellEvent]
-    runDwellFeed(s, typed)
+      .as[DwellEvent])
   }
 
-  /** The A31 pipeline over an arbitrary typed stream — seam for the
-    * multi-batch state-carry spec.
-    */
+  /** The A31 fold over any (event_type, user_id, ts, event_id) stream. */
   private[graft] def runDwellFeed(s: SparkSession,
       typed: Dataset[DwellEvent]): DataFrame = {
     import s.implicits._
-    val gaps = typed
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (_: Long, it: Iterator[DwellEvent], state: GroupState[Long]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = it.toSeq.sortBy(e => (tsMicros(e.ts), e.event_id))
-            val out = scala.collection.mutable.ArrayBuffer.empty[DwellGap]
-            var last: Option[Long] = state.getOption
-            sorted.foreach { e =>
-              val us = tsMicros(e.ts)
-              last.foreach(p => out += DwellGap(
-                e.event_type, e.user_id, e.ts, e.event_id, us - p))
-              last = Some(us)
-            }
-            last.foreach(state.update)
-            if (sorted.nonEmpty)
-              state.setTimeoutTimestamp(
-                tsMicros(sorted.last.ts) / 1000L + StateHorizonMs)
-            out.iterator
-          }
-        })
-    runToMemory(s, gaps.toDF(), OutputMode.Append, needsNoDataBatch = false)
+    keyedFold(s, typed, eventTime[DwellEvent](_.ts, _.event_id))(_.user_id) {
+        (_, prev: Option[Long], sorted) =>
+      var last = prev
+      val out = sorted.flatMap { e =>
+        val us = tsMicros(e.ts)
+        val gap = last.map(p =>
+          DwellGap(e.event_type, e.user_id, e.ts, e.event_id, us - p))
+        last = Some(us)
+        gap
+      }
+      (last, out)
+    }
   }
 
   // --- A11: continuous hourly rollup, streaming twin of B9 ----------------
@@ -652,32 +683,21 @@ object Streaming {
   // DuckDB recursive CTE over a precomputed successor table.
   val leaderElection = QueryDef.oracled("stream_leader_election",
     graft.queries.Coordination.leaderChangeFeedSql) { (s, d) =>
+    runLeaderElection(s, keyedEvents(eventStream(s, d)))
+  }
+
+  /** The A12 fold over any keyed event stream (namespace = resource,
+    * key = candidate). A resource with no claims past the horizon is
+    * forgotten: its next claim replays as a fresh acquisition, which is
+    * what an expired-and-purged election row means in the reference.
+    */
+  private[graft] def runLeaderElection(s: SparkSession,
+      typed: Dataset[KeyedEvent]): DataFrame = {
     import s.implicits._
-    val typed = eventStream(s, d)
-      .select(col("event_type").as("namespace"), col("user_id").as("key"),
-        col("ts"), col("event_id"), col("value"))
-      .as[KeyedEvent]
-    val changes = typed
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_.namespace)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (resource: String, it: Iterator[KeyedEvent],
-         state: GroupState[LeaderState]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-          val sorted = it.toSeq.sortBy(e => (tsMicros(e.ts), e.event_id))
-          val (out, st) = leaderFold(resource, sorted, state.getOption)
-          st.foreach(state.update)
-          // a resource with no claims past the horizon is forgotten —
-          // its next claim replays as a fresh acquisition, which is what
-          // an expired-and-purged election row means in the reference
-          if (sorted.nonEmpty)
-            state.setTimeoutTimestamp(
-              tsMicros(sorted.last.ts) / 1000L + StateHorizonMs)
-          out.iterator
-          }
-        })
-    runToMemory(s, changes.toDF(), OutputMode.Append, needsNoDataBatch = false)
+    keyedFold(s, typed, eventTime[KeyedEvent](_.ts, _.event_id))(_.namespace) {
+        (resource, prev: Option[LeaderState], sorted) =>
+      leaderFold(resource, sorted, prev).swap
+    }
   }
 
   // --- A14: streaming exact dedup (first-seen wins) -----------------------
@@ -693,50 +713,33 @@ object Streaming {
       |       min(doc_id) AS keeper_doc_id
       |FROM documents
       |GROUP BY 1 ORDER BY keeper_doc_id""".stripMargin) { (s, d) =>
+    runDedupExact(s, tableStream(s, d, "documents"))
+  }
+
+  /** The A14 fold over any documents stream. The document stream has no
+    * event-time column, so retention runs on INGEST time (see
+    * [[ingestTime]]): a hash silent past the horizon expires.
+    * (ProcessingTimeTimeout would express the same thing but keeps the
+    * trigger loop alive polling for timeouts — processAllAvailable never
+    * returns in the replay harness.) Dropping a hash after the horizon
+    * means a re-arriving duplicate would be re-admitted — the standard
+    * bounded-memory dedup-window tradeoff.
+    */
+  private[graft] def runDedupExact(s: SparkSession, raw: DataFrame): DataFrame = {
     import s.implicits._
-    val path = s"$d/documents.parquet"
-    val docs = s.readStream.schema(Tables.schemaOf(s, path))
-      .parquet(symlinkedDir(path, "documents.parquet"))
+    val docs = raw
       // ingest-spread (see stream_dedup_minhash): normalize+md5 of the
       // full text runs wide instead of on the one scan partition
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       .select(
-        md5(trim(regexp_replace(lower(col("text")), "[ \\t\\n\\f\\r]+", " ")))
-          .as("content_hash"),
-        col("doc_id"))
-      .as[HashedDoc]
-    // The document stream has no event-time column, so retention runs
-    // on INGEST time: stamp arrival, watermark it, and expire a hash
-    // silent past the horizon via EventTimeTimeout. (ProcessingTimeTimeout
-    // would express the same thing but keeps the trigger loop alive
-    // polling for timeouts — processAllAvailable never returns in the
-    // replay harness.) Dropping a hash after the horizon means a
-    // re-arriving duplicate would be re-admitted — the standard
-    // bounded-memory dedup-window tradeoff.
-    val firstSeen = docs
-      .withColumn("ingest_ts", current_timestamp())
-      .withWatermark("ingest_ts", "1 second")
+        contentHash(col("text")).as("content_hash"),
+        col("doc_id"), current_timestamp().as("ingest_ts"))
       .as[HashedDocIngest]
-      .groupByKey(_.content_hash)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (_: String, it: Iterator[HashedDocIngest], state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val batch = it.toSeq
-            val horizon = batch.map(e => tsMicros(e.ingest_ts)).max / 1000L +
-              StateHorizonMs
-            if (state.exists) {
-              state.setTimeoutTimestamp(horizon) // slide the window
-              Iterator.empty
-            } else {
-              state.update(true)
-              state.setTimeoutTimestamp(horizon)
-              val m = batch.minBy(_.doc_id)
-              Iterator.single(HashedDoc(m.content_hash, m.doc_id))
-            }
-          })
-    runToMemory(s, firstSeen.toDF(), OutputMode.Append, needsNoDataBatch = false)
-      .select(col("content_hash"), col("doc_id").as("keeper_doc_id"))
+    keyedFold(s, docs, ingestTime[HashedDocIngest](_.ingest_ts, _.doc_id))(
+        _.content_hash) { (_, seen: Option[Boolean], sorted) =>
+      if (seen.isDefined) (seen, Nil)
+      else (Some(true), Seq(HashedDoc(sorted.head.content_hash, sorted.head.doc_id)))
+    }.select(col("content_hash"), col("doc_id").as("keeper_doc_id"))
   }
 
   // --- A15: the funnel as a live per-user state machine --------------------
@@ -757,51 +760,51 @@ object Streaming {
       |SELECT (SELECT count(*) FROM s) AS n_signup,
       |       (SELECT count(*) FROM c) AS n_click_after,
       |       (SELECT count(*) FROM p) AS n_purchase_after""".stripMargin) { (s, d) =>
+    runFunnel(s, keyedEvents(eventStream(s, d)))
+  }
+
+  /** The per-user stage machine of A15 and A48 over any keyed event
+    * stream (key = user): first signup, then the first later click, then
+    * the first later purchase. One row per completed stage: `signup`
+    * (latency 0), `signup_to_click` and `click_to_purchase`, each with
+    * the micros the stage took.
+    */
+  private def funnelFold(s: SparkSession, typed: Dataset[KeyedEvent]): DataFrame = {
     import s.implicits._
-    val typed = eventStream(s, d)
-      .filter(col("event_type").isin("signup", "click", "purchase"))
-      .select(col("event_type").as("namespace"), col("user_id").as("key"),
-        col("ts"), col("event_id"), col("value"))
-      .as[KeyedEvent]
-    val stages = typed
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (user: Long, it: Iterator[KeyedEvent], state: GroupState[FunnelState]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-          val sorted = it.toSeq.sortBy(e => (tsMicros(e.ts), e.event_id))
-          var st = state.getOption.getOrElse(FunnelState(-1L, -1L, -1L))
-          val out = scala.collection.mutable.ArrayBuffer.empty[FunnelStage]
-          sorted.foreach { e =>
-            val us = tsMicros(e.ts)
-            e.namespace match {
-              case "signup" if st.tSignupUs < 0 =>
-                st = st.copy(tSignupUs = us); out += FunnelStage(user, "signup")
-              case "click" if st.tSignupUs >= 0 && st.tClickUs < 0 &&
-                  us > st.tSignupUs =>
-                st = st.copy(tClickUs = us); out += FunnelStage(user, "click")
-              case "purchase" if st.tClickUs >= 0 && st.tPurchaseUs < 0 &&
-                  us > st.tClickUs =>
-                st = st.copy(tPurchaseUs = us); out += FunnelStage(user, "purchase")
-              case _ => ()
-            }
-          }
-          state.update(st)
-          // a user inactive past the horizon stops occupying state; the
-          // funnel's answer for completed stages is already emitted
-          if (sorted.nonEmpty)
-            state.setTimeoutTimestamp(
-              tsMicros(sorted.last.ts) / 1000L + StateHorizonMs)
-          out.iterator
-          }
-        })
-    val stageCounts = runToMemory(s, stages.toDF(), OutputMode.Append,
-      needsNoDataBatch = false)
-    stageCounts.agg(
-      sum(when(col("stage") === "signup", 1).otherwise(0)).as("n_signup"),
-      sum(when(col("stage") === "click", 1).otherwise(0)).as("n_click_after"),
-      sum(when(col("stage") === "purchase", 1).otherwise(0)).as("n_purchase_after"))
+    keyedFold(s, typed.filter(col("namespace").isin("signup", "click", "purchase")),
+        eventTime[KeyedEvent](_.ts, _.event_id))(_.key) {
+        (user, prev: Option[FunnelState], sorted) =>
+      var st = prev.getOrElse(FunnelState(-1L, -1L, -1L))
+      val out = sorted.flatMap { e =>
+        val us = tsMicros(e.ts)
+        e.namespace match {
+          case "signup" if st.tSignupUs < 0 =>
+            st = st.copy(tSignupUs = us)
+            Some(FunnelLatency(user, "signup", 0L))
+          case "click" if st.tSignupUs >= 0 && st.tClickUs < 0 &&
+              us > st.tSignupUs =>
+            st = st.copy(tClickUs = us)
+            Some(FunnelLatency(user, "signup_to_click", us - st.tSignupUs))
+          case "purchase" if st.tClickUs >= 0 && st.tPurchaseUs < 0 &&
+              us > st.tClickUs =>
+            st = st.copy(tPurchaseUs = us)
+            Some(FunnelLatency(user, "click_to_purchase", us - st.tClickUs))
+          case _ => None
+        }
+      }
+      // a user inactive past the horizon stops occupying state; the
+      // funnel's answer for completed stages is already emitted
+      (Some(st), out)
+    }
+  }
+
+  /** The A15 stage counts over any keyed event stream. */
+  private[graft] def runFunnel(s: SparkSession,
+      typed: Dataset[KeyedEvent]): DataFrame = {
+    def n(stage: String) = sum(when(col("stage") === stage, 1).otherwise(0))
+    funnelFold(s, typed).agg(n("signup").as("n_signup"),
+      n("signup_to_click").as("n_click_after"),
+      n("click_to_purchase").as("n_purchase_after"))
   }
 
   // --- A25: streaming Storage mutation feed ---------------------------------
@@ -815,62 +818,47 @@ object Streaming {
   // this equals the batch window formulation → same oracle SQL.
   val storageFeed = QueryDef.oracled("stream_storage_feed",
     graft.queries.Coordination.storageFeedSql) { (s, d) =>
-    import s.implicits._
-    runStorageFeed(s, eventStream(s, d)
-      .select(col("event_type").as("namespace"), col("user_id").as("key"),
-        col("ts"), col("event_id"), col("value"))
-      .as[KeyedEvent])
+    runStorageFeed(s, keyedEvents(eventStream(s, d)))
   }
 
-  // op digit EXACTLY as Spark SQL round(value*100): BigDecimal HALF_UP
-  // (ties away from zero) — scala math.round is floor(x+0.5) and
-  // disagrees on negative .5 ties
-  private def opDigit(v: Double): Long =
-    scala.math.BigDecimal(v * 100)
+  /** The A16 op digit of one payload, by
+    * [[graft.queries.Coordination.opDigit]]'s rule: HALF_UP
+    * `round(value*100) % 10` exactly as Spark SQL `round` (BigDecimal
+    * HALF_UP, ties away from zero — scala math.round is floor(x+0.5) and
+    * disagrees on negative .5 ties); NaN is 0 and ±Inf saturate to
+    * `Long.Max/Min % 10`.
+    */
+  private[graft] def opDigit(v: Double): Long =
+    if (v.isNaN) 0L
+    else if (v * 100 >= Long.MaxValue.toDouble) Long.MaxValue % 10
+    else if (v * 100 <= Long.MinValue.toDouble) Long.MinValue % 10
+    else scala.math.BigDecimal(v * 100)
       .setScale(0, scala.math.BigDecimal.RoundingMode.HALF_UP)
       .toLong % 10
 
-  /** The presence-state fold over any KeyedEvent stream — exposed so
-    * the spec can drive it with a MULTI-batch time-split source,
-    * exercising the cross-batch state carry the single-file harness
-    * replay never reaches.
+  /** The A25 presence fold over any keyed event stream. A null payload
+    * has no op digit; as in the batch feed, it applies as an update.
     */
   private[graft] def runStorageFeed(s: SparkSession,
       typed: Dataset[KeyedEvent]): DataFrame = {
     import s.implicits._
-    val applied = typed
-      .withWatermark("ts", "1 hour")
-      .groupByKey(e => (e.namespace, e.key))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (_: (String, Long), it: Iterator[KeyedEvent],
-         state: GroupState[Boolean]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = it.toSeq.sortBy(e => (tsMicros(e.ts), e.event_id))
-            var present = state.getOption.getOrElse(false)
-            val out = scala.collection.mutable.ArrayBuffer.empty[
-              (String, Long, java.sql.Timestamp, Long, String, Option[Double])]
-            sorted.foreach { e =>
-              val op = opDigit(e.value)
-              if (op != 0 && op <= 3) {              // unconditional put
-                out += ((e.namespace, e.key, e.ts, e.event_id, "put", Some(e.value)))
-                present = true
-              } else if (op >= 4 && present) {       // update-if-present
-                out += ((e.namespace, e.key, e.ts, e.event_id, "update", Some(e.value)))
-              } else if (op == 0 && present) {       // applied delete
-                out += ((e.namespace, e.key, e.ts, e.event_id, "delete", None))
-                present = false
-              }
-            }
-            state.update(present)
-            if (sorted.nonEmpty)
-              state.setTimeoutTimestamp(
-                tsMicros(sorted.last.ts) / 1000L + StateHorizonMs)
-            out.iterator
-          }
-        })
-      .toDF("namespace", "key", "ts", "event_id", "op", "new_value")
-    runToMemory(s, applied, OutputMode.Append, needsNoDataBatch = false)
+    keyedFold(s, typed.toDF().as[KvEvent],
+        eventTime[KvEvent](_.ts, _.event_id))(e => (e.namespace, e.key)) {
+        (_, prev: Option[Boolean], sorted) =>
+      var present = prev.getOrElse(false)
+      val out = sorted.flatMap { e =>
+        val op = e.value.map(opDigit)
+        def row(kind: String, v: Option[Double]) =
+          Some((e.namespace, e.key, e.ts, e.event_id, kind, v))
+        if (op.exists(o => o != 0 && o <= 3)) {    // unconditional put
+          present = true; row("put", e.value)
+        } else if (!present) None                  // nothing to update or delete
+        else if (op.contains(0L)) {                // applied delete
+          present = false; row("delete", None)
+        } else row("update", e.value)              // update-if-present
+      }
+      (Some(present), out)
+    }.toDF("namespace", "key", "ts", "event_id", "op", "new_value")
   }
 
   // --- A28: streaming group-membership change feed --------------------------
@@ -891,11 +879,7 @@ object Streaming {
     "stream_group_change_feed",
     graft.queries.Coordination.groupFeedSql(
       "us // 1000 + 3600000 < e // 1000")) { (s, d) =>
-    import s.implicits._
-    runGroupFeed(s, eventStream(s, d)
-      .select(col("event_type").as("namespace"), col("user_id").as("key"),
-        col("ts"), col("event_id"), col("value"))
-      .as[KeyedEvent])
+    runGroupFeed(s, keyedEvents(eventStream(s, d)))
   }
 
   /** The membership fold over any KeyedEvent stream — exposed so the
@@ -1185,10 +1169,16 @@ object Streaming {
   private val MaxBucketDocs = 128
   val dedupMinhash = QueryDef.oracled(
     "stream_dedup_minhash", graft.queries.Dedup.jaccard08OracleSql) { (s, d) =>
+    runDedupMinhash(s, d, tableStream(s, d, "documents"))
+  }
+
+  /** The A19 fold over any documents stream; the candidate pairs are
+    * verified against the corpus at `d`.
+    */
+  private[graft] def runDedupMinhash(s: SparkSession, d: String,
+      raw: DataFrame): DataFrame = {
     import s.implicits._
-    val path = s"$d/documents.parquet"
-    val banded = s.readStream.schema(Tables.schemaOf(s, path))
-      .parquet(symlinkedDir(path, "documents.parquet"))
+    val banded = raw
       // the local single-row-group file arrives as one scan partition;
       // fan the micro-batch out BEFORE the tokenize/shingle/minhash
       // kernels so they use the full executor width (same ingest-spread
@@ -1200,41 +1190,28 @@ object Streaming {
           graft.functions.expressions.tokenize_words(col("text"))))
       .filter(size(col("shingles")) > 0)
       .withColumn("sig", graft.functions.expressions.minhash_sigs(col("shingles")))
-      .withColumn("ingest_ts", current_timestamp())
-      .withWatermark("ingest_ts", "1 second")
       .select(col("doc_id"),
         explode(expr(graft.queries.Dedup.bandListExpr)).as("bucket"),
-        col("ingest_ts"))
+        current_timestamp().as("ingest_ts"))
       .as[BandedDoc]
-    val cands = banded
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (_: String, it: Iterator[BandedDoc], state: GroupState[List[Long]]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val batch = it.toSeq
-            var seen = state.getOption.getOrElse(Nil)
-            var nSeen = seen.size
-            val out = scala.collection.mutable.ArrayBuffer.empty[CandidatePair]
-            // doc_id order stands in for arrival order inside a batch
-            batch.map(_.doc_id).sorted.foreach { id =>
-              if (nSeen < MaxBucketDocs) {
-                seen.foreach { prev =>
-                  if (prev != id)
-                    out += CandidatePair(math.min(prev, id), math.max(prev, id))
-                }
-                seen = id :: seen
-                nSeen += 1
-              } // else: saturated boilerplate bucket — stop tracking
-            }
-            state.update(seen)
-            state.setTimeoutTimestamp(
-              batch.map(e => tsMicros(e.ingest_ts)).max / 1000L + StateHorizonMs)
-            out.iterator
-          })
-    val candDf = runToMemory(s, cands.toDF(), OutputMode.Append,
-      needsNoDataBatch = false).distinct()
-    graft.queries.Dedup.verifyPairs(s, d, candDf, 0.8)
+    val cands = keyedFold(s, banded, ingestTime[BandedDoc](_.ingest_ts, _.doc_id))(
+        _.bucket) { (_, prev: Option[List[Long]], sorted) =>
+      var seen = prev.getOrElse(Nil)
+      var nSeen = seen.size
+      val out = scala.collection.mutable.ArrayBuffer.empty[CandidatePair]
+      sorted.foreach { e =>
+        if (nSeen < MaxBucketDocs) {
+          seen.foreach { p =>
+            if (p != e.doc_id)
+              out += CandidatePair(math.min(p, e.doc_id), math.max(p, e.doc_id))
+          }
+          seen = e.doc_id :: seen
+          nSeen += 1
+        } // else: saturated boilerplate bucket — stop tracking
+      }
+      (Some(seen), out)
+    }
+    graft.queries.Dedup.verifyPairs(s, d, cands.distinct(), 0.8)
   }
 
   // --- A13: the connector end-to-end: stream → keyed upsert sink ----------
@@ -1594,9 +1571,7 @@ object Streaming {
     "stream_strip_boilerplate", graft.queries.TextAnalysis.stripOracle) { (s, d) =>
     import s.implicits._
     val chrome = graft.queries.TextAnalysis.chromeGrams(s, d)
-    val path = s"$d/documents.parquet"
-    val toks = s.readStream.schema(Tables.schemaOf(s, path))
-      .parquet(symlinkedDir(path, "documents.parquet"))
+    val toks = tableStream(s, d, "documents")
       // ingest-spread: the tokenize kernel is ∝ corpus bytes
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id"),
@@ -1708,9 +1683,7 @@ object Streaming {
       |       ELSE 'low_quality' END AS disposition
       |FROM base b LEFT JOIN k USING (doc_id)
       |ORDER BY b.doc_id""".stripMargin) { (s, d) =>
-    val path = s"$d/documents.parquet"
-    runCorpusIngest(s, s.readStream.schema(Tables.schemaOf(s, path))
-      .parquet(symlinkedDir(path, "documents.parquet")),
+    runCorpusIngest(s, tableStream(s, d, "documents"),
       qualityMin, trainPct, valPct)
   }
 
@@ -1767,33 +1740,17 @@ object Streaming {
       .select(col("doc_id"), lit("low_quality").as("disposition"))
     val decided = scored.filter(nonBench && passesQ)
       .select(col("doc_id"),
-        md5(trim(regexp_replace(lower(col("text")), "[ \\t\\n\\f\\r]+", " ")))
-          .as("content_hash"),
+        contentHash(col("text")).as("content_hash"),
         col("split"), current_timestamp().as("ingest_ts"))
-      .withWatermark("ingest_ts", "1 second")
       .as[IngestDoc]
-      .groupByKey(_.content_hash)
-      .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.EventTimeTimeout)(
-        (_: String, it: Iterator[IngestDoc], state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val batch = it.toSeq
-            state.setTimeoutTimestamp(
-              batch.map(e => tsMicros(e.ingest_ts)).max / 1000L +
-                StateHorizonMs)
-            if (state.exists)
-              batch.iterator.map(e => IngestDecision(e.doc_id, "exact_dup"))
-            else {
-              state.update(true)
-              val w = batch.minBy(_.doc_id)
-              batch.iterator.map(e =>
-                if (e.doc_id == w.doc_id) IngestDecision(e.doc_id, e.split)
-                else IngestDecision(e.doc_id, "exact_dup"))
-            }
-          })
-    runToMemory(s, decided.toDF().union(bench).union(lowq),
-      OutputMode.Append, needsNoDataBatch = false)
+    keyedFold(s, decided, ingestTime[IngestDoc](_.ingest_ts, _.doc_id),
+        alongside = Seq(bench, lowq))(_.content_hash) { (_, seen: Option[Boolean], sorted) =>
+      // the first arrival (min doc_id) of a hash no earlier trigger saw
+      // is admitted; every other one is an exact duplicate
+      val winner = if (seen.isDefined) None else Some(sorted.head.doc_id)
+      (Some(true), sorted.map(e => IngestDecision(e.doc_id,
+        if (winner.contains(e.doc_id)) e.split else "exact_dup")))
+    }
   }
 
   // --- A32: streaming OOV-rate feed — C18's online half --------------------
@@ -1826,10 +1783,8 @@ object Streaming {
       |  CAST(pd.n_tokens - pd.n_in AS DOUBLE) / pd.n_tokens AS oov_rate
       |FROM documents d LEFT JOIN pd USING (doc_id)
       |ORDER BY d.doc_id""".stripMargin) { (s, d) =>
-    val path = s"$d/documents.parquet"
     runOovFeed(s,
-      s.readStream.schema(Tables.schemaOf(s, path))
-        .parquet(symlinkedDir(path, "documents.parquet")),
+      tableStream(s, d, "documents"),
       graft.queries.TextAnalysis.topVocabRow(s, d))
   }
 
@@ -1889,43 +1844,30 @@ object Streaming {
     runTransitionFeed(s, typed)
   }
 
-  /** The A34 pipeline over an arbitrary typed stream — seam for the
-    * multi-batch state-carry spec.
-    */
+  /** The A34 fold over any (event_type, user_id, ts, event_id) stream. */
   private[graft] def runTransitionFeed(s: SparkSession,
       typed: Dataset[DwellEvent]): DataFrame = {
     import s.implicits._
-    val feed = typed
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (_: Long, it: Iterator[DwellEvent], state: GroupState[TransitionState]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = it.toSeq.sortBy(e => (tsMicros(e.ts), e.event_id))
-            val out = scala.collection.mutable.ArrayBuffer.empty[TransitionRow]
-            var last: Option[TransitionState] = state.getOption
-            sorted.foreach { e =>
-              // Cross-batch late-data guard: an event older than the
-              // stored state (late across a batch boundary yet inside
-              // the watermark) must NOT pose as the newest event — it
-              // would emit a transition the batch oracle never saw.
-              // Late rows are dropped (bounded-replay caveat below);
-              // in-order feeds are unaffected.
-              if (!last.exists(_.lastUs > tsMicros(e.ts))) {
-                last.foreach(p => out += TransitionRow(
-                  e.user_id, e.ts, e.event_id, p.lastType, e.event_type))
-                last = Some(TransitionState(tsMicros(e.ts), e.event_type))
-              }
-            }
-            last.foreach(state.update)
-            if (sorted.nonEmpty)
-              state.setTimeoutTimestamp(
-                tsMicros(sorted.last.ts) / 1000L + StateHorizonMs)
-            out.iterator
-          }
-        })
-    runToMemory(s, feed.toDF(), OutputMode.Append, needsNoDataBatch = false)
+    keyedFold(s, typed, eventTime[DwellEvent](_.ts, _.event_id))(_.user_id) {
+        (_, prev: Option[TransitionState], sorted) =>
+      var last = prev
+      val out = sorted.flatMap { e =>
+        val us = tsMicros(e.ts)
+        // Cross-batch late-data guard: an event older than the stored
+        // state (late across a batch boundary yet inside the watermark)
+        // must NOT pose as the newest event — it would emit a transition
+        // the batch oracle never saw. Late rows are dropped (bounded-
+        // replay caveat above); in-order feeds are unaffected.
+        if (last.exists(_.lastUs > us)) None
+        else {
+          val row = last.map(p =>
+            TransitionRow(e.user_id, e.ts, e.event_id, p.lastType, e.event_type))
+          last = Some(TransitionState(us, e.event_type))
+          row
+        }
+      }
+      (last, out)
+    }
   }
 
   // --- A35: live last-touch attribution feed, streaming twin of B38 --------
@@ -1962,44 +1904,33 @@ object Streaming {
     runAttributionFeed(s, typed)
   }
 
-  /** The A35 pipeline over an arbitrary typed stream — seam for the
-    * multi-batch state-carry spec.
+  /** The A35 fold over any (event_type, user_id, ts, event_id, value)
+    * stream.
     */
   private[graft] def runAttributionFeed(s: SparkSession,
       typed: Dataset[AttribEvent]): DataFrame = {
     import s.implicits._
-    val feed = typed
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (_: Long, it: Iterator[AttribEvent], state: GroupState[TransitionState]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = it.toSeq.sortBy(e => (tsMicros(e.ts), e.event_id))
-            val out = scala.collection.mutable.ArrayBuffer.empty[AttribRow]
-            var touch: Option[TransitionState] = state.getOption
-            sorted.foreach { e =>
-              if (e.event_type == "purchase") {
-                // the stored touch must PRECEDE the purchase: a
-                // cross-batch-late purchase must not be attributed to
-                // a touch that happened after it
-                touch.filter(t => tsMicros(e.ts) >= t.lastUs
-                    && tsMicros(e.ts) - t.lastUs <= AttribLookbackUs)
-                  .foreach(t => out += AttribRow(
-                    e.user_id, e.ts, e.event_id, t.lastType, e.value))
-              } else if (!touch.exists(_.lastUs > tsMicros(e.ts)))
-                // cross-batch late-data guard (see runTransitionFeed):
-                // an older touch never overwrites a newer one
-                touch = Some(TransitionState(tsMicros(e.ts), e.event_type))
-            }
-            touch.foreach(state.update)
-            if (sorted.nonEmpty)
-              state.setTimeoutTimestamp(
-                tsMicros(sorted.last.ts) / 1000L + StateHorizonMs)
-            out.iterator
-          }
-        })
-    runToMemory(s, feed.toDF(), OutputMode.Append, needsNoDataBatch = false)
+    keyedFold(s, typed, eventTime[AttribEvent](_.ts, _.event_id))(_.user_id) {
+        (_, prev: Option[TransitionState], sorted) =>
+      var touch = prev
+      val out = sorted.flatMap { e =>
+        val us = tsMicros(e.ts)
+        if (e.event_type == "purchase")
+          // the stored touch must PRECEDE the purchase: a
+          // cross-batch-late purchase must not be attributed to a touch
+          // that happened after it
+          touch.filter(t => us >= t.lastUs && us - t.lastUs <= AttribLookbackUs)
+            .map(t => AttribRow(e.user_id, e.ts, e.event_id, t.lastType, e.value))
+        else {
+          // cross-batch late-data guard (see runTransitionFeed): an
+          // older touch never overwrites a newer one
+          if (!touch.exists(_.lastUs > us))
+            touch = Some(TransitionState(us, e.event_type))
+          None
+        }
+      }
+      (touch, out)
+    }
   }
 
   // --- A33: streaming heavy hitters, online twin of B36 --------------------
@@ -2221,59 +2152,14 @@ object Streaming {
       |       epoch_us(p.t) - epoch_us(c.t) AS lat_us
       |FROM p JOIN c USING (user_id)
       |ORDER BY user_id, stage""".stripMargin) { (s, d) =>
-    import s.implicits._
-    runFunnelLatency(s, eventStream(s, d)
-      .filter(col("event_type").isin("signup", "click", "purchase"))
-      .select(col("event_type").as("namespace"), col("user_id").as("key"),
-        col("ts"), col("event_id"), col("value"))
-      .as[KeyedEvent])
+    runFunnelLatency(s, keyedEvents(eventStream(s, d)))
   }
 
-  /** The A48 latency fold over any KeyedEvent stream — seam for the
-    * multi-batch state-carry spec (a purchase whose click landed in an
-    * earlier batch emits only if the FunnelState triple carries).
-    */
+  /** The A48 latency rows over any keyed event stream. */
   private[graft] def runFunnelLatency(s: SparkSession,
-      typed: Dataset[KeyedEvent]): DataFrame = {
-    import s.implicits._
-    val lats = typed
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (user: Long, it: Iterator[KeyedEvent], state: GroupState[FunnelState]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = it.toSeq.sortBy(e => (tsMicros(e.ts), e.event_id))
-            var st = state.getOption.getOrElse(FunnelState(-1L, -1L, -1L))
-            val out = scala.collection.mutable.ArrayBuffer.empty[FunnelLatency]
-            sorted.foreach { e =>
-              val us = tsMicros(e.ts)
-              e.namespace match {
-                case "signup" if st.tSignupUs < 0 =>
-                  st = st.copy(tSignupUs = us)
-                case "click" if st.tSignupUs >= 0 && st.tClickUs < 0 &&
-                    us > st.tSignupUs =>
-                  st = st.copy(tClickUs = us)
-                  out += FunnelLatency(user, "signup_to_click",
-                    us - st.tSignupUs)
-                case "purchase" if st.tClickUs >= 0 && st.tPurchaseUs < 0 &&
-                    us > st.tClickUs =>
-                  st = st.copy(tPurchaseUs = us)
-                  out += FunnelLatency(user, "click_to_purchase",
-                    us - st.tClickUs)
-                case _ => ()
-              }
-            }
-            state.update(st)
-            if (sorted.nonEmpty)
-              state.setTimeoutTimestamp(
-                tsMicros(sorted.last.ts) / 1000L + StateHorizonMs)
-            out.iterator
-          }
-        })
-    runToMemory(s, lats.toDF(), OutputMode.Append, needsNoDataBatch = false)
+      typed: Dataset[KeyedEvent]): DataFrame =
+    funnelFold(s, typed).filter(col("stage") =!= "signup")
       .orderBy(col("user_id"), col("stage"))
-  }
 
   // --- A49: streaming seasonal anomalies, online twin of B63 ---------------
   // Complete-mode (type, day, hour-of-day) running counts (linear →
@@ -2324,15 +2210,21 @@ object Streaming {
   val incrementalDedupFeed = QueryDef.oracled(
     "stream_incremental_dedup",
     graft.queries.Dedup.incrementalOracle) { (s, d) =>
+    runIncrementalDedup(s, incrementalArrivals(s, d, tableStream(s, d, "documents")))
+      .orderBy(col("doc_id"))
+  }
+
+  /** A50's arrivals from a documents frame (a stream, or the batch table
+    * for the spec): the stateless v2 fabrication, each arrival tagged
+    * with its v1 keeper if the corpus at `d` already holds its content.
+    */
+  private[graft] def incrementalArrivals(s: SparkSession, d: String,
+      docs: DataFrame): Dataset[IncArrival] = {
     import s.implicits._
-    def norm(c: org.apache.spark.sql.Column) =
-      md5(trim(regexp_replace(lower(c), "[ \\t\\n\\f\\r]+", " ")))
-    val path = s"$d/documents.parquet"
-    val docs = s.readStream.schema(Tables.schemaOf(s, path))
-      .parquet(symlinkedDir(path, "documents.parquet"))
+    val variants = docs
       // ingest-spread: normalize+md5 runs wide (the A14 note)
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-    val variants = docs.select(explode(filter(array(
+      .select(explode(filter(array(
         when(col("doc_id") % 17 =!= 3, struct(
           col("doc_id").as("doc_id"),
           when(col("doc_id") % 17 === 5,
@@ -2343,63 +2235,41 @@ object Streaming {
           concat(lit("v2 addendum for "), col("doc_id").cast("string"))
             .as("text")))),
         x => x.isNotNull)).as("v"))
-      .select(col("v.doc_id").as("doc_id"), norm(col("v.text")).as("h"))
+      .select(col("v.doc_id").as("doc_id"), contentHash(col("v.text")).as("h"))
     val v1h = Tables.spread(
         Tables.documents(s, d).select(col("doc_id"), col("text")),
         s, "doc_id")
-      .select(norm(col("text")).as("h"), col("doc_id"))
+      .select(contentHash(col("text")).as("h"), col("doc_id"))
       .groupBy(col("h")).agg(min(col("doc_id")).as("v1_keeper"))
       .localCheckpoint() // static side evaluated once, re-joined per batch
-    runIncrementalDedup(s,
-      variants.join(v1h, Seq("h"), "left")
-        .select(col("doc_id"), col("h"), col("v1_keeper")).as[IncArrival])
-      .orderBy(col("doc_id"))
+    variants.join(v1h, Seq("h"), "left")
+      .select(col("doc_id"), col("h"), col("v1_keeper")).as[IncArrival]
   }
 
-  /** The A50 disposition fold over any arrival stream — seam for the
-    * multi-batch state-carry spec (an in-batch dup whose keeper landed
-    * in an earlier trigger classifies dup_in_batch only if the
-    * per-hash keeper state carries).
+  /** The A50 disposition fold over any arrival stream. No event-time
+    * column on the document stream: ingest-time watermark + timeout
+    * bound the per-hash state (the A14 pattern).
     */
   private[graft] def runIncrementalDedup(s: SparkSession,
       typed: Dataset[IncArrival]): DataFrame = {
     import s.implicits._
-    // no event-time column on the document stream: ingest-time
-    // watermark + timeout bound the per-hash state (the A14 pattern)
-    val decided = typed
-      .withColumn("ingest_ts", current_timestamp())
-      .withWatermark("ingest_ts", "1 second")
-      .as[IncArrivalIngest]
-      .groupByKey(_.h)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (hash: String, it: Iterator[IncArrivalIngest], state: GroupState[Long]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = it.toSeq.sortBy(_.doc_id)
-            var keeper = state.getOption
-            val out = sorted.map { e =>
-              e.v1_keeper match {
-                case Some(k) =>
-                  IncDecision(e.doc_id, hash, "dup_of_existing", Some(k))
-                case None => keeper match {
-                  case Some(k) =>
-                    IncDecision(e.doc_id, hash, "dup_in_batch", Some(k))
-                  case None =>
-                    keeper = Some(e.doc_id)
-                    IncDecision(e.doc_id, hash, "admit", None)
-                }
-              }
-            }
-            keeper.foreach(state.update)
-            if (sorted.nonEmpty) {
-              val horizon = sorted.map(e => tsMicros(e.ingest_ts)).max / 1000L +
-                StateHorizonMs
-              state.setTimeoutTimestamp(horizon)
-            }
-            out.iterator
+    keyedFold(s, typed.withColumn("ingest_ts", current_timestamp()).as[IncArrivalIngest],
+        ingestTime[IncArrivalIngest](_.ingest_ts, _.doc_id))(_.h) {
+        (hash, prev: Option[Long], sorted) =>
+      var keeper = prev
+      val out = sorted.map { e =>
+        e.v1_keeper match {
+          case Some(k) => IncDecision(e.doc_id, hash, "dup_of_existing", Some(k))
+          case None => keeper match {
+            case Some(k) => IncDecision(e.doc_id, hash, "dup_in_batch", Some(k))
+            case None =>
+              keeper = Some(e.doc_id)
+              IncDecision(e.doc_id, hash, "admit", None)
           }
-        })
-    runToMemory(s, decided.toDF(), OutputMode.Append, needsNoDataBatch = false)
+        }
+      }
+      (keeper, out)
+    }
   }
 
   // --- A41: streaming sequence packing, online twin of C14 -----------------
@@ -2421,9 +2291,7 @@ object Streaming {
   val packFeed = QueryDef.oracled(
     "stream_corpus_pack", graft.queries.TextAnalysis.corpusPackOracle) { (s, d) =>
     import s.implicits._
-    val path = s"$d/documents.parquet"
-    val docs = s.readStream.schema(Tables.schemaOf(s, path))
-      .parquet(symlinkedDir(path, "documents.parquet"))
+    val docs = tableStream(s, d, "documents")
       // ingest-spread: tokenize + fingerprint run wide (A14's note)
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
     runCorpusPack(s, packProjection(docs).as[PackDoc])
@@ -2523,11 +2391,9 @@ object Streaming {
   // codebook is a literal (NCentroids × dim floats) riding the
   // closure. Drained feed ≡ batch knn_ivf on the same queries by spec.
   val annProbe = QueryDef.rowsOnly("stream_ann_probe") { (s, d) =>
-    val path = s"$d/embeddings.parquet"
     val Sim = graft.queries.Similarity
     runAnnProbe(s,
-      s.readStream.schema(Tables.schemaOf(s, path))
-        .parquet(symlinkedDir(path, "embeddings.parquet"))
+      tableStream(s, d, "embeddings")
         .filter(col("vec_id") < Sim.NQueries), d)
   }
 
@@ -2671,10 +2537,8 @@ object Streaming {
   // |arrivals|·K rows, collected driver-side (collectProbes) — the
   // harness stand-in for answering RPCs from the sink.
   val annAdc = QueryDef.rowsOnly("stream_ann_adc") { (s, d) =>
-    val path = s"$d/embeddings.parquet"
     runAnnAdc(s,
-      s.readStream.schema(Tables.schemaOf(s, path))
-        .parquet(symlinkedDir(path, "embeddings.parquet"))
+      tableStream(s, d, "embeddings")
         .filter(col("vec_id") < graft.queries.Similarity.NQueries), d)
   }
 
@@ -2706,10 +2570,8 @@ object Streaming {
   // mass (nProbe/nLists of 16 B/vector codes) — both index dials
   // (nProbe, PqRerank) apply unchanged at serve time.
   val annIvfPq = QueryDef.rowsOnly("stream_ann_ivfpq") { (s, d) =>
-    val path = s"$d/embeddings.parquet"
     runAnnIvfPq(s,
-      s.readStream.schema(Tables.schemaOf(s, path))
-        .parquet(symlinkedDir(path, "embeddings.parquet"))
+      tableStream(s, d, "embeddings")
         .filter(col("vec_id") < graft.queries.Similarity.NQueries), d)
   }
 
@@ -2769,10 +2631,8 @@ object Streaming {
   // scratch store (the spec publishes to a real store and serves the
   // maintained generation from a fresh session).
   val annIndexUpsert = QueryDef.rowsOnly("stream_ann_index_upsert") { (s, d) =>
-    val path = s"$d/embeddings.parquet"
     runAnnIndexUpsert(s,
-      s.readStream.schema(Tables.schemaOf(s, path))
-        .parquet(symlinkedDir(path, "embeddings.parquet"))
+      tableStream(s, d, "embeddings")
         .filter(pmod(col("vec_id"), lit(5)) === 0), d)
   }
 
@@ -2841,10 +2701,8 @@ object Streaming {
   // IVFADC codes) stay fresh between rebuilds, and serving reads them
   // via the generation pointer.
   val annCodesUpsert = QueryDef.rowsOnly("stream_ann_codes_upsert") { (s, d) =>
-    val path = s"$d/embeddings.parquet"
     runAnnCodesUpsert(s,
-      s.readStream.schema(Tables.schemaOf(s, path))
-        .parquet(symlinkedDir(path, "embeddings.parquet"))
+      tableStream(s, d, "embeddings")
         .filter(pmod(col("vec_id"), lit(5)) === 0), d)
   }
 

@@ -190,6 +190,18 @@ class CoordinationApiSpec extends AnyFunSuite {
     assert(got("-Inf is a put").contains(ninf) && got("+Inf is an update").contains(inf))
     assert(got("negative half-cent").contains(-0.005))
     assert(got("NaN deletes").isEmpty && got("put after delete").contains(7.05))
+    // the distributed replay and the stream twin classify the same
+    // non-finite payloads without an ANSI cast error
+    val snap = wapi.snapshotCas(ns).collect()
+      .map(r => r.getAs[Long]("key") -> r.getAs[Double]("value")).toMap
+    keys.foreach { case (name, k) =>
+      assert(snap.get(k) == got(name), s"$name (key $k): snapshotCas ${snap.get(k)}")
+    }
+    def feed(q: String) = SparkEntry.queries(q)(spark, dir).collect()
+      .map(_.toSeq.mkString("|")).sorted.toSeq
+    val batchFeed = feed("kv_storage_feed")
+    assert(batchFeed.exists(_.contains("Infinity")))
+    assert(feed("stream_storage_feed") == batchFeed)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 

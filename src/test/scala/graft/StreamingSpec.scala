@@ -57,6 +57,103 @@ class StreamingSpec extends AnyFunSuite {
     srcDir
   }
 
+  /** One stateful stream twin in the split-invariance table: `source`
+    * is its input as a batch frame, split 4 ways by `order` into one
+    * file per trigger; `drain` runs the twin's seam over the resulting
+    * stream; `carries` names the state a boundary-straddling group
+    * needs. The drained rows must equal `reference` (default: the same
+    * seam drained over the source in one trigger) as a multiset, and be
+    * non-empty.
+    */
+  private case class SplitRow(name: String, carries: String,
+      source: () => org.apache.spark.sql.DataFrame,
+      order: Seq[String],
+      drain: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      reference: Option[() => org.apache.spark.sql.DataFrame] = None,
+      check: Seq[org.apache.spark.sql.Row] => Unit = _ => ())
+
+  private val splitRows: Seq[SplitRow] = {
+    import graft.streaming.{AttribEvent, DwellEvent, IncArrival, KeyedEvent,
+      Streaming => S}
+    import spark.implicits._
+    def keyed() = S.keyedEvents(Tables.events(spark, sf)).toDF()
+    def dwell() = Tables.events(spark, sf)
+      .select(col("event_type"), col("user_id"), col("ts"), col("event_id"))
+    def docs() = Tables.documents(spark, sf)
+    // every row again under a doc_id past the corpus: each content hash
+    // recurs in a later trigger, so only carried state can call it a dup
+    def twice(df: org.apache.spark.sql.DataFrame) =
+      df.unionByName(df.withColumn("doc_id", col("doc_id") + 100000000L))
+    val byTime = Seq("ts", "event_id")
+    val byDoc = Seq("doc_id")
+    Seq(
+      // coarse values repeat, so an unchanged value across a trigger
+      // boundary is suppressed only by the carried last value
+      SplitRow("stream_change_feed", "carries last-value state",
+        () => keyed().withColumn("value", round(col("value") / 100)), byTime,
+        src => S.runChangeFeed(spark, src.as[KeyedEvent])),
+      SplitRow("stream_scd2", "closes intervals", keyed, byTime,
+        src => S.runScd2Feed(spark, src.as[KeyedEvent]),
+        Some(() => SparkEntry.queries("kv_scd2")(spark, sf)
+          .filter(col("valid_to").isNotNull))),
+      SplitRow("stream_dwell", "carries last-seen state", dwell, byTime,
+        src => S.runDwellFeed(spark, src.as[DwellEvent])),
+      SplitRow("stream_leader_election", "carries the incumbent's lease",
+        keyed, byTime, src => S.runLeaderElection(spark, src.as[KeyedEvent])),
+      SplitRow("stream_funnel", "carries stage state into the counts", keyed,
+        byTime, src => S.runFunnel(spark, src.as[KeyedEvent])),
+      SplitRow("stream_storage_feed", "carries presence state", keyed, byTime,
+        src => S.runStorageFeed(spark, src.as[KeyedEvent]),
+        Some(() => SparkEntry.queries("kv_storage_feed")(spark, sf))),
+      SplitRow("stream_transition_feed", "carries last-type state", dwell,
+        byTime, src => S.runTransitionFeed(spark, src.as[DwellEvent])),
+      SplitRow("stream_attribution", "carries touch state",
+        () => Tables.events(spark, sf).select(col("event_type"),
+          col("user_id"), col("ts"), col("event_id"), col("value")),
+        byTime, src => S.runAttributionFeed(spark, src.as[AttribEvent])),
+      SplitRow("stream_funnel_latency", "carries stage state", keyed, byTime,
+        src => S.runFunnelLatency(spark, src.as[KeyedEvent]),
+        // both latency stages are exercised
+        check = rows => assert(rows.map(_.getAs[String]("stage")).toSet ===
+          Set("signup_to_click", "click_to_purchase"))),
+      SplitRow("stream_dedup_exact", "carries first-seen hashes",
+        () => twice(docs()), byDoc, src => S.runDedupExact(spark, src)),
+      SplitRow("stream_dedup_minhash", "carries bucket members", docs, byDoc,
+        src => S.runDedupMinhash(spark, sf, src)),
+      SplitRow("stream_corpus_ingest", "carries content-hash state",
+        () => twice(docs()), byDoc, src => S.runCorpusIngest(spark, src)),
+      SplitRow("stream_incremental_dedup", "carries the per-hash keeper",
+        () => twice(S.incrementalArrivals(spark, sf, docs()).toDF()), byDoc,
+        src => S.runIncrementalDedup(spark, src.as[IncArrival])),
+      // not a keyed fold (its TTL timeout emits expiries), same contract
+      SplitRow("stream_group_change_feed", "carries membership state", keyed,
+        byTime, src => S.runGroupFeed(spark, src.as[KeyedEvent])))
+  }
+
+  splitRows.foreach { row =>
+    test(s"${row.name} ${row.carries} across MULTIPLE micro-batches") {
+      val source = row.source()
+      def drained(triggers: Int) = {
+        val srcDir = timeSplitSource(source, triggers, row.order.map(col))
+        try {
+          val schema = spark.read.parquet(s"$srcDir/batch_1.parquet").schema
+          val out = row.drain(spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1).parquet(srcDir))
+          (out.columns.toSeq, out.collect().toSeq)
+        } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(srcDir))
+      }
+      def canon(rows: Seq[org.apache.spark.sql.Row]) =
+        rows.map(_.toSeq.mkString("|")).sorted
+      val (cols, got) = drained(4)
+      val want = row.reference.fold(drained(1)._2)(
+        _().select(cols.map(col): _*).collect().toSeq)
+      assert(got.nonEmpty, s"${row.name}: empty result")
+      assert(canon(got) == canon(want),
+        s"${row.name}: the 4-trigger drain differs from the reference")
+      row.check(got)
+    }
+  }
+
   test("stream_change_feed equals the batch value_change_feed") {
     val stream = SparkEntry.queries("stream_change_feed")(spark, sf)
       .collect().map(r => (r.getAs[String]("namespace"), r.getAs[Long]("key"),
@@ -162,87 +259,6 @@ class StreamingSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(srcDir))
   }
 
-  test("stream_storage_feed carries presence state across MULTIPLE micro-batches") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // time-split the log into 4 ordered files and force one file per
-    // trigger: batch 2+ must see presence established (or deleted) by
-    // earlier batches, exercising the cross-batch state carry the
-    // single-file replay never reaches. Files are written sequentially
-    // so the file source's modification-time order equals event-time
-    // order (no cross-batch late data to drop).
-    val srcDir = timeSplitSource(Tables.events(spark, sf)
-      .select(col("event_type").as("namespace"), col("user_id").as("key"),
-        col("ts"), col("event_id"), col("value")),
-      4, Seq(col("ts"), col("event_id")))
-    val schema = spark.read.parquet(s"$srcDir/batch_1.parquet").schema
-    val typed = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .as[graft.streaming.KeyedEvent]
-    val got = graft.streaming.Streaming.runStorageFeed(spark, typed)
-      .collect().map(r => (r.getAs[String]("namespace"), r.getAs[Long]("key"),
-        r.getAs[Long]("event_id"), r.getAs[String]("op"))).toSet
-    val batch = SparkEntry.queries("kv_storage_feed")(spark, sf)
-      .collect().map(r => (r.getAs[String]("namespace"), r.getAs[Long]("key"),
-        r.getAs[Long]("event_id"), r.getAs[String]("op"))).toSet
-    assert(got === batch)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(srcDir))
-  }
-
-  test("stream_dwell carries last-seen state across MULTIPLE micro-batches") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // 4 time-split files, one per trigger: every cross-batch gap (a
-    // user whose consecutive events straddle a file boundary) exists
-    // ONLY if the per-user last-ts state carries between batches
-    val srcDir = timeSplitSource(Tables.events(spark, sf)
-      .select(col("event_type"), col("user_id"), col("ts"), col("event_id")),
-      4, Seq(col("ts"), col("event_id")))
-    val schema = spark.read.parquet(s"$srcDir/batch_1.parquet").schema
-    val typed = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .as[graft.streaming.DwellEvent]
-    val got = graft.streaming.Streaming.runDwellFeed(spark, typed)
-      .collect().map(r => (r.getAs[Long]("user_id"),
-        r.getAs[Long]("event_id"), r.getAs[Long]("gap_us"))).toSet
-    val batch = SparkEntry.queries("stream_dwell")(spark, sf)
-      .collect().map(r => (r.getAs[Long]("user_id"),
-        r.getAs[Long]("event_id"), r.getAs[Long]("gap_us"))).toSet
-    assert(got === batch)
-    // the boundary gaps must be present: at least one per-user pair
-    // straddles each of the 3 file boundaries on this corpus
-    assert(got.size == batch.size && got.nonEmpty)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(srcDir))
-  }
-
-  test("stream_group_change_feed carries membership state across MULTIPLE micro-batches") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // same time-split harness as the storage-feed spec: batch 2+ must
-    // see aliveness established by earlier batches (cross-batch lapse
-    // detection reads the carried last-heartbeat state), and the final
-    // no-data batch must fire the log-end expiries via timeout. The
-    // reference output is the SINGLE-file streaming run — bit-identical
-    // semantics regardless of batch boundaries is the contract.
-    val srcDir = timeSplitSource(Tables.events(spark, sf)
-      .select(col("event_type").as("namespace"), col("user_id").as("key"),
-        col("ts"), col("event_id"), col("value")),
-      4, Seq(col("ts"), col("event_id")))
-    val schema = spark.read.parquet(s"$srcDir/batch_1.parquet").schema
-    val typed = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .as[graft.streaming.KeyedEvent]
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getAs[String]("grp"), r.getAs[Long]("member"),
-        r.getAs[String]("event"), r.getAs[Long]("ts_us"))
-    val got = graft.streaming.Streaming.runGroupFeed(spark, typed)
-      .collect().map(key).toSet
-    val oneBatch = SparkEntry.queries("stream_group_change_feed")(spark, sf)
-      .collect().map(key).toSet
-    assert(got === oneBatch)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(srcDir))
-  }
-
   test("stream_interval_join matches clicks to purchases across micro-batches") {
     import org.apache.spark.sql.functions._
     // time-split the log; a click in batch 1 must still match a
@@ -281,24 +297,29 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     // the fold computes the op digit driver-side; it must agree with the
-    // batch twin's round(value*100) on EVERY double, including the
-    // negative .5 ties where scala math.round (floor(x+0.5)) differs
-    // from BigDecimal HALF_UP (ties away from zero)
+    // batch twin's round(value*100) on EVERY finite double, including
+    // the negative .5 ties where scala math.round (floor(x+0.5)) differs
+    // from BigDecimal HALF_UP (ties away from zero), and with the shared
+    // column on non-finite ones, where an ANSI cast of round() throws
     val edge = Seq(-0.125, -0.115, -0.105, 0.105, 0.115, 0.125, // exact .5 ties at *100
       -0.005, 0.005, 0.0, -0.0)
     val rng = new scala.util.Random(42)
     val vals = edge ++ Seq.fill(2000)(rng.nextDouble() * 200 - 100) ++
       Seq.fill(500)((rng.nextInt(20001) - 10000) / 200.0) // dense .005 grid
-    val sparkSide = vals.toDF("v")
-      .select(col("v"), (round(col("v") * 100).cast("long") % 10).as("op"))
-      .collect().map(r => r.getDouble(0) -> r.getLong(1)).toMap
-    def opDigit(v: Double): Long =
-      scala.math.BigDecimal(v * 100)
-        .setScale(0, scala.math.BigDecimal.RoundingMode.HALF_UP)
-        .toLong % 10
-    vals.foreach { v =>
-      assert(opDigit(v) == sparkSide(v), s"op digit diverges at v=$v")
+    def digits(vs: Seq[Double], op: org.apache.spark.sql.Column) =
+      vs.toDF("v").select(op).collect().map(_.getLong(0)).toSeq
+    val shared = graft.queries.Coordination.opDigit(col("v"))
+    val sqlRound = digits(vals, round(col("v") * 100).cast("long") % 10)
+    vals.zip(sqlRound).zip(digits(vals, shared)).foreach { case ((v, sql), col) =>
+      assert(graft.streaming.Streaming.opDigit(v) == sql && col == sql,
+        s"op digit diverges at v=$v")
     }
+    // NaN deletes; ±Inf and beyond-Long cents saturate to Long.Max/Min % 10
+    val nonFinite = Seq(Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity, 1e300, -1e300)
+    val want = Seq(0L, 7L, -8L, 7L, -8L)
+    assert(nonFinite.map(graft.streaming.Streaming.opDigit) == want)
+    assert(digits(nonFinite, shared) == want)
   }
 
   test("stream_corpus_ingest dedups across MULTIPLE micro-batches") {
@@ -1049,53 +1070,6 @@ class StreamingSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(srcDir))
   }
 
-  test("stream_transition_feed carries last-type state across MULTIPLE micro-batches") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // the stream_dwell harness with the transition payload: cross-batch
-    // transitions (a user's consecutive events straddling a file
-    // boundary) exist ONLY if the last-type state carries
-    val srcDir = timeSplitSource(Tables.events(spark, sf)
-      .select(col("event_type"), col("user_id"), col("ts"), col("event_id")),
-      4, Seq(col("ts"), col("event_id")))
-    val schema = spark.read.parquet(s"$srcDir/batch_1.parquet").schema
-    val typed = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .as[graft.streaming.DwellEvent]
-    val got = graft.streaming.Streaming.runTransitionFeed(spark, typed)
-      .collect().map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("event_id"),
-        r.getAs[String]("from_type"), r.getAs[String]("to_type"))).toSet
-    val batch = SparkEntry.queries("stream_transition_feed")(spark, sf)
-      .collect().map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("event_id"),
-        r.getAs[String]("from_type"), r.getAs[String]("to_type"))).toSet
-    assert(got === batch && got.nonEmpty)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(srcDir))
-  }
-
-  test("stream_scd2 closes intervals across MULTIPLE micro-batches") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // a run that STARTS in one batch and is closed by a change in a
-    // later one yields its interval only if the run state carries
-    val srcDir = timeSplitSource(Tables.events(spark, sf)
-      .select(col("event_type").as("namespace"), col("user_id").as("key"),
-        col("ts"), col("event_id"), col("value")),
-      4, Seq(col("ts"), col("event_id")))
-    val schema = spark.read.parquet(s"$srcDir/batch_1.parquet").schema
-    val typed = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .as[graft.streaming.KeyedEvent]
-    val got = graft.streaming.Streaming.runScd2Feed(spark, typed)
-      .collect().map(r => (r.getAs[String]("namespace"), r.getAs[Long]("key"),
-        r.getAs[Long]("valid_from_id"), r.getAs[Double]("value"))).toSet
-    val batch = SparkEntry.queries("kv_scd2")(spark, sf)
-      .filter(col("valid_to").isNotNull)
-      .collect().map(r => (r.getAs[String]("namespace"), r.getAs[Long]("key"),
-        r.getAs[Long]("valid_from_id"), r.getAs[Double]("value"))).toSet
-    assert(got === batch && got.nonEmpty)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(srcDir))
-  }
-
   test("transition/attribution feeds drop cross-batch-LATE data instead of corrupting state") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
@@ -1140,30 +1114,6 @@ class StreamingSpec extends AnyFunSuite {
       s"late click must not rewrite the touch; late purchase@80 must not attribute: $att")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(srcDir))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(attDir))
-  }
-
-  test("stream_attribution carries touch state across MULTIPLE micro-batches") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // time-split harness: a purchase whose latest touch landed in an
-    // earlier batch is attributed ONLY if the per-user touch state
-    // carries between triggers
-    val srcDir = timeSplitSource(Tables.events(spark, sf)
-      .select(col("event_type"), col("user_id"), col("ts"), col("event_id"),
-        col("value")),
-      4, Seq(col("ts"), col("event_id")))
-    val schema = spark.read.parquet(s"$srcDir/batch_1.parquet").schema
-    val typed = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .as[graft.streaming.AttribEvent]
-    val got = graft.streaming.Streaming.runAttributionFeed(spark, typed)
-      .collect().map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("event_id"),
-        r.getAs[String]("touch_type"))).toSet
-    val batch = SparkEntry.queries("stream_attribution")(spark, sf)
-      .collect().map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("event_id"),
-        r.getAs[String]("touch_type"))).toSet
-    assert(got === batch && got.nonEmpty)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(srcDir))
   }
 
   test("stream_user_sample: bottom-k state is batch-boundary-invariant") {
@@ -1368,35 +1318,6 @@ class StreamingSpec extends AnyFunSuite {
       val us = ts.getTime / 1000 * 1000000L + ts.getNanos / 1000
       assert(exp == us + graft.queries.Coordination.KvRowTtlMicros)
     }
-  }
-
-  test("stream_funnel_latency carries stage state across MULTIPLE micro-batches") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // 4 time-split files, one per trigger: a click whose signup landed
-    // in an earlier batch (or a purchase whose click did) emits its
-    // latency ONLY if the per-user FunnelState triple carries between
-    // triggers. Reference = the single-file streaming run.
-    val srcDir = timeSplitSource(Tables.events(spark, sf)
-      .filter(col("event_type").isin("signup", "click", "purchase"))
-      .select(col("event_type").as("namespace"), col("user_id").as("key"),
-        col("ts"), col("event_id"), col("value")),
-      4, Seq(col("ts"), col("event_id")))
-    val schema = spark.read.parquet(s"$srcDir/batch_1.parquet").schema
-    val typed = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .as[graft.streaming.KeyedEvent]
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getAs[Long]("user_id"), r.getAs[String]("stage"),
-        r.getAs[Long]("lat_us"))
-    val got = graft.streaming.Streaming.runFunnelLatency(spark, typed)
-      .collect().map(key).toSet
-    val oneBatch = SparkEntry.queries("stream_funnel_latency")(spark, sf)
-      .collect().map(key).toSet
-    assert(got === oneBatch && got.nonEmpty)
-    // both latency stages must be exercised
-    assert(got.map(_._2) === Set("signup_to_click", "click_to_purchase"))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(srcDir))
   }
 
   test("stream_incremental_dedup carries the batch-keeper state across triggers") {
