@@ -74,7 +74,7 @@ object Tables {
     * [[fileStatuses]] without the hidden names Spark's file index skips
     * (`_SUCCESS`, which every append rewrites, and `.crc` checksums).
     */
-  private def dataFiles(spark: SparkSession, path: String): Map[String, (Long, Long)] =
+  private[graft] def dataFiles(spark: SparkSession, path: String): Map[String, (Long, Long)] =
     fileStatuses(spark.sparkContext.hadoopConfiguration, path).getOrElse(Nil)
       .filterNot { st =>
         val n = st.getPath.getName

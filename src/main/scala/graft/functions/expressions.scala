@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -235,33 +233,11 @@ object expressions {
     override protected def withNewChildInternal(c: Expression): CharGrams4 = copy(c)
   }
 
-  /** A `Long` parameter bound outside the generated code: the value is
-    * read from the stage's reference array, so plans that differ only in
-    * this value generate identical Java and share one compiled class (a
-    * `Literal` is inlined into the source, so every new value compiles
-    * anew). Not foldable, so `ConstantFolding` cannot turn it back into
-    * a literal — and, for the same reason, a comparison against it is
-    * not pushed into the parquet reader.
-    */
-  case class BoundLong(value: Long) extends LeafExpression {
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = false
-    override def foldable: Boolean = false
-    override def eval(input: InternalRow): Any = value
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("boundLong", java.lang.Long.valueOf(value),
-        "java.lang.Long")
-      ev.copy(code = code"final long ${ev.value} = $ref.longValue();",
-        isNull = FalseLiteral)
-    }
-  }
-
   // ---- Column API -------------------------------------------------------
 
   private def toCol(e: Expression): Column = org.apache.spark.sql.GraftColumnShim.column(e)
   private def ex(c: Column): Expression = org.apache.spark.sql.GraftColumnShim.expression(c)
 
-  def bound_long(v: Long): Column = toCol(BoundLong(v))
   def fingerprint64(c: Column): Column = toCol(Fingerprint64(ex(c)))
   def tokenize_words(c: Column): Column = toCol(TokenizeWords(ex(c)))
   def srp_sig(c: Column, nBits: Int): Column = toCol(SrpSig(ex(c), nBits))

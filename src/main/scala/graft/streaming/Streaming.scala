@@ -30,15 +30,14 @@ import org.apache.spark.sql.types.{DecimalType, StructType}
   */
 case class KeyedEvent(
     namespace: String, key: Long, ts: java.sql.Timestamp,
-    event_id: Long, value: Double)
-/** A [[KeyedEvent]] whose payload may be null. */
-case class KvEvent(
-    namespace: String, key: Long, ts: java.sql.Timestamp,
     event_id: Long, value: Option[Double])
+/** A key's previous payload (None: no previous event, or a null one). */
+case class PrevValue(value: Option[Double])
 case class LeaderState(leader: Long, sessionStartUs: Long, lastHbUs: Long)
+/** An open SCD2 run and the payload of the key's previous event. */
 case class Scd2State(fromTs: java.sql.Timestamp, fromId: Long,
-    value: Double, lastUs: Long)
-case class Scd2Row(namespace: String, key: Long, value: Double,
+    value: Option[Double], lastUs: Long, prev: Option[Double])
+case class Scd2Row(namespace: String, key: Long, value: Option[Double],
     valid_from: java.sql.Timestamp, valid_from_id: Long,
     valid_to: java.sql.Timestamp)
 case class DwellEvent(
@@ -463,22 +462,28 @@ object Streaming {
     runChangeFeed(s, keyedEvents(eventStream(s, d)))
   }
 
+  /** A4's change test `prev IS NULL OR value <> prev` in SQL semantics,
+    * shared by A10 and A39: `prev` is the key's previous payload (None:
+    * no previous event, or a null one), a null payload never differs
+    * from a present one, and NaN equals NaN (as in Spark and DuckDB, not
+    * Scala's IEEE `!=`).
+    */
+  private def changed(prev: Option[Double], value: Option[Double]): Boolean =
+    prev.forall(p => value.exists(v => v != p && !(v.isNaN && p.isNaN)))
+
   /** The A10 fold over any keyed event stream. */
   private[graft] def runChangeFeed(s: SparkSession,
       typed: Dataset[KeyedEvent]): DataFrame = {
     import s.implicits._
     keyedFold(s, typed, eventTime[KeyedEvent](_.ts, _.event_id))(
-        e => (e.namespace, e.key)) { (_, prev: Option[Double], sorted) =>
-      // SQL equality semantics (NaN = NaN is true in Spark/DuckDB),
-      // not Scala's IEEE NaN != NaN — keeps parity with batch A4
-      def same(a: Double, b: Double) = a == b || (a.isNaN && b.isNaN)
-      var last = prev
+        e => (e.namespace, e.key)) { (_, prev: Option[PrevValue], sorted) =>
+      var last = prev.flatMap(_.value)
       val out = sorted.filter { e =>
-        val changed = !last.exists(same(_, e.value))
-        if (changed) last = Some(e.value)
-        changed
+        val c = changed(last, e.value)
+        last = e.value
+        c
       }
-      (last, out)
+      (Some(PrevValue(last)), out)
     }
   }
 
@@ -523,18 +528,15 @@ object Streaming {
         e => (e.namespace, e.key)) { (_, prev: Option[Scd2State], sorted) =>
       val out = scala.collection.mutable.ArrayBuffer.empty[Scd2Row]
       var run = prev
-      // SQL equality semantics, as in A10
-      def same(a: Double, b: Double) = a == b || (a.isNaN && b.isNaN)
       sorted.foreach { e =>
         val us = tsMicros(e.ts)
         if (!run.exists(_.lastUs > us)) run match {
-          case Some(r) if same(r.value, e.value) =>
-            run = Some(r.copy(lastUs = us))
-          case Some(r) =>
-            out += Scd2Row(e.namespace, e.key, r.value, r.fromTs, r.fromId, e.ts)
-            run = Some(Scd2State(e.ts, e.event_id, e.value, us))
-          case None =>
-            run = Some(Scd2State(e.ts, e.event_id, e.value, us))
+          case Some(r) if !changed(r.prev, e.value) =>
+            run = Some(r.copy(lastUs = us, prev = e.value))
+          case _ =>
+            run.foreach(r =>
+              out += Scd2Row(e.namespace, e.key, r.value, r.fromTs, r.fromId, e.ts))
+            run = Some(Scd2State(e.ts, e.event_id, e.value, us, e.value))
         }
       }
       (run, out)
@@ -842,8 +844,8 @@ object Streaming {
   private[graft] def runStorageFeed(s: SparkSession,
       typed: Dataset[KeyedEvent]): DataFrame = {
     import s.implicits._
-    keyedFold(s, typed.toDF().as[KvEvent],
-        eventTime[KvEvent](_.ts, _.event_id))(e => (e.namespace, e.key)) {
+    keyedFold(s, typed,
+        eventTime[KeyedEvent](_.ts, _.event_id))(e => (e.namespace, e.key)) {
         (_, prev: Option[Boolean], sorted) =>
       var present = prev.getOrElse(false)
       val out = sorted.flatMap { e =>
@@ -911,7 +913,7 @@ object Streaming {
                 out += ((gk._1, gk._2, "expire", l + ttl))
                 lastHb = None
               }
-              if (opDigit(e.value) != 0) {               // heartbeat
+              if (!e.value.map(opDigit).contains(0L)) {  // heartbeat (null too)
                 if (lastHb.isEmpty) out += ((gk._1, gk._2, "join", us))
                 lastHb = Some(us)
               } else if (lastHb.isDefined) {             // applied leave

@@ -2,8 +2,9 @@ package graft
 
 import graft.api.CoordinationApi
 import org.apache.spark.JobCounter
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 class CoordinationApiSpec extends AnyFunSuite {
@@ -65,29 +66,70 @@ class CoordinationApiSpec extends AnyFunSuite {
     assert(api.snapshotCas("click").count() == replay.size)
   }
 
-  test("point reads compile once per read kind; fetchCas is at most 2 jobs") {
-    // a written key warms each read kind; then fresh keys, some written
-    // and one never written
-    val written = Tables.events(spark, sf).filter(col("event_type") === "click")
-      .select(col("user_id")).distinct().orderBy(col("user_id").desc)
-      .limit(6).collect().map(_.getLong(0)).toSeq
-    val keys = written.tail :+ 880001L
-    val reads: Seq[(String, Long => Any)] = Seq(
-      "fetch" -> (k => api.fetch("click", k)),
-      "firstWrite" -> (k => api.firstWrite("click", k)),
-      "fetchCas" -> (k => api.fetchCas("click", k)),
-      "isMember" -> (k => api.isMember("signup", k)))
-    reads.foreach { case (name, read) =>
-      read(written.head) // warm: the one compile this read kind needs
-      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      keys.foreach(read)
-      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-      assert(compiled == 0, s"$name compiled $compiled classes over ${keys.size} new keys")
+  /** A writable copy of sf0.001's changelog: a parquet directory holding
+    * the one base file, the layout `append` writes into.
+    */
+  private def writableChangelog(prefix: String): String = {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory(prefix).toString
+    Files.createDirectory(Paths.get(s"$dir/events.parquet"))
+    Files.copy(Paths.get(s"$sf/events.parquet"),
+      Paths.get(s"$dir/events.parquet/base.parquet"))
+    dir
+  }
+
+  private def timestampAt(us: Long): java.sql.Timestamp =
+    org.apache.spark.sql.catalyst.util.DateTimeUtils.toJavaTimestamp(us)
+
+  /** (log end µs, max event_id) of `dir`'s changelog. */
+  private def logEndOf(dir: String): (Long, Long) = {
+    val r = Tables.events(spark, dir).agg(max(unix_micros(col("ts"))),
+      max(col("event_id"))).collect()(0)
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** `rows` of (event_id, µs, user_id, event_type, nullable value) as a
+    * frame in the physical layout of `dir`'s changelog.
+    */
+  private def rawEvents(dir: String, rows: Seq[Row]): DataFrame = {
+    val tsType = Tables.schemaOf(spark, s"$dir/events.parquet")("ts").dataType
+    val schema = new StructType().add("event_id", LongType).add("us", LongType)
+      .add("user_id", LongType).add("event_type", StringType)
+      .add("value", DoubleType)
+    val ts = tsType match {
+      case LongType => col("us") * 1000L // legacy INT64 nanos changelog
+      case t => timestamp_micros(col("us")).cast(t)
     }
-    keys.foreach { k =>
-      val (_, jobs) = JobCounter.during(spark.sparkContext)(api.fetchCas("click", k))
-      assert(jobs <= 2, s"fetchCas($k) launched $jobs jobs")
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .select(col("event_id"), ts.as("ts"), col("user_id"), col("event_type"),
+        col("value"), lit(null).cast(StringType).as("props"))
+  }
+
+  test("coordination reads launch no job when warm and at most one after an append") {
+    val dir = writableChangelog("graft_jobs")
+    val wapi = new CoordinationApi(spark, dir)
+    val (end, _) = logEndOf(dir)
+    val k = Tables.events(spark, dir).filter(col("event_type") === "click")
+      .select(col("user_id")).head().getLong(0)
+    val reads: Seq[(String, () => Any)] = Seq(
+      "fetch" -> (() => wapi.fetch("click", k)),
+      "firstWrite" -> (() => wapi.firstWrite("click", k)),
+      "fetchCas" -> (() => wapi.fetchCas("click", k)),
+      "isMember" -> (() => wapi.isMember("click", k)),
+      "getLeader" -> (() => wapi.getLeader("click")),
+      "membershipList" -> (() => wapi.membershipList("click").collect().toSeq))
+    reads.head._2() // the build
+    def jobs(read: () => Any) = JobCounter.during(spark.sparkContext)(read())._2
+    reads.zipWithIndex.foreach { case ((name, read), i) =>
+      assert(jobs(read) == 0, s"warm $name launched Spark jobs")
+      wapi.append("click", k, "put", (201 + 100 * i) / 100.0,
+        timestampAt(end + 1000000L * (i + 1)))
+      val first = jobs(read)
+      assert(first <= 1, s"$name after an append launched $first jobs")
+      assert(jobs(read) == 0, s"$name after the fold launched Spark jobs")
     }
+    assert(wapi.fetch("click", k).contains(7.01))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   /** The sequential reference for `fetchCas`: the key's events in
@@ -122,14 +164,155 @@ class CoordinationApiSpec extends AnyFunSuite {
     if (present) Some(value) else None
   }
 
+  /** Every read of `wapi` against the registered full-replay queries
+    * over `dir`, for every key of the log plus a never-written one, and
+    * `fetchCas` of the `touched` keys against [[foldCas]] too.
+    */
+  private def assertReadsReplay(wapi: CoordinationApi, dir: String,
+      touched: Seq[(String, Long)], step: String): Unit = {
+    import graft.queries.Coordination._
+    def opt(r: Row, f: String) =
+      Option(r.get(r.fieldIndex(f))).map(_.asInstanceOf[Double])
+    // NaN payloads compare by text: Some(NaN) != Some(NaN) in Scala
+    def show(v: Option[Double]) = v.map(_.toString)
+    def byKey(q: QueryDef, f: String) = q.fn(spark, dir).collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> show(opt(r, f))).toMap
+    val (latest, first, cas) = (byKey(kvSnapshot, "value"),
+      byKey(kvFirstWrite, "first_value"), byKey(kvStorageReplay, "value"))
+    val members = groupMembership.fn(spark, dir).collect().toSeq
+      .groupBy(_.getString(0)).map { case (g, rs) => g -> rs.map(r =>
+        (r.getLong(1), r.getTimestamp(2), show(opt(r, "sup_data")))).sortBy(_._1) }
+    val leaders = leaderElectionReplay.fn(spark, dir).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), show(opt(r, "sup_data")))).toMap
+    (latest.keySet + (("click", 880001L))).foreach { case k @ (ns, key) =>
+      assert(show(wapi.fetch(ns, key)) == latest.get(k).flatten, s"$step: fetch $k")
+      assert(show(wapi.firstWrite(ns, key)) == first.get(k).flatten,
+        s"$step: firstWrite $k")
+      assert(show(wapi.fetchCas(ns, key)) == cas.get(k).flatten, s"$step: fetchCas $k")
+      assert(wapi.isMember(ns, key) == members.getOrElse(ns, Nil).exists(_._1 == key),
+        s"$step: isMember $k")
+    }
+    latest.keySet.map(_._1).foreach { ns =>
+      assert(wapi.getLeader(ns).map { case (l, v) => (l, show(v)) } == leaders.get(ns),
+        s"$step: getLeader $ns")
+      val list = wapi.membershipList(ns)
+      assert(list.collect().toSeq.map(r => (r.getLong(0), r.getTimestamp(1),
+        show(opt(r, "sup_data")))) == members.getOrElse(ns, Nil),
+        s"$step: membershipList $ns")
+      assert(list.schema == groupMembership.fn(spark, dir)
+        .select("member", "last_heartbeat", "sup_data").schema)
+    }
+    touched.foreach { case (ns, key) =>
+      assert(wapi.fetchCas(ns, key) == foldCas(dir, ns, key), s"$step: foldCas ($ns, $key)")
+    }
+  }
+
+  /** Seeded random changelog histories, one table row per seed: API
+    * writes of every kind (late ones included), part files added outside
+    * `append` with NaN, ±Inf and null payloads at in-order and late
+    * times, part files removed, and part files rewritten in place. After
+    * every step each of the six reads must equal the full replay.
+    */
+  Seq(1L, 2L, 3L).foreach { seed =>
+    test(s"compacted API state equals the full replay after every step (seed $seed)") {
+      import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+      import scala.jdk.CollectionConverters._
+      val dir = writableChangelog("graft_state")
+      val log = Paths.get(s"$dir/events.parquet")
+      val wapi = new CoordinationApi(spark, dir)
+      val rng = new scala.util.Random(seed)
+      val (startUs, endUs) = {
+        val r = Tables.events(spark, dir).agg(min(unix_micros(col("ts"))),
+          max(unix_micros(col("ts")))).collect()(0)
+        (r.getLong(0), r.getLong(1))
+      }
+      val baseKeys = Tables.events(spark, dir).select(col("user_id")).distinct()
+        .collect().map(_.getLong(0)).sorted.toSeq
+      val keys = baseKeys.take(3) ++ Seq(990001L, 990002L)
+      val namespaces = Seq("click", "signup", "view")
+      def pick[A](xs: Seq[A]): A = xs(rng.nextInt(xs.size))
+      var clock = endUs
+      def inOrder(): Long = { clock += 1000000L * (1 + rng.nextInt(7200)); clock }
+      // before every base key's last event
+      def late(): Long = startUs + rng.nextInt(1000)
+      def when(): Long = if (rng.nextInt(4) == 0) late() else inOrder()
+      def payload(): java.lang.Double = rng.nextInt(8) match {
+        case 0 => null
+        case 1 => Double.NaN
+        case 2 => Double.PositiveInfinity
+        case 3 => Double.NegativeInfinity
+        case _ => rng.nextInt(50000) / 100.0 // every op digit
+      }
+      var rawId = 10000000L
+      def rawRow(): Row = {
+        rawId += 1
+        Row(rawId, when(), pick(keys), pick(namespaces), payload())
+      }
+      // the files this spec wrote beside `append`, with their rows
+      val raw = scala.collection.mutable.LinkedHashMap.empty[Path, Seq[Row]]
+      def writeRaw(path: Path, rows: Seq[Row]): Unit = {
+        val tmp = Files.createTempDirectory("graft_raw")
+        rawEvents(dir, rows).coalesce(1).write.parquet(s"$tmp/out")
+        val part = Files.list(Paths.get(s"$tmp/out")).iterator().asScala
+          .find(_.getFileName.toString.matches("part-.*\\.parquet")).get
+        Files.move(part, path, StandardCopyOption.REPLACE_EXISTING)
+        org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
+        raw(path) = rows
+      }
+      def addFile(): Seq[(String, Long)] = {
+        val rows = Seq.fill(1 + rng.nextInt(3))(rawRow())
+        writeRaw(log.resolve(s"raw-$rawId.parquet"), rows)
+        rows.map(r => (r.getString(3), r.getLong(2)))
+      }
+      def apiWrite(kind: String, us: Long): Seq[(String, Long)] = {
+        val (ns, key, ts) = (pick(namespaces), pick(keys), timestampAt(us))
+        val v = rng.nextInt(50000) / 100.0
+        kind match {
+          case "joinGroup" => wapi.joinGroup(ns, key, v, ts)
+          case "leaveGroup" => wapi.leaveGroup(ns, key, ts)
+          case op => wapi.append(ns, key, op, v, ts)
+        }
+        Seq(ns -> key)
+      }
+      def run(kind: String): Seq[(String, Long)] = kind match {
+        case "add" => addFile()
+        case "late" => apiWrite(pick(Seq("put", "update", "delete")), late())
+        case "remove" =>
+          val added = Files.list(log).iterator().asScala.toSeq
+            .filter(p => p.getFileName.toString.matches("(part|raw)-.*\\.parquet"))
+          if (added.isEmpty) addFile()
+          else {
+            val p = pick(added.sortBy(_.toString))
+            Files.delete(p)
+            Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+            raw.remove(p)
+            Nil
+          }
+        case "rewrite" =>
+          val fresh = if (raw.isEmpty) addFile() else Nil
+          val (p, rows) = pick(raw.toSeq)
+          val mtime = Files.getLastModifiedTime(p).toMillis
+          val i = rng.nextInt(rows.size)
+          writeRaw(p, rows.updated(i, Row.fromSeq(rows(i).toSeq.updated(4, payload()))))
+          Files.setLastModifiedTime(p,
+            java.nio.file.attribute.FileTime.fromMillis(mtime + 5000))
+          fresh ++ rows.map(r => (r.getString(3), r.getLong(2)))
+        case op => apiWrite(op, when())
+      }
+      val kinds = Seq("put", "update", "delete", "joinGroup", "leaveGroup", "late",
+        "add", "remove", "rewrite")
+      val plan = "add" +: (rng.shuffle(kinds) ++ Seq.fill(3)(pick(kinds)))
+      assertReadsReplay(wapi, dir, Nil, "base log")
+      plan.zipWithIndex.foreach { case (kind, i) =>
+        val touched = run(kind)
+        assertReadsReplay(wapi, dir, touched, s"seed $seed step $i ($kind)")
+      }
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
+
   test("fetchCas equals the sequential fold on edge-case histories") {
-    import java.nio.file.{Files, Paths}
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft_cas").toString
-    Files.createDirectory(Paths.get(s"$dir/events.parquet"))
-    Files.copy(Paths.get(s"$sf/events.parquet"),
-      Paths.get(s"$dir/events.parquet/base.parquet"))
+    val dir = writableChangelog("graft_cas")
     val ns = "click"
     val nan = Double.NaN
     val (inf, ninf) = (Double.PositiveInfinity, Double.NegativeInfinity)
@@ -155,27 +338,16 @@ class CoordinationApiSpec extends AnyFunSuite {
       "delete then update" -> Seq(Some(1.01), Some(0.0), Some(2.04)),
       "put after delete" -> Seq(Some(1.01), Some(0.0), Some(7.02), Some(7.05)))
     val base = 990100L
-    val tsType = Tables.schemaOf(spark, s"$dir/events.parquet")("ts").dataType
-    val logEnd = Tables.events(spark, dir).agg(max(unix_micros(col("ts"))),
-      max(col("event_id"))).collect()(0)
+    val (endUs, endId) = logEndOf(dir)
     val rows = histories.zipWithIndex.flatMap { case ((_, vs), i) =>
       vs.zipWithIndex.map { case (v, j) =>
         // two events of a key share a timestamp: event_id breaks the tie
-        val us = logEnd.getLong(0) + 1000000L * (j / 2 + 1)
-        Row(logEnd.getLong(1) + 100 * i + j + 1, us, base + i, ns, v.orNull)
+        val us = endUs + 1000000L * (j / 2 + 1)
+        Row(endId + 100 * i + j + 1, us, base + i, ns, v.orNull)
       }
     }
-    val schema = new StructType().add("event_id", LongType).add("us", LongType)
-      .add("user_id", LongType).add("event_type", StringType)
-      .add("value", DoubleType)
-    val ts = tsType match {
-      case LongType => col("us") * 1000L // legacy INT64 nanos changelog
-      case t => timestamp_micros(col("us")).cast(t)
-    }
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-      .select(col("event_id"), ts.as("ts"), col("user_id"), col("event_type"),
-        col("value"), lit(null).cast(StringType).as("props"))
-      .coalesce(1).write.mode("append").parquet(s"$dir/events.parquet")
+    rawEvents(dir, rows).coalesce(1).write.mode("append")
+      .parquet(s"$dir/events.parquet")
     val wapi = new CoordinationApi(spark, dir)
     val keys = histories.indices.map(i => histories(i)._1 -> (base + i)) :+
       ("never written" -> (base + histories.size))
@@ -433,13 +605,8 @@ class CoordinationApiSpec extends AnyFunSuite {
   }
 
   test("append write path: mutations round-trip through the replay queries") {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     // stage a writable deployment: changelog as a parquet DIRECTORY
-    val dir = Files.createTempDirectory("graft_append").toString
-    Files.createDirectory(Paths.get(s"$dir/events.parquet"))
-    Files.copy(Paths.get(s"$sf/events.parquet"),
-      Paths.get(s"$dir/events.parquet/base.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
+    val dir = writableChangelog("graft_append")
     val wapi = new CoordinationApi(spark, dir)
     val logEnd = Tables.events(spark, dir)
       .agg(max(col("ts"))).collect()(0).getTimestamp(0)

@@ -72,11 +72,29 @@ class StreamingSpec extends AnyFunSuite {
       reference: Option[() => org.apache.spark.sql.DataFrame] = None,
       check: Seq[org.apache.spark.sql.Row] => Unit = _ => ())
 
+  /** sf0.001's changelog as a parquet directory with one more part file:
+    * null-payload copies of three events, each 1 s after its original
+    * under a fresh event_id, so a null lands inside a key's history and
+    * its TTL session. The batch replays accept such a row.
+    */
+  private lazy val nullPayloadDir: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_null_payload").toString
+    val events = Tables.events(spark, sf)
+    events.write.parquet(s"$dir/events.parquet")
+    events.filter(col("event_id").isin(200L, 500L, 800L))
+      .withColumn("event_id", col("event_id") + 1000000L)
+      .withColumn("ts", col("ts") + expr("INTERVAL 1 SECOND"))
+      .withColumn("value", lit(null).cast("double"))
+      .coalesce(1).write.mode("append").parquet(s"$dir/events.parquet")
+    dir
+  }
+
   private val splitRows: Seq[SplitRow] = {
     import graft.streaming.{AttribEvent, DwellEvent, IncArrival, KeyedEvent,
       Streaming => S}
     import spark.implicits._
     def keyed() = S.keyedEvents(Tables.events(spark, sf)).toDF()
+    def keyedWithNull() = S.keyedEvents(Tables.events(spark, nullPayloadDir)).toDF()
     def dwell() = Tables.events(spark, sf)
       .select(col("event_type"), col("user_id"), col("ts"), col("event_id"))
     def docs() = Tables.documents(spark, sf)
@@ -90,16 +108,16 @@ class StreamingSpec extends AnyFunSuite {
       // coarse values repeat, so an unchanged value across a trigger
       // boundary is suppressed only by the carried last value
       SplitRow("stream_change_feed", "carries last-value state",
-        () => keyed().withColumn("value", round(col("value") / 100)), byTime,
+        () => keyedWithNull().withColumn("value", round(col("value") / 100)), byTime,
         src => S.runChangeFeed(spark, src.as[KeyedEvent])),
-      SplitRow("stream_scd2", "closes intervals", keyed, byTime,
+      SplitRow("stream_scd2", "closes intervals", keyedWithNull, byTime,
         src => S.runScd2Feed(spark, src.as[KeyedEvent]),
-        Some(() => SparkEntry.queries("kv_scd2")(spark, sf)
+        Some(() => SparkEntry.queries("kv_scd2")(spark, nullPayloadDir)
           .filter(col("valid_to").isNotNull))),
       SplitRow("stream_dwell", "carries last-seen state", dwell, byTime,
         src => S.runDwellFeed(spark, src.as[DwellEvent])),
       SplitRow("stream_leader_election", "carries the incumbent's lease",
-        keyed, byTime, src => S.runLeaderElection(spark, src.as[KeyedEvent])),
+        keyedWithNull, byTime, src => S.runLeaderElection(spark, src.as[KeyedEvent])),
       SplitRow("stream_funnel", "carries stage state into the counts", keyed,
         byTime, src => S.runFunnel(spark, src.as[KeyedEvent])),
       SplitRow("stream_storage_feed", "carries presence state", keyed, byTime,
@@ -126,7 +144,7 @@ class StreamingSpec extends AnyFunSuite {
         () => twice(S.incrementalArrivals(spark, sf, docs()).toDF()), byDoc,
         src => S.runIncrementalDedup(spark, src.as[IncArrival])),
       // not a keyed fold (its TTL timeout emits expiries), same contract
-      SplitRow("stream_group_change_feed", "carries membership state", keyed,
+      SplitRow("stream_group_change_feed", "carries membership state", keyedWithNull,
         byTime, src => S.runGroupFeed(spark, src.as[KeyedEvent])))
   }
 
@@ -151,6 +169,23 @@ class StreamingSpec extends AnyFunSuite {
       assert(canon(got) == canon(want),
         s"${row.name}: the 4-trigger drain differs from the reference")
       row.check(got)
+    }
+  }
+
+  test("keyed stream twins answer null-payload events as their batch twins do") {
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    Seq(
+      ("stream_change_feed", "value_change_feed", lit(true)),
+      ("stream_scd2", "kv_scd2", col("valid_to").isNotNull),
+      ("stream_leader_election", "leader_change_feed", lit(true)),
+      ("stream_group_change_feed", "group_change_feed", lit(true))
+    ).foreach { case (stream, batch, closed) =>
+      val got = SparkEntry.queries(stream)(spark, nullPayloadDir)
+      val want = canon(SparkEntry.queries(batch)(spark, nullPayloadDir)
+        .filter(closed).select(got.columns.map(col).toSeq: _*))
+      assert(want.nonEmpty && canon(got) == want,
+        s"$stream differs from $batch over a null-payload changelog")
     }
   }
 

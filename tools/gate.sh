@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
 # CI-shaped gate: the four checks a change must pass.
-#   1. sbt test                 (ScalaTest suite green, and no
+#   1. sbt test                 (ScalaTest suite green, no fewer passed
+#                                tests than tools/test_floor, and no
 #                                HintErrorLogger or trivially-true join
 #                                predicate warning in its log)
 #   2. Verify + DuckDB compare  (every query runs; every oracle-backed one
@@ -20,6 +21,14 @@ if ! sbt -batch test > /tmp/gate_test.log 2>&1; then
   echo "GATE FAIL: sbt test"; fail=1
 fi
 tail -4 /tmp/gate_test.log
+# the suite must not shrink silently: a change that removes tests on
+# purpose lowers the committed floor in the same change
+floor=$(cat tools/test_floor)
+passed=$(grep -oE 'Tests: succeeded [0-9]+' /tmp/gate_test.log | tail -1 | grep -oE '[0-9]+$')
+if [ "${passed:-0}" -lt "$floor" ]; then
+  echo "GATE FAIL: ${passed:-0} tests passed, below the floor of $floor (tools/test_floor)"
+  fail=1
+fi
 # a join hint on a frame that is not a join side does nothing, and a
 # join key comparing a frame's column with itself holds only through
 # Dataset.join's self-join rewrite; Spark only logs either: the suite
