@@ -105,7 +105,7 @@ class CoordinationApiSpec extends AnyFunSuite {
         col("value"), lit(null).cast(StringType).as("props"))
   }
 
-  test("coordination reads launch no job when warm and at most one after an append") {
+  test("coordination reads launch no job warm and at most one after an append") {
     val dir = writableChangelog("graft_jobs")
     val wapi = new CoordinationApi(spark, dir)
     val (end, _) = logEndOf(dir)
