@@ -19,25 +19,27 @@ import org.apache.spark.sql.functions._
   */
 object Bucketing {
 
-  /** Register bucketed copies of lineitem and orders (bucketBy the
-    * join key `orderkey`, sorted within buckets) under the session's
-    * catalog, writing data under `warehouseDir`. Idempotent per
-    * session; table names are suffixed so multiple sf dirs coexist.
+  /** Collision-resistant, identifier-safe tag for a staged dir's
+    * CURRENT content: hex prefix of the MD5 of the path and its
+    * [[FrameCache.corpusFingerprint]], so a table rewritten in place is
+    * staged afresh instead of serving the old bucketed copy (a 32-bit
+    * hashCode tag could alias two dirs under the tableExists guard).
     */
-  /** Collision-resistant, identifier-safe tag for a staged dir: hex
-    * prefix of the path's MD5. (`math.abs(hashCode)` was wrong twice
-    * over: abs(Int.MinValue) < 0 breaks the table name, and 32-bit
-    * collisions silently alias two dirs under the tableExists guard.)
-    */
-  private[graft] def dirTag(d: String): String = {
+  private[graft] def dirTag(s: SparkSession, d: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8"))
+      .digest(s"$d@${FrameCache.corpusFingerprint(s, d)}".getBytes("UTF-8"))
     md.take(8).map(b => f"${b & 0xff}%02x").mkString
   }
 
+  /** Register bucketed copies of lineitem and orders (bucketBy the
+    * join key `orderkey`, sorted within buckets) under the session's
+    * catalog, writing data under `warehouseDir`. Idempotent per
+    * session and corpus version; table names are suffixed so multiple
+    * sf dirs coexist.
+    */
   def ensureBucketed(s: SparkSession, d: String, warehouseDir: String,
       buckets: Int = 8): (String, String) = {
-    val tag = dirTag(d)
+    val tag = dirTag(s, d)
     val li = s"graft_li_b$tag"
     val ord = s"graft_ord_b$tag"
     if (!s.catalog.tableExists(li)) {
@@ -67,7 +69,7 @@ object Bucketing {
     */
   def ensureEventsBucketed(s: SparkSession, d: String, warehouseDir: String,
       buckets: Int = 8): String = {
-    val tbl = s"graft_ev_b${dirTag(d)}"
+    val tbl = s"graft_ev_b${dirTag(s, d)}"
     if (!s.catalog.tableExists(tbl)) {
       Tables.events(s, d).write
         .bucketBy(buckets, "user_id").sortBy("user_id")

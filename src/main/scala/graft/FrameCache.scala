@@ -4,45 +4,56 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Session-scoped persisted-frame cache: the staging-table role a
-  * warehouse plays for shared intermediates (shingle sets, capped
-  * inverted indexes) — one persisted copy per (session, key), reused
-  * by every consumer, LRU-evictable (MEMORY_AND_DISK). With
-  * `spark.graft.index.dir` set, additionally a PERSISTENT artifact
-  * store: each key is materialized to parquet once and loaded —
-  * never rebuilt — by later sessions (see the index-artifact section
-  * below).
+/** The one in-process memo of corpus-derived values: staged frames
+  * (shingle sets, capped inverted indexes — the staging-table role a
+  * warehouse plays for shared intermediates, persisted MEMORY_AND_DISK)
+  * and driver-side values (trained codebooks, probed-list unions).
+  * With `spark.graft.index.dir` set, staged frames are additionally a
+  * PERSISTENT artifact store: each key is materialized to parquet once
+  * and loaded — never rebuilt — by later sessions (see the
+  * index-artifact section below).
   *
-  * Entries are unpersisted and dropped when the owning CONTEXT ends
-  * (SparkListener on application end) or when a caller evicts a
-  * session explicitly. Sessions sharing one SparkContext via
-  * newSession() are NOT individually collected — Spark has no
-  * session-end event, and a DataFrame value pins its session anyway —
-  * so per-job-session deployments call evict(session) when the job
-  * retires; the listener remains the backstop that clears everything
-  * at context stop.
+  * The memo contract:
+  *  - an entry is keyed by (session, key); a key names the corpus dirs
+  *    its value derives from as ':'-separated segments
+  *    (`family:dir[:param…]`);
+  *  - every lookup recomputes the key's [[corpusFingerprint]] (the
+  *    [[Tables.fileStatuses]] stat walk of each dir the key names) and
+  *    compares it with the fingerprint the entry was built under;
+  *  - on a mismatch — a corpus file added, removed or rewritten in
+  *    place — the stale entry is dropped (a frame is unpersisted) and
+  *    rebuilt.
+  * Exempt: [[Tables.schemaOf]]'s kept schemas and `CoordinationApi`'s
+  * state check their own file sets, and `Streaming`'s stream-source
+  * memo holds a symlink to a path, not content.
+  *
+  * Entries are dropped when the owning CONTEXT ends (SparkListener on
+  * application end) or when a caller evicts a session explicitly.
+  * Sessions sharing one SparkContext via newSession() are NOT
+  * individually collected — Spark has no session-end event, and a
+  * DataFrame value pins its session anyway — so per-job-session
+  * deployments call evict(session) when the job retires.
   */
 private[graft] object FrameCache {
 
+  /** A memo entry: its value and the corpus fingerprint it was built under. */
+  private final case class Entry(fingerprint: String, value: AnyRef)
+
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Entry]()
   private val hooked =
     new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkListener]()
 
   // ---- persistent index-artifact layer (round 13) -------------------------
-  // FrameCache alone is session-scoped: every new session (every bench
-  // run, every job) pays the full staged-artifact build — PQ codebooks,
-  // capped inverted indexes, cluster maps. Production builds an index
-  // ONCE and ships the artifact (the FAISS index-file model, already
-  // the §2 framing for E10/E11). Setting the session conf
-  // `spark.graft.index.dir` turns every getOrPersist key into a parquet
-  // artifact under that dir: first build writes it, later sessions (or
-  // JVMs) READ it instead of rebuilding — the loaded frame's plan scans
-  // the artifact, never the corpus. The _SUCCESS marker guards against
-  // consuming a torn write; concurrent writers publish via atomic
-  // rename (materialize). Keys embed the corpus dir AND the artifact
-  // path embeds a corpus-content fingerprint, so different SFs/corpora
-  // — and different VERSIONS of one regenerated corpus — never collide.
+  // Production builds an index ONCE and ships the artifact (the FAISS
+  // index-file model). With `spark.graft.index.dir` set, the first
+  // build of a getOrPersist key writes a parquet artifact there and
+  // later sessions (or JVMs) READ it — the loaded plan scans the
+  // artifact, never the corpus. The _SUCCESS marker guards against a
+  // torn write; concurrent writers publish via atomic rename
+  // (materialize). The artifact path embeds the key (with its corpus
+  // dir) and the corpus fingerprint, so neither two corpora nor two
+  // VERSIONS of one corpus collide.
   private[graft] val IndexDirConf = "spark.graft.index.dir"
 
   /** Store-directory trust gate, run once per (store path) per JVM
@@ -205,29 +216,29 @@ private[graft] object FrameCache {
     s"$dir/$tail-$h.parquet"
   }
 
-  /** Fingerprint of every filesystem path a key embeds (the ':'-
-    * separated segments starting with '/': the corpus dir, parameter
-    * dirs). Without it, regenerating a corpus IN PLACE would keep
-    * serving the OLD corpus's artifacts — "never rebuilt" turning into
-    * "silently wrong". Files contribute (name, length, mtime); table
-    * DIRECTORIES contribute their children one level down (a parquet
-    * table dir's part files; the walk is [[Tables.fileStatuses]], shared
-    * with table resolution). A changed corpus therefore changes the
-    * artifact path; superseded artifacts are orphaned, not overwritten
-    * (GC of the index dir is the deployment's retention job).
+  /** Fingerprint of every filesystem path a key embeds: each ':'-
+    * separated segment that is absolute or names an existing path
+    * (the corpus dir, parameter dirs; a relative dir resolves against
+    * the working directory and fingerprints as its absolute form
+    * does). Files contribute (name, length, mtime); table DIRECTORIES
+    * contribute their children one level down (a parquet table dir's
+    * part files; the walk is [[Tables.fileStatuses]], shared with table
+    * resolution). A corpus regenerated or rewritten in place therefore
+    * changes both the memo check and the artifact path; superseded
+    * artifacts are orphaned, not overwritten (GC of the index dir is
+    * the deployment's retention job).
     */
-  private def corpusFingerprint(s: SparkSession, key: String): String = {
+  private[graft] def corpusFingerprint(s: SparkSession, key: String): String = {
     val conf = s.sparkContext.hadoopConfiguration
-    val dirs = key.split(':').filter(_.startsWith("/")).sorted
-    if (dirs.isEmpty) return ""
-    val lines = dirs.toSeq.flatMap { d =>
-      Tables.fileStatuses(conf, d) match {
+    val lines = key.split(':').filter(_.nonEmpty).sorted.toSeq.flatMap { seg =>
+      Tables.fileStatuses(conf, seg) match {
         case Some(sts) => sts.map(st =>
           s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-        case None => Seq(s"$d:absent")
+        case None => if (seg.startsWith("/")) Seq(s"$seg:absent") else Nil
       }
     }
-    java.security.MessageDigest.getInstance("MD5")
+    if (lines.isEmpty) ""
+    else java.security.MessageDigest.getInstance("MD5")
       .digest(lines.mkString("\n").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(10)
   }
@@ -361,8 +372,8 @@ private[graft] object FrameCache {
     * separate final fs.create AFTER the rename completes, so a reader
     * can never observe the marker before every data file exists,
     * whatever the store's rename semantics.
-    */
-  /** Disk-layer materialization. Returns (frame, skipPersist):
+    *
+    * Returns (frame, skipPersist):
     * skipPersist is true for a partitioned on-disk artifact — the whole
     * point of the layout is the prunable parquet scan, which a
     * MEMORY_AND_DISK InMemoryRelation would hide from every consumer
@@ -869,6 +880,56 @@ private[graft] object FrameCache {
     }.sortBy(-_.genSeq)
   }
 
+  /** The memo: the value of `key` in session `s`, built by `build` on
+    * a miss or when the entry's corpus fingerprint is stale (see the
+    * contract above).
+    *
+    * A build closure may look up other keys (dedup.clusters builds on
+    * dedup.shingled), so `build` runs outside the map — never inside
+    * ConcurrentHashMap.computeIfAbsent, whose nested insert throws
+    * "Recursive update" when two keys share a bin. A miss builds under
+    * the (session, key)'s own monitor, so threads warming dependent
+    * keys concurrently build a shared dependency ONCE; distinct keys
+    * never share a monitor and the dependency graph is a DAG, so there
+    * is no deadlock.
+    */
+  private[graft] def memo[T <: AnyRef](s: SparkSession, key: String)(build: => T): T = {
+    hooked.computeIfAbsent(s, { _ =>
+      val l = new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+          evict(s)
+      }
+      s.sparkContext.addSparkListener(l)
+      l
+    })
+    val k = (s, key)
+    // stat before building: a file rewritten during the build leaves
+    // the entry an older fingerprint, which forces a rebuild, never a
+    // stale hit
+    val fp = corpusFingerprint(s, key)
+    def current(e: Entry) = e != null && e.fingerprint == fp
+    val hit = cache.get(k)
+    if (current(hit)) hit.value.asInstanceOf[T]
+    else memBuildLocks.computeIfAbsent(k, _ => new Object).synchronized {
+      val again = cache.get(k)
+      if (current(again)) again.value.asInstanceOf[T]
+      else {
+        if (again != null && cache.remove(k, again)) release(again.value)
+        val built = build
+        // a concurrent build (one racing an evict) loses its entry
+        Option(cache.put(k, Entry(fp, built))).foreach(e => release(e.value))
+        built
+      }
+    }
+  }
+
+  private def release(v: AnyRef): Unit = v match {
+    // the context may already be down mid-shutdown
+    case df: org.apache.spark.sql.Dataset[_] =>
+      try df.unpersist(blocking = false) catch { case _: Throwable => () }
+    case _ => ()
+  }
+
   def getOrPersist(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
     getOrPersistLayout(s, key, NoLayout)(build)
 
@@ -880,57 +941,14 @@ private[graft] object FrameCache {
     * as for any other key.
     */
   private[graft] def getOrPersistLayout(s: SparkSession, key: String,
-      layout: Layout)(build: => DataFrame): DataFrame = {
-    hooked.computeIfAbsent(s, { _ =>
-      val l = new SparkListener {
-        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
-          evict(s)
-      }
-      s.sparkContext.addSparkListener(l)
-      l
-    })
-    // REENTRANCY: a build closure may itself call getOrPersist for a
-    // different key (dedup.clusters builds on dedup.shingled). Running
-    // `build` inside ConcurrentHashMap.computeIfAbsent would then nest a
-    // map insert inside a map compute — CHM throws
-    // IllegalStateException("Recursive update") whenever the two keys
-    // hash to the same bin, an identity-hash-dependent crash. So: lockless
-    // get fast path, build+persist OUTSIDE the map, then putIfAbsent and
-    // unpersist the losing copy of a rare concurrent double-build.
-    val k = (s, key)
-    val hit = cache.get(k)
-    if (hit ne null) hit
-    else
-      // Per-key build lock (r18): the lockless fast path stays, but a
-      // MISS now builds under the key's own monitor so two threads
-      // warming dependent artifacts concurrently (the parallel _stage
-      // warm-up) build a shared dependency ONCE — the second thread
-      // blocks and reads the winner's entry instead of duplicating an
-      // index-sized build. Different keys never share a lock, and a
-      // build closure recursing into getOrPersist for its dependencies
-      // takes different keys' monitors — no self-deadlock, and no
-      // cycles (the dependency graph is a DAG).
-      memBuildLocks.computeIfAbsent(k, _ => new Object).synchronized {
-        val again = cache.get(k)
-        if (again ne null) again
-        else {
-          val (mat, skipPersist) = materialize(s, key, layout)(build)
-          val built =
-            if (skipPersist) mat else mat.persist(StorageLevel.MEMORY_AND_DISK)
-          val prev = cache.putIfAbsent(k, built)
-          if (prev eq null) built
-          else {
-            if (!skipPersist)
-              try built.unpersist(blocking = false) catch { case _: Throwable => () }
-            prev
-          }
-        }
-      }
-  }
+      layout: Layout)(build: => DataFrame): DataFrame =
+    memo(s, key) {
+      val (mat, skipPersist) = materialize(s, key, layout)(build)
+      if (skipPersist) mat else mat.persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
-  // in-memory twin of buildLocks, keyed like the cache by (session, key)
-  // (r19 advice: a key-only lock serialized independent sessions building
-  // the same key and never evicted) — entries are cleared in evict(s)
+  // one build monitor per (session, key), cleared in evict(s): a
+  // key-only lock would serialize sessions building the same key
   private val memBuildLocks =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Object]()
 
@@ -1004,18 +1022,12 @@ private[graft] object FrameCache {
   private val WarmAbortWaitS = 30L
 
   /** Drop (and unpersist) every entry owned by `s`, and detach its
-    * context listener (a later getOrPersist re-registers one — never
-    * two for the same live session).
+    * context listener (a later lookup re-registers one — never two for
+    * the same live session).
     */
   def evict(s: SparkSession): Unit = {
     import scala.jdk.CollectionConverters._
-    cache.keySet.asScala.filter(_._1 eq s).toList.foreach { k =>
-      Option(cache.remove(k)).foreach { df =>
-        // the context may already be down mid-shutdown — eviction must
-        // still clear the map entry
-        try df.unpersist(blocking = false) catch { case _: Throwable => () }
-      }
-    }
+    evictMatching(s, "")
     memBuildLocks.keySet.asScala.filter(_._1 eq s).toList
       .foreach(memBuildLocks.remove)
     Option(hooked.remove(s)).foreach { l =>
@@ -1033,11 +1045,7 @@ private[graft] object FrameCache {
     import scala.jdk.CollectionConverters._
     cache.keySet.asScala
       .filter(k => (k._1 eq s) && k._2.contains(keyPart)).toList
-      .foreach { k =>
-        Option(cache.remove(k)).foreach { df =>
-          try df.unpersist(blocking = false) catch { case _: Throwable => () }
-        }
-      }
+      .foreach(k => Option(cache.remove(k)).foreach(e => release(e.value)))
   }
 
   /** Number of live entries owned by `s` (spec observability). */

@@ -142,7 +142,8 @@ object Streaming {
   // The file stream source wants a directory; expose a single parquet
   // file through a symlinked temp dir (a production feed is a Kafka
   // topic or a landing directory anyway). Cached per source path so
-  // repeated bench/verify runs don't litter the temp filesystem.
+  // repeated bench/verify runs don't litter the temp filesystem. It
+  // holds a link to a path, not content, so it is no FrameCache memo.
   private val streamSrcCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
@@ -2737,7 +2738,7 @@ object Streaming {
       partCol = "list", publishTo, basePath)(published =>
       Sim.ivfPqProbeWith(Sim.queriesDf(s, d),
         book, published, Tables.embeddings(s, d), Sim.NProbe,
-        probedMemoKey = Some(s"ivfpq:$d:${Sim.NProbe}")))
+        probedMemoKey = Some(s"sim.ivfpq.probed:$d:${Sim.NProbe}")))
   }
 
   /** Shared A60/A61 maintenance drive: delta-only keyed MERGE of

@@ -9,6 +9,17 @@ object SparkTestSession {
   lazy val spark: SparkSession = GraftSession.get("4")
   val sf: String = "/root/testdata/sf0.001"
 
+  /** The rows of the parquet file `src` that `keep` admits, as the bytes
+    * of one parquet file written to the `scratch` dir: what an in-place
+    * rewrite writes over a copy of `src`.
+    */
+  def filteredParquet(src: String, keep: Column, scratch: String): Array[Byte] = {
+    spark.read.parquet(src).filter(keep).coalesce(1).write.parquet(scratch)
+    val part = new java.io.File(scratch).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.readAllBytes(part.toPath)
+  }
+
   /** `df` split into `n` consecutive chunks of its `order`, with the
     * membership `ntile(n).over(Window.orderBy(order))` gives — the
     * first N mod n chunks hold one extra row — but numbered by a

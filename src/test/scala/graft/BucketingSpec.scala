@@ -105,4 +105,38 @@ class BucketingSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh))
     }
   }
+
+  test("a lineitem, orders or events file rewritten in place is bucketed afresh") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bucketed_rw")
+    val corpus = java.nio.file.Files.createDirectories(dir.resolve("corpus"))
+    val (d, wh) = (corpus.toString, dir.resolve("wh").toString)
+    val keys = Seq("lineitem" -> "l_orderkey", "orders" -> "o_orderkey",
+      "events" -> "user_id")
+    keys.foreach { case (t, _) => java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$sf/$t.parquet"), corpus.resolve(s"$t.parquet")) }
+    val staged = scala.collection.mutable.Set.empty[String]
+    def bucketed() = {
+      val (li, ord) = Bucketing.ensureBucketed(spark, d, wh)
+      val tbls = Seq(li, ord, Bucketing.ensureEventsBucketed(spark, d, wh))
+      staged ++= tbls
+      tbls
+    }
+    def sourceCounts() = keys.map { case (t, _) => Tables.loaders(t)(spark, d).count() }
+    try {
+      val before = bucketed()
+      assert(before.map(spark.table(_).count()) == sourceCounts())
+      assert(bucketed() == before, "an unchanged corpus was bucketed again")
+      // overwrite each file in place with its even-key half
+      keys.foreach { case (t, k) =>
+        java.nio.file.Files.write(corpus.resolve(s"$t.parquet"), filteredParquet(
+          s"$sf/$t.parquet", col(k) % 2 === 0, dir.resolve(t).toString))
+      }
+      val want = sourceCounts()
+      assert(bucketed().map(spark.table(_).count()) == want,
+        "a bucketed copy of the old file was served after the rewrite")
+    } finally {
+      staged.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+    }
+  }
 }

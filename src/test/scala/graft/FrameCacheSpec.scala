@@ -135,6 +135,31 @@ class FrameCacheSpec extends AnyFunSuite {
     assert(p != FrameCache.artifactPathFor(spark, dir, s"spec.version2:$sf"))
   }
 
+  test("a relative corpus dir is fingerprinted: a rewrite re-keys and rebuilds") {
+    val rel = java.nio.file.Paths.get("target",
+      s"graft_rel_${java.util.UUID.randomUUID().toString.take(8)}")
+    val f = java.nio.file.Files.createDirectories(rel).resolve("t.parquet")
+    java.nio.file.Files.write(f, Array[Byte](1, 2, 3))
+    val key = s"spec.relative:$rel"
+    try {
+      var builds = 0
+      def lookup() = FrameCache.getOrPersist(spark, key) {
+        builds += 1; spark.range(1).toDF("id")
+      }
+      val path = FrameCache.artifactPathFor(spark, "/idx", key)
+      lookup(); lookup()
+      assert(builds === 1)
+      java.nio.file.Files.write(f, Array[Byte](1, 2, 3, 4))
+      assert(FrameCache.artifactPathFor(spark, "/idx", key) != path,
+        s"artifact path $path did not change with the rewritten file")
+      lookup()
+      assert(builds === 2, "memo entry survived the rewrite")
+    } finally {
+      FrameCache.evictMatching(spark, key)
+      org.apache.commons.io.FileUtils.deleteQuietly(rel.toFile)
+    }
+  }
+
   test("index dir: an UNMARKED destination (writer died between rename " +
       "and _SUCCESS) is treated as abandoned — deleted and rebuilt clean") {
     import org.apache.spark.sql.functions._
